@@ -93,21 +93,29 @@ object Bench {
       finally { graft.core.Caches.releaseAll(); spark.catalog.clearCache() }
     }
 
-    val results = selected.map { case (name, fn) =>
-      val dt = (1 to iters).map { _ =>
+    // A query that throws is FAILED: it is listed in `failed`, gets no
+    // timing (a crash must never read as a speedup) and skips its
+    // remaining iterations.
+    val runs = selected.map { case (name, fn) =>
+      val dts = Iterator.fill(iters) {
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
+        val ok =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch {
+            case e: InterruptedException => Thread.currentThread().interrupt(); throw e
+            case e: Throwable =>
+              System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+          }
         // per-query caches don't leak across queries (clearCache drops
         // the storage; releaseAll drains the operator-cache registry)
         graft.core.Caches.releaseAll()
         spark.catalog.clearCache()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      name -> dt
+        if (ok) Some((System.nanoTime() - t0) / 1e9) else None
+      }.takeWhile(_.isDefined).flatten.toSeq
+      name -> Option.when(dts.size == iters)(dts.min)
     }
+    val results = runs.collect { case (name, Some(dt)) => name -> dt }
+    val failed = runs.collect { case (name, None) => name }
     // MERGE into the existing artifact instead of overwriting it: a
     // targeted recapture (SPARK_GRAFT_ONLY) must never delete
     // suite-wide evidence (r11's last three commits each replaced the
@@ -167,11 +175,12 @@ object Bench {
         .flatMap(m => """"([^"]+)"""".r.findAllMatchIn(m.group(1))
           .map(_.group(1))))
     val registered = SparkEntry.queries.keySet
-    val merged = (prior.view.filterKeys(registered).toMap ++ results.toMap)
+    // every query run this time replaces its prior entry, a failed one
+    // with nothing: an old timing must not stand in for a crash
+    val survivors = prior.keySet.intersect(registered).diff(runs.map(_._1).toSet)
+    val merged = (prior.view.filterKeys(survivors).toMap ++ results.toMap)
       .toSeq.sortBy(_._1)
     val mergedKeys = merged.map(_._1).toSet
-    val survivors = prior.keySet.intersect(registered)
-      .diff(results.map(_._1).toSet)
     val note = sys.env.get("SPARK_GRAFT_BENCH_NOTE").orElse(
       if (survivors.nonEmpty)
         priorNote.map(n =>
@@ -191,6 +200,7 @@ object Bench {
     // warm-up pass (since r10), so cross-round comparisons don't read
     // their timings raw against pre-warm-up rounds.
     val warmedJson = warmedOut.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // escape \ and " so a note containing either still yields a valid
     // JSON artifact (the next run's prior-parse would otherwise
     // silently discard the whole file)
@@ -201,7 +211,7 @@ object Bench {
     // so the evidence itself says it is steal-suspect (r14 verdict #10)
     val stealJson = if (entryLoad > 4.0) """"steal_suspect":true,""" else ""
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","load":$entryLoad%.2f,"captured":${results.size},$stealJson$noteJson"warmed":$warmedJson,"queries":$qs,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","load":$entryLoad%.2f,"captured":${results.size},"failed":$failedJson,$stealJson$noteJson"warmed":$warmedJson,"queries":$qs,"sf":"$sfDir"}"""
     println(json)
     // COMPACT final line for the driver's tail capture: every recorded
     // BENCH_r*.json keeps only the LAST ~2000 chars of stdout and every
@@ -218,7 +228,7 @@ object Bench {
     val slowest = merged.sortBy { case (k, v) => (-v, k) }
     val topEntries = new scala.collection.mutable.ArrayBuffer[String]()
     def compactLine(elided: Int): String =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","load":$entryLoad%.2f,"captured":${results.size},$stealJson"queries_elided":$elided,"queries":${topEntries.mkString("{", ",", "}")},"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","load":$entryLoad%.2f,"captured":${results.size},"failed":$failedJson,$stealJson"queries_elided":$elided,"queries":${topEntries.mkString("{", ",", "}")},"sf":"$sfDir"}"""
     var compactLen = compactLine(merged.size).length
     slowest.foreach { case (k, v) =>
       val e = "\"" + k + f"\":$v%.3f"

@@ -3,6 +3,8 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types._
 
+import scala.util.control.NonFatal
+
 /** Record IO for the engine: dual-format JSON readers with pinned
   * schemas, and parquet/JSON sinks.
   *
@@ -35,9 +37,9 @@ object JsonIO {
       StructField("assistant", StringType, nullable = true)))), nullable = true)))
 
   /** Dual-format reader mirroring the reference's sniff (`base.py:8–18`):
-    * try the whole-file JSON array parse; if it yields only corrupt
-    * records, fall back to line-delimited JSONL. A pinned schema keeps
-    * both paths single-pass.
+    * parse the file both as a whole-file JSON array and as line-delimited
+    * JSONL, and keep whichever yields more valid rows (ties → array). A
+    * pinned schema keeps both paths single-pass.
     */
   def readJsonAuto(spark: SparkSession, path: String,
                    schema: StructType = AlpacaSchema): DataFrame = {
@@ -46,30 +48,33 @@ object JsonIO {
     // multiLine parser accepts a JSONL file by silently reading ONLY
     // its first record — so "no corrupt rows" is not enough. Parse
     // both ways and keep whichever yields more valid rows (ties →
-    // array). Both caches are fine: the sniff path is for small
-    // reference-style files; production readers pin one format.
-    // (Raw-JSON frames can't be filtered on just the corrupt column —
-    // hence the caches.)
+    // array). Each parse is cached — raw-JSON frames can't be filtered
+    // on just the corrupt column — and the loser is released, so the
+    // input is parsed twice and held once.
     // allowNonNumericNumbers is pinned (not left to the default) —
     // the reference explicitly preserves NaN/±Infinity through
     // serialization (tensor2jsonl.py:11–12), and the sink writes them
     // as quoted "NaN"/"Infinity" tokens which this parser maps back
     // to the IEEE values (round-trip spec: JsonIOSpec).
+    // a parse that fails outright counts -1 valid rows; a fatal error
+    // or an interrupt is not a format verdict and propagates
+    def validOr(n: => Long): Long =
+      try n catch {
+        case e: InterruptedException => Thread.currentThread().interrupt(); throw e
+        case NonFatal(_) => -1L
+      }
     val asArray = graft.core.Caches.track(spark.read.schema(corrupt)
       .option("multiLine", "true").option("mode", "PERMISSIVE")
       .option("allowNonNumericNumbers", "true")
       .json(path))
-    val arrayValid =
-      try if (asArray.where(asArray("_corrupt_record").isNotNull).isEmpty)
-        asArray.count() else -1L
-      catch { case _: Throwable => -1L }
+    val arrayValid = validOr(
+      if (asArray.where(asArray("_corrupt_record").isNotNull).isEmpty)
+        asArray.count() else -1L)
     val jl = graft.core.Caches.track(spark.read.schema(corrupt)
       .option("mode", "PERMISSIVE")
       .option("allowNonNumericNumbers", "true")
       .json(path))
-    val jlValid =
-      try jl.where(jl("_corrupt_record").isNull).count()
-      catch { case _: Throwable => -1L }
+    val jlValid = validOr(jl.where(jl("_corrupt_record").isNull).count())
     if (arrayValid >= jlValid) { jl.unpersist(); asArray.drop("_corrupt_record") }
     else {
       asArray.unpersist()

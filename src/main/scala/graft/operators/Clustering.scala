@@ -4,6 +4,8 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.PCA
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 /** Clustering path (reference C1/C2): MLlib KMeans over the embedding
@@ -25,16 +27,42 @@ import org.apache.spark.sql.functions._
 object Clustering {
 
   /** Add a `cluster` label column via KMeans(k, seed) on `embCol`
-    * (array<float> → ml Vector under the hood). */
+    * (array<float> → ml Vector under the hood).
+    *
+    * A shuffle-free input is persisted once (tracked in
+    * [[graft.core.Caches]]): the passes KMeans `fit` makes over `df`
+    * itself (before its own vector cache takes over) and the
+    * `transform` then read one materialization of `df` instead of each
+    * re-running its upstream — for model-scored rows that upstream is
+    * the scorer itself. The cache sits on `df`, not on the `_features`
+    * projection, so MLlib still sees an uncached dataset and persists
+    * its own vector RDD for the Lloyd's iterations. Consumers of the
+    * labeled frame cache it themselves where they need to
+    * ([[Selection.percentileBand]] does), so under
+    * [[clusterAndSelect]] the scored rows are held twice, here and in
+    * the band's cache, besides MLlib's vectors.
+    *
+    * An input with an exchange is left uncached, because there the
+    * cache could change the labels: MLlib reads the frame pruned to
+    * `embCol`, and above an exchange that pruning can move rows between
+    * partitions (a round-robin repartition sorts whole rows before
+    * dealing them; adaptive execution sizes partitions and picks joins
+    * by bytes), which reseeds the k-means|| init. */
   def kmeansLabels(df: DataFrame, embCol: String, k: Int,
                    seed: Long = 0L): DataFrame = {
-    val withVec = df.withColumn("_features", array_to_vector(col(embCol)))
+    val rows = if (shuffleFree(df)) graft.core.Caches.track(df) else df
+    val withVec = rows.withColumn("_features", array_to_vector(col(embCol)))
     val model = new KMeans()
       .setK(k).setSeed(seed).setFeaturesCol("_features")
       .setPredictionCol("cluster")
       .fit(withVec)
     model.transform(withVec).drop("_features")
   }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
+  private def shuffleFree(df: DataFrame): Boolean =
+    PlanWalk.find(df.queryExecution.executedPlan)(_.isInstanceOf[Exchange]).isEmpty
 
   /** Oracle-EXACT KMeans: fixed-init Lloyd's iterations as relational
     * ops. Init centroids = the embeddings of ids `0 until k`; each

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Clustering
+import graft.operators.{Clustering, Scorers}
 
 class ClusteringSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -63,6 +63,47 @@ class ClusteringSpec extends AnyFunSuite {
       (i, Array((i % 4).toFloat * 5, (i % 4).toFloat * 5)))
       .toDF("vec_id", "embedding")
     val out = Clustering.kmeansLabels(pts, "embedding", k = 4, seed = 0L)
-    assert(out.select("cluster").distinct().count() == 4)
+    try assert(out.select("cluster").distinct().count() == 4)
+    finally graft.core.Caches.releaseAll()
+  }
+
+  test("clusterAndSelect scores each partition once, whatever its passes") {
+    // KMeans fit, transform, both sides of the band and the stride
+    // sample all read the model-scored rows; each must reuse one
+    // materialization instead of re-running the scorer
+    val inits = spark.sparkContext.longAccumulator("clustering.backend_inits")
+    val make: () => Scorers.ModelBackend =
+      () => { inits.add(1); new Scorers.ProxyBackend(42L) }
+    val docs = spark.range(0, 400, 1, 4).selectExpr("id", "concat('doc ', id) AS text")
+    val scored = Scorers.withModelScores(docs, "text", make)
+    try {
+      val picked = Clustering.clusterAndSelect(scored, "id", "emb_ins_alone",
+        "score_rw", k = 4, sampleNum = 10).collect()
+      assert(picked.nonEmpty)
+      assert(inits.sum == scored.rdd.getNumPartitions)
+    } finally graft.core.Caches.releaseAll()
+  }
+
+  test("kmeansLabels over a repartitioned input labels exactly as plain MLlib") {
+    // a round-robin repartition sorts whole rows before dealing them, so
+    // MLlib's fit (which reads the frame pruned to the embedding) sees
+    // other partitions than a cache of the full rows would hold
+    import org.apache.spark.ml.clustering.KMeans
+    import org.apache.spark.ml.functions.array_to_vector
+    val pts = (0L until 300L).map(i =>
+      (i, s"payload-${(i * 7919) % 300}",
+        Array(((i * 37) % 101).toFloat, ((i * 53) % 97).toFloat)))
+      .toDF("vec_id", "payload", "embedding").repartition(3)
+    val withVec = pts.withColumn("_features", array_to_vector($"embedding"))
+    val plain = new KMeans().setK(5).setSeed(0L).setFeaturesCol("_features")
+      .setPredictionCol("cluster").fit(withVec).transform(withVec)
+      .select("vec_id", "cluster").as[(Long, Int)].collect().toMap
+    val out =
+      try Clustering.kmeansLabels(pts, "embedding", k = 5, seed = 0L)
+        .select("vec_id", "cluster").as[(Long, Int)].collect().toMap
+      finally graft.core.Caches.releaseAll()
+    val relabeled = plain.count { case (id, c) => !out.get(id).contains(c) }
+    assert(out.size == plain.size && relabeled == 0,
+      s"$relabeled of ${plain.size} rows relabeled")
   }
 }

@@ -21,10 +21,12 @@ class EntrySpec extends AnyFunSuite {
 
   test("kmeansLabels yields k clusters, deterministic under seed") {
     val embs = graft.core.Tables.embeddings(spark, TestSpark.SfDir)
-    val l1 = Clustering.kmeansLabels(embs, "embedding", 5, 0L)
-      .select("vec_id", "cluster").as[(Long, Int)].collect().toMap
-    val l2 = Clustering.kmeansLabels(embs, "embedding", 5, 0L)
-      .select("vec_id", "cluster").as[(Long, Int)].collect().toMap
+    def labels() =
+      try Clustering.kmeansLabels(embs, "embedding", 5, 0L)
+        .select("vec_id", "cluster").as[(Long, Int)].collect().toMap
+      finally graft.core.Caches.releaseAll()
+    val l1 = labels()
+    val l2 = labels()
     assert(l1.values.toSet.size == 5)
     assert(l1 == l2)
   }

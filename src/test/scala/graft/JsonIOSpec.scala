@@ -23,15 +23,39 @@ class JsonIOSpec extends AnyFunSuite {
     p.toString
   }
 
+  private val bothRows = Seq(("i1", "", "o1"), ("i2", "ctx", "o2"))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, String, String)] =
+    df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq.sorted
+
   test("readJsonAuto handles whole-file JSON arrays") {
     val df = JsonIO.readAlpaca(spark, write("a.json", arrayJson))
     assert(df.count() == 2)
     assert(df.columns.toSeq == Seq("instruction", "input", "output"))
+    // one element per line: the lines also parse as JSONL records, but
+    // it still reads as one array
+    val perLine = "[\n" + jsonl.replace("\n", ",\n") + "\n]\n"
+    assert(rows(JsonIO.readAlpaca(spark, write("lines.json", perLine))) == bothRows)
   }
 
   test("readJsonAuto falls back to JSONL") {
     val df = JsonIO.readAlpaca(spark, write("a.jsonl", jsonl))
     assert(df.count() == 2)
+    assert(rows(df) == bothRows)
+    // one record: both parses find one row, and the tie reads it as an array
+    val one = jsonl.linesIterator.next()
+    assert(rows(JsonIO.readAlpaca(spark, write("one.jsonl", one))) == bothRows.take(1))
+    // a multi-part sink directory: every part is JSONL
+    import spark.implicits._
+    val many = (1 to 9).map(i => (s"i$i", if (i % 2 == 0) "ctx" else "", s"o$i"))
+    val dir = Files.createTempDirectory("graft_parts").resolve("alpaca").toString
+    JsonIO.writeJson(many.toDF("instruction", "input", "output").repartition(3), dir)
+    assert(Files.list(Paths.get(dir)).toArray.count(_.toString.endsWith(".json")) == 3)
+    assert(rows(JsonIO.readAlpaca(spark, dir)) == many.sorted)
+    // a path with a space and a `%` reads like any other
+    val odd = Files.createTempDirectory("graft io %20").resolve("my set.jsonl")
+    Files.writeString(odd, jsonl)
+    assert(rows(JsonIO.readAlpaca(spark, odd.toString)) == bothRows)
   }
 
   test("sharegpt schema reads nested conversations") {
