@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query and
@@ -26,14 +25,7 @@ object Bench {
     if (entryLoad > 4.0)
       System.err.println(f"[bench] WARNING: host 1-min load $entryLoad%.2f > 4 " +
         "at entry — numbers below are likely steal-inflated; re-run idle")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    (graft.core.Tables.SessionConfigs ++ graft.core.Tables.HarnessConfigs)
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.localSession(cpus.toInt)
 
     // warmup: exercise scan/shuffle/agg/join codegen paths once
     try {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,14 +18,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(20)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    (graft.core.Tables.SessionConfigs ++ graft.core.Tables.HarnessConfigs)
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.localSession(32)
 
     def docsX(n: Int) = {
       val base = graft.core.Tables.documents(spark, sfDir)
@@ -317,9 +309,11 @@ object ScaleSmoke {
       // corpus grows; the recompute path pays the corpus every day.
       locally {
         val tag = s"smoke_$n"
-        graft.operators.Dedup.SignatureStore.writeOnce(
-          spark, docs.select(col("doc_id"), col("text")),
-          "doc_id", "text", tag, buckets = 32) // outside the timer: persisted by a previous run
+        graft.operators.Dedup.SignatureStore.once(tag) { // outside the timer
+          graft.operators.Dedup.SignatureStore.write(
+            spark, docs.select(col("doc_id"), col("text")),
+            "doc_id", "text", tag, buckets = 32)
+        }
         val delta = docs.select(col("doc_id"), col("text"))
           .where(col("doc_id") % 37 === 3).limit(250)
           .withColumn("doc_id", col("doc_id") + 900000000L)

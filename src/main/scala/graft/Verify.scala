@@ -20,6 +20,9 @@ object Verify {
       // without a done), and the per-query seconds map the ladder cost
       System.err.println(s"[verify] start $name")
       val t0 = System.nanoTime()
+      // an earlier dump's result must not survive a failed run: the
+      // checker would judge it as this run's output
+      graft.core.Scratch.deleteTree(Paths.get(outDir, name))
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -52,14 +55,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    (graft.core.Tables.SessionConfigs ++ graft.core.Tables.HarnessConfigs)
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.localSession(cpus.toInt)
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the dump (local iteration);
     // the driver sets nothing and gets the full suite
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

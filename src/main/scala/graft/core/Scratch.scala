@@ -30,43 +30,62 @@ object Scratch {
       "graft_scratch_" + sys.props.getOrElse("user.name", "anon") +
         "_" + ProcessHandle.current().pid())
     java.nio.file.Files.createDirectories(p)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(p.toFile)))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(p)))
     p
   }
 
-  private val written =
+  private val done =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val guards =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Return the scratch path for artifact `kind` derived from fixture
-    * `dir`, running `build(path)` the first time this JVM asks for it.
-    * Per-key locking: two queries building DIFFERENT artifacts don't
-    * serialize on each other's Spark jobs. */
+  private def guard(key: String): Object =
+    guards.computeIfAbsent(key, _ => new Object)
+
+  /** Run `body` the first time this JVM asks for `key`, and never again
+    * until [[forget]]. Per-key locking: bodies for DIFFERENT keys don't
+    * serialize on each other's Spark jobs, and a second caller of the
+    * SAME key waits for the first, then skips. A body that throws
+    * leaves `key` unset, so the next caller runs it again. */
+  def once(key: String)(body: => Unit): Unit =
+    if (!done.contains(key)) guard(key).synchronized {
+      if (!done.contains(key)) {
+        body
+        done.add(key)
+      }
+    }
+
+  /** Run `undo` under `key`'s lock (never concurrently with a [[once]]
+    * body for `key`), then forget that `key` ran: the next [[once]]
+    * runs its body again. */
+  def forget(key: String)(undo: => Unit): Unit = guard(key).synchronized {
+    undo
+    done.remove(key)
+  }
+
   /** The path [[buildOnce]] would use — for specs that inspect the
     * artifact's on-disk layout after the query built it. */
   def pathFor(kind: String, dir: String): String =
     root.resolve(kind + "__" + sanitize(dir)).toString
 
+  /** Return the scratch path for artifact `kind` derived from fixture
+    * `dir`, running `build(path)` the first time this JVM asks for it
+    * (per-key [[once]]). */
   def buildOnce(kind: String, dir: String)(build: String => Unit): String = {
     val out = pathFor(kind, dir)
-    if (!written.contains(out)) {
-      guards.computeIfAbsent(out, _ => new Object).synchronized {
-        if (!written.contains(out)) {
-          build(out)
-          written.add(out)
-        }
-      }
-    }
+    once(out)(build(out))
     out
   }
 
+  /** Delete `p` and everything under it; a missing path is a no-op. */
+  def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      val walk = java.nio.file.Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => java.nio.file.Files.deleteIfExists(f))
+      finally walk.close()
+    }
+
   private def sanitize(s: String): String =
     s.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  private def deleteRec(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRec)
-    f.delete(): Unit
-  }
 }

@@ -66,6 +66,21 @@ object Tables {
   val HarnessConfigs: Map[String, String] = Map(
     "spark.driver.maxResultSize" -> "8g")
 
+  /** The local session the harness entry points (Verify, Bench,
+    * ScaleSmoke, the tools, the tests) run on: `local[cpus]` with as
+    * many shuffle partitions, no UI, [[SessionConfigs]] and
+    * [[HarnessConfigs]], then `extra`; WARN logging. */
+  def localSession(cpus: Int, extra: (String, String)*): SparkSession = {
+    val b = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+    (SessionConfigs ++ HarnessConfigs ++ extra)
+      .foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   val All: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")

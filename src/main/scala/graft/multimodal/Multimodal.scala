@@ -1147,12 +1147,7 @@ object Multimodal {
     * each store frame; absorb adds the one re-bucketing write). At
     * 100 TB the decoded 8-byte hashes, not image blobs, are all that
     * ever reaches a shuffle. */
-  object ImageHashStore {
-    def root: String = graft.operators.Dedup.SignatureStore.root
-    def famsTable(tag: String): String  = s"graft_img_fams_$tag"
-    def segsTable(tag: String): String  = s"graft_img_segs_$tag"
-    def pairsTable(tag: String): String = s"graft_img_pairs_$tag"
-
+  object ImageHashStore extends graft.core.Store("img", "fams", "segs", "pairs") {
     val Bits = 64
     val Segments = 4
     private val SegWidth = Bits / Segments
@@ -1177,22 +1172,9 @@ object Multimodal {
     private def persist(spark: org.apache.spark.sql.SparkSession,
                         fams: DataFrame, segs: DataFrame, pairs: DataFrame,
                         tag: String, buckets: Int): Unit = {
-      val base = java.nio.file.Paths.get(root, s"img_store_$tag")
-      java.nio.file.Files.createDirectories(base)
-      Seq(famsTable(tag), segsTable(tag), pairsTable(tag))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      fams.write.mode("overwrite")
-        .option("path", base.resolve("fams").toString)
-        .bucketBy(buckets, "ahash").sortBy("ahash")
-        .saveAsTable(famsTable(tag))
-      segs.write.mode("overwrite")
-        .option("path", base.resolve("segs").toString)
-        .bucketBy(buckets, "seg", "segval").sortBy("seg", "segval")
-        .saveAsTable(segsTable(tag))
-      pairs.write.mode("overwrite")
-        .option("path", base.resolve("pairs").toString)
-        .bucketBy(buckets, "ahash_a").sortBy("ahash_a")
-        .saveAsTable(pairsTable(tag))
+      writeBucketed(spark, fams, tag, "fams", buckets, "ahash")
+      writeBucketed(spark, segs, tag, "segs", buckets, "seg", "segval")
+      writeBucketed(spark, pairs, tag, "pairs", buckets, "ahash_a")
     }
 
     /** Day-1 persist from decoded (media_id, ahash) rows. Hash-level
@@ -1210,16 +1192,6 @@ object Multimodal {
         tag, buckets)
     }
 
-    private val written = scala.collection.mutable.Set[String]()
-    def writeOnce(spark: org.apache.spark.sql.SparkSession, hashes: DataFrame,
-                  tag: String, maxHamming: Int,
-                  buckets: Int = 8): Unit = synchronized {
-      if (!written.contains(tag)) {
-        write(spark, hashes, tag, maxHamming, buckets)
-        written += tag
-      }
-    }
-
     /** Shared delta-merge: merged families, merged segments, merged
       * hash-level pairs given a delta's decoded hashes against
       * generation `tag`. */
@@ -1227,9 +1199,9 @@ object Multimodal {
                            deltaHashes: DataFrame, tag: String,
                            maxHamming: Int)
         : (DataFrame, DataFrame, DataFrame) = {
-      val storeFams = spark.table(famsTable(tag))
-      val storeSegs = spark.table(segsTable(tag))
-      val storePairs = spark.table(pairsTable(tag))
+      val storeFams = spark.table(table(tag, "fams"))
+      val storeSegs = spark.table(table(tag, "segs"))
+      val storePairs = spark.table(table(tag, "pairs"))
       val dFams = graft.core.Caches.track(famsOf(deltaHashes))
       // merged family state: rep = min across generations (least
       // skips nulls), sz adds
@@ -1291,42 +1263,17 @@ object Multimodal {
       * answer after an absorb. */
     def pairsFromStore(spark: org.apache.spark.sql.SparkSession,
                        tag: String): DataFrame =
-      renderPairs(spark.table(famsTable(tag)), spark.table(pairsTable(tag)))
+      renderPairs(spark.table(table(tag, "fams")), spark.table(table(tag, "pairs")))
 
     /** Re-persist generation N+1 from the delta merge (new tag — the
       * old generation stays readable until the rewrite commits). */
     def absorb(spark: org.apache.spark.sql.SparkSession, fromTag: String,
                toTag: String, deltaHashes: DataFrame, maxHamming: Int,
                buckets: Int = 8): Unit = {
-      require(fromTag != toTag,
-        "absorb writes a NEW tag; in-place overwrite would read and clobber the same files")
+      requireNewTag(fromTag, toTag)
       val (fams, segs, pairs) =
         deltaMerge(spark, deltaHashes, fromTag, maxHamming)
       persist(spark, fams, segs, pairs, toTag, buckets)
     }
-
-    def absorbOnce(spark: org.apache.spark.sql.SparkSession, fromTag: String,
-                   toTag: String, deltaHashes: DataFrame, maxHamming: Int,
-                   buckets: Int = 8): Unit = synchronized {
-      if (!written.contains(toTag)) {
-        absorb(spark, fromTag, toTag, deltaHashes, maxHamming, buckets)
-        written += toTag
-      }
-    }
-
-    /** RETENTION — drop generation `tag` (tables + files); idempotent. */
-    def vacuum(spark: org.apache.spark.sql.SparkSession, tag: String): Unit =
-      synchronized {
-        Seq(famsTable(tag), segsTable(tag), pairsTable(tag))
-          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-        val base = java.nio.file.Paths.get(root, s"img_store_$tag")
-        if (java.nio.file.Files.exists(base)) {
-          val walk = java.nio.file.Files.walk(base)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
-        }
-        written -= tag
-      }
   }
 }

@@ -523,11 +523,6 @@ object Dedup {
     * this path is for deltas too big to broadcast — both leave the
     * store unshuffled.
     *
-    * Catalog notes: tables are EXTERNAL (explicit `path`) under a
-    * per-user scratch dir, so the data survives JVMs while the
-    * in-memory catalog entry is re-registered per session; re-writes
-    * use overwrite.
-    *
     * On the `sets` table's id-bucketing: the daily VERIFY join does
     * NOT exploit it — candidate pairs are tiny relative to the corpus
     * (bands only collide near-dups), so the two verification joins
@@ -540,17 +535,7 @@ object Dedup {
     * where the verify joins degrade to SMJ — then the bucketed scan
     * satisfies the join partitioning exchange-free, exactly like the
     * banded table does for the probe today. */
-  object SignatureStore {
-    /** Per-user scratch root (not a fixed world-writable path);
-      * override with GRAFT_FIXTURE_DIR. */
-    def root: String = sys.env.getOrElse("GRAFT_FIXTURE_DIR",
-      java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        "graft_fixtures_" + sys.props.getOrElse("user.name", "anon")).toString)
-
-    def bandedTable(tag: String): String = s"graft_sig_banded_$tag"
-    def setsTable(tag: String): String   = s"graft_sig_sets_$tag"
-
+  object SignatureStore extends graft.core.Store("sig", "banded", "sets") {
     /** Write the corpus's two store frames as bucketed external
       * tables. One pass over the corpus; the banded frame is sorted
       * within buckets by the join key so the probe's store side needs
@@ -559,40 +544,16 @@ object Dedup {
               idCol: String, textCol: String, tag: String,
               n: Int = 3, k: Int = 12, bands: Int = 4,
               buckets: Int = 8): Unit = {
-      val base = java.nio.file.Paths.get(root, s"sig_store_$tag")
-      java.nio.file.Files.createDirectories(base)
-      spark.sql(s"DROP TABLE IF EXISTS ${bandedTable(tag)}")
-      spark.sql(s"DROP TABLE IF EXISTS ${setsTable(tag)}")
-      bandedSignatures(corpus, idCol, textCol, n, k, bands)
-        .write.mode("overwrite")
-        .option("path", base.resolve("banded").toString)
-        .bucketBy(buckets, "band", "bsig").sortBy("band", "bsig")
-        .saveAsTable(bandedTable(tag))
-      shingleSets(corpus, idCol, textCol, n)
-        .write.mode("overwrite")
-        .option("path", base.resolve("sets").toString)
-        .bucketBy(buckets, idCol).sortBy(idCol)
-        .saveAsTable(setsTable(tag))
-    }
-
-    // tags already persisted by THIS JVM — lets a bench iterate on the
-    // probe without paying the corpus write each call (the lifecycle's
-    // point: persist once, probe daily)
-    private val written = scala.collection.mutable.Set[String]()
-    def writeOnce(spark: org.apache.spark.sql.SparkSession, corpus: DataFrame,
-                  idCol: String, textCol: String, tag: String,
-                  n: Int = 3, k: Int = 12, bands: Int = 4,
-                  buckets: Int = 8): Unit = synchronized {
-      if (!written.contains(tag)) {
-        write(spark, corpus, idCol, textCol, tag, n, k, bands, buckets)
-        written += tag
-      }
+      writeBucketed(spark, bandedSignatures(corpus, idCol, textCol, n, k, bands),
+        tag, "banded", buckets, "band", "bsig")
+      writeBucketed(spark, shingleSets(corpus, idCol, textCol, n),
+        tag, "sets", buckets, idCol)
     }
 
     def banded(spark: org.apache.spark.sql.SparkSession, tag: String): DataFrame =
-      spark.table(bandedTable(tag))
+      spark.table(table(tag, "banded"))
     def sets(spark: org.apache.spark.sql.SparkSession, tag: String): DataFrame =
-      spark.table(setsTable(tag))
+      spark.table(table(tag, "sets"))
 
     /** The RE-PERSIST step that closes the daily-cron loop: read the
       * persisted store under `fromTag`, absorb a processed delta via
@@ -607,32 +568,18 @@ object Dedup {
       * broadcast ids, so the store is read ONCE (no shuffle of it by
       * the merge itself); the bucketed rewrite repartitions on the
       * bucket keys — the one unavoidable full-store shuffle of the
-      * day, amortized against every probe that follows. Writing to a
-      * NEW tag (path) instead of overwriting in place keeps the old
-      * store readable until the rewrite commits — the poor man's
-      * atomic swap a table format would give for free. */
+      * day, amortized against every probe that follows. */
     def absorb(spark: org.apache.spark.sql.SparkSession, fromTag: String,
                toTag: String, delta: DataFrame, idCol: String,
                textCol: String, n: Int = 3, k: Int = 12, bands: Int = 4,
                buckets: Int = 8): Unit = {
-      require(fromTag != toTag,
-        "absorb writes a NEW tag; in-place overwrite would read and clobber the same files")
-      val base = java.nio.file.Paths.get(root, s"sig_store_$toTag")
-      java.nio.file.Files.createDirectories(base)
-      spark.sql(s"DROP TABLE IF EXISTS ${bandedTable(toTag)}")
-      spark.sql(s"DROP TABLE IF EXISTS ${setsTable(toTag)}")
-      mergeSignatureStore(banded(spark, fromTag),
-          bandedSignatures(delta, idCol, textCol, n, k, bands), idCol)
-        .write.mode("overwrite")
-        .option("path", base.resolve("banded").toString)
-        .bucketBy(buckets, "band", "bsig").sortBy("band", "bsig")
-        .saveAsTable(bandedTable(toTag))
-      mergeSignatureStore(sets(spark, fromTag),
-          shingleSets(delta, idCol, textCol, n), idCol)
-        .write.mode("overwrite")
-        .option("path", base.resolve("sets").toString)
-        .bucketBy(buckets, idCol).sortBy(idCol)
-        .saveAsTable(setsTable(toTag))
+      requireNewTag(fromTag, toTag)
+      writeBucketed(spark, mergeSignatureStore(banded(spark, fromTag),
+          bandedSignatures(delta, idCol, textCol, n, k, bands), idCol),
+        toTag, "banded", buckets, "band", "bsig")
+      writeBucketed(spark, mergeSignatureStore(sets(spark, fromTag),
+          shingleSets(delta, idCol, textCol, n), idCol),
+        toTag, "sets", buckets, idCol)
     }
 
     /** Per-bucket member counts of the persisted banded store — the
@@ -692,41 +639,6 @@ object Dedup {
       require(memberRows.length <= maxGroup,
         s"group exceeds $maxGroup members — split the bucket, don't resolve it")
       resolveGroup(spark, tag, idCol, memberRows.map(_.getAs[Long](idCol)).toSeq)
-    }
-
-    /** RETENTION — the last step of the daily-cron loop: drop
-      * generation `tag` (catalog entries AND on-disk data) once a
-      * newer generation has been absorbed and its probe verified.
-      * The counterpart of [[absorb]] writing to a NEW path: day N
-      * stays readable until day N+1 commits, then this reclaims the
-      * space. Safe by construction — [[absorb]] materializes real
-      * files under the new tag's own path, so no later generation
-      * references the vacuumed one. Idempotent: missing tables or
-      * directories are not an error. */
-    def vacuum(spark: org.apache.spark.sql.SparkSession, tag: String): Unit =
-      synchronized {
-        spark.sql(s"DROP TABLE IF EXISTS ${bandedTable(tag)}")
-        spark.sql(s"DROP TABLE IF EXISTS ${setsTable(tag)}")
-        val base = java.nio.file.Paths.get(root, s"sig_store_$tag")
-        if (java.nio.file.Files.exists(base)) {
-          val walk = java.nio.file.Files.walk(base)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
-        }
-        written -= tag
-      }
-
-    /** [[absorb]] memoized per JVM per `toTag` (same contract as
-      * [[writeOnce]]: persist once, probe repeatedly). */
-    def absorbOnce(spark: org.apache.spark.sql.SparkSession, fromTag: String,
-                   toTag: String, delta: DataFrame, idCol: String,
-                   textCol: String, n: Int = 3, k: Int = 12, bands: Int = 4,
-                   buckets: Int = 8): Unit = synchronized {
-      if (!written.contains(toTag)) {
-        absorb(spark, fromTag, toTag, delta, idCol, textCol, n, k, bands, buckets)
-        written += toTag
-      }
     }
   }
 
@@ -958,11 +870,7 @@ object Dedup {
     * to members through the md5-digest join. Gated EQUAL to the
     * from-scratch census over v0 ∪ delta (`q_dup_span_day2` runs the
     * IDENTICAL oracle as `q_dup_span_scalable`). */
-  object SpanStore {
-    def root: String = SignatureStore.root
-    def famsTable(tag: String): String   = s"graft_span_fams_$tag"
-    def winsTable(tag: String): String   = s"graft_span_wins_$tag"
-    def censusTable(tag: String): String = s"graft_span_census_$tag"
+  object SpanStore extends graft.core.Store("span", "fams", "wins", "census") {
 
     private def famFrames(df: DataFrame, idCol: String, textCol: String,
                           win: Int, seed: Long): (DataFrame, DataFrame) = {
@@ -1011,39 +919,22 @@ object Dedup {
     def write(spark: org.apache.spark.sql.SparkSession, corpus: DataFrame,
               idCol: String, textCol: String, win: Int, seed: Long,
               tag: String, buckets: Int = 8): Unit = {
-      val base = java.nio.file.Paths.get(root, s"span_store_$tag")
-      java.nio.file.Files.createDirectories(base)
-      Seq(famsTable(tag), winsTable(tag), censusTable(tag))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       val (fams, wins) = famFrames(corpus, idCol, textCol, win, seed)
       val winsT = graft.core.Caches.track(wins)
       val census = winsT.join(fams.select(col("dg"), col("sz")), Seq("dg"))
         .groupBy(col("wid")).agg(sum(col("sz")).as("occ"))
       val stats = coverage(fams, winsT,
         census.where(col("occ") > 1L).select(col("wid")), win)
-      fams.join(stats.select(col("dg"), col("dup_tokens")), Seq("dg"))
-        .write.mode("overwrite")
-        .option("path", base.resolve("fams").toString)
-        .bucketBy(buckets, "dg").sortBy("dg")
-        .saveAsTable(famsTable(tag))
-      winsT.write.mode("overwrite")
-        .option("path", base.resolve("wins").toString)
-        .bucketBy(buckets, "dg").sortBy("dg")
-        .saveAsTable(winsTable(tag))
-      census.write.mode("overwrite")
-        .option("path", base.resolve("census").toString)
-        .bucketBy(buckets, "wid").sortBy("wid")
-        .saveAsTable(censusTable(tag))
+      persist(spark, fams.join(stats.select(col("dg"), col("dup_tokens")), Seq("dg")),
+        winsT, census, tag, buckets)
     }
 
-    private val written = scala.collection.mutable.Set[String]()
-    def writeOnce(spark: org.apache.spark.sql.SparkSession, corpus: DataFrame,
-                  idCol: String, textCol: String, win: Int, seed: Long,
-                  tag: String): Unit = synchronized {
-      if (!written.contains(tag)) {
-        write(spark, corpus, idCol, textCol, win, seed, tag)
-        written += tag
-      }
+    private def persist(spark: org.apache.spark.sql.SparkSession,
+                        fams: DataFrame, wins: DataFrame, census: DataFrame,
+                        tag: String, buckets: Int): Unit = {
+      writeBucketed(spark, fams, tag, "fams", buckets, "dg")
+      writeBucketed(spark, wins, tag, "wins", buckets, "dg")
+      writeBucketed(spark, census, tag, "census", buckets, "wid")
     }
 
     /** The shared delta-merge analysis behind [[day2Stats]] (read-only
@@ -1057,9 +948,9 @@ object Dedup {
                            delta: DataFrame, idCol: String, textCol: String,
                            win: Int, seed: Long, tag: String)
         : (DataFrame, DataFrame, DataFrame) = {
-      val storeFams = spark.table(famsTable(tag))
-      val storeWins = spark.table(winsTable(tag))
-      val storeCensus = spark.table(censusTable(tag))
+      val storeFams = spark.table(table(tag, "fams"))
+      val storeWins = spark.table(table(tag, "wins"))
+      val storeCensus = spark.table(table(tag, "census"))
       // delta families: copy-count per digest; split new vs re-ingested
       val (dFams0, dWins0) = famFrames(delta, idCol, textCol, win, seed)
       val dFams = graft.core.Caches.track(dFams0
@@ -1167,56 +1058,11 @@ object Dedup {
                toTag: String, delta: DataFrame, idCol: String,
                textCol: String, win: Int, seed: Long,
                buckets: Int = 8): Unit = {
-      require(fromTag != toTag,
-        "absorb writes a NEW tag; in-place overwrite would read and clobber the same files")
-      val base = java.nio.file.Paths.get(root, s"span_store_$toTag")
-      java.nio.file.Files.createDirectories(base)
-      Seq(famsTable(toTag), winsTable(toTag), censusTable(toTag))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      requireNewTag(fromTag, toTag)
       val (famsMerged, winsMerged, censusMerged) =
         deltaMerge(spark, delta, idCol, textCol, win, seed, fromTag)
-      famsMerged.write.mode("overwrite")
-        .option("path", base.resolve("fams").toString)
-        .bucketBy(buckets, "dg").sortBy("dg")
-        .saveAsTable(famsTable(toTag))
-      winsMerged.write.mode("overwrite")
-        .option("path", base.resolve("wins").toString)
-        .bucketBy(buckets, "dg").sortBy("dg")
-        .saveAsTable(winsTable(toTag))
-      censusMerged.write.mode("overwrite")
-        .option("path", base.resolve("census").toString)
-        .bucketBy(buckets, "wid").sortBy("wid")
-        .saveAsTable(censusTable(toTag))
+      persist(spark, famsMerged, winsMerged, censusMerged, toTag, buckets)
     }
-
-    /** [[absorb]] memoized per JVM per `toTag` (same contract as
-      * [[writeOnce]]: persist once, probe repeatedly). */
-    def absorbOnce(spark: org.apache.spark.sql.SparkSession, fromTag: String,
-                   toTag: String, delta: DataFrame, idCol: String,
-                   textCol: String, win: Int, seed: Long,
-                   buckets: Int = 8): Unit = synchronized {
-      if (!written.contains(toTag)) {
-        absorb(spark, fromTag, toTag, delta, idCol, textCol, win, seed, buckets)
-        written += toTag
-      }
-    }
-
-    /** RETENTION — drop generation `tag` (catalog entries AND on-disk
-      * data) once a newer generation has been absorbed and verified.
-      * Idempotent; mirrors [[SignatureStore.vacuum]]. */
-    def vacuum(spark: org.apache.spark.sql.SparkSession, tag: String): Unit =
-      synchronized {
-        Seq(famsTable(tag), winsTable(tag), censusTable(tag))
-          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-        val base = java.nio.file.Paths.get(root, s"span_store_$tag")
-        if (java.nio.file.Files.exists(base)) {
-          val walk = java.nio.file.Files.walk(base)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
-        }
-        written -= tag
-      }
 
     /** Per-family span stats straight off a persisted generation —
       * the store IS the answer after an absorb (no delta work at
@@ -1225,7 +1071,7 @@ object Dedup {
                        members: DataFrame, idCol: String, textCol: String,
                        tag: String): DataFrame =
       members.select(col(idCol), md5(col(textCol).cast("binary")).as("dg"))
-        .join(spark.table(famsTable(tag))
+        .join(spark.table(table(tag, "fams"))
           .select(col("dg"), col("n_tokens"), col("dup_tokens")), Seq("dg"))
         .select(col(idCol), col("n_tokens"), col("dup_tokens"),
           round(col("dup_tokens").cast("double") / col("n_tokens"), 6)

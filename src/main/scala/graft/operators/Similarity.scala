@@ -167,15 +167,11 @@ object Similarity {
     * storing NUMERATORS rather than divided floats keeps the probe's
     * cell choice bit-identical to the from-scratch path and lets the
     * index absorb future cell-level merges without re-rounding. */
-  object IvfStore {
-    def path(tag: String): java.nio.file.Path = java.nio.file.Paths.get(
-      Dedup.SignatureStore.root, s"ivf_store_$tag")
-
+  object IvfStore extends graft.core.Store("ivf") {
     def write(spark: org.apache.spark.sql.SparkSession, corpus: DataFrame,
               cId: String, embCol: String, cellCol: String,
               tag: String): Unit = {
-      val base = path(tag)
-      java.nio.file.Files.createDirectories(base)
+      val base = dir(tag)
       // cluster by cell before the partitioned write (guide §6: writer
       // file sizing): without it every input partition emits a file
       // into every cell directory (splits × cells small files, which
@@ -190,20 +186,10 @@ object Similarity {
         .parquet(base.resolve("centroids").toString)
     }
 
-    private val written = scala.collection.mutable.Set[String]()
-    def writeOnce(spark: org.apache.spark.sql.SparkSession, corpus: DataFrame,
-                  cId: String, embCol: String, cellCol: String,
-                  tag: String): Unit = synchronized {
-      if (!written.contains(tag)) {
-        write(spark, corpus, cId, embCol, cellCol, tag)
-        written += tag
-      }
-    }
-
     def centroids(spark: org.apache.spark.sql.SparkSession, tag: String): DataFrame =
-      spark.read.parquet(path(tag).resolve("centroids").toString)
+      spark.read.parquet(dir(tag).resolve("centroids").toString)
     def vectors(spark: org.apache.spark.sql.SparkSession, tag: String): DataFrame =
-      spark.read.parquet(path(tag).resolve("vectors").toString)
+      spark.read.parquet(dir(tag).resolve("vectors").toString)
 
     /** Absorb a delta of new vectors into the persisted index WITHOUT
       * re-reading the old corpus vectors' embeddings for the centroid
@@ -222,10 +208,8 @@ object Similarity {
     def absorb(spark: org.apache.spark.sql.SparkSession, fromTag: String,
                toTag: String, delta: DataFrame, cId: String,
                embCol: String, cellCol: String): Unit = {
-      require(fromTag != toTag,
-        "absorb writes a NEW tag; in-place overwrite would read and clobber the same files")
-      val base = path(toTag)
-      java.nio.file.Files.createDirectories(base)
+      requireNewTag(fromTag, toTag)
+      val base = dir(toTag)
       val cellType = centroids(spark, fromTag).schema(cellCol).dataType
       vectors(spark, fromTag)
         .withColumn(cellCol, col(cellCol).cast(cellType))
@@ -242,35 +226,6 @@ object Similarity {
           sum(col("n")).as("n"))
         .write.mode("overwrite")
         .parquet(base.resolve("centroids").toString)
-    }
-
-    /** [[absorb]] memoized per JVM per `toTag`. */
-    def absorbOnce(spark: org.apache.spark.sql.SparkSession, fromTag: String,
-                   toTag: String, delta: DataFrame, cId: String,
-                   embCol: String, cellCol: String): Unit = synchronized {
-      if (!written.contains(toTag)) {
-        absorb(spark, fromTag, toTag, delta, cId, embCol, cellCol)
-        written += toTag
-      }
-    }
-
-    /** RETENTION — drop generation `tag`'s on-disk data once a newer
-      * generation has been absorbed and its probe verified; the
-      * counterpart of [[absorb]] writing to a NEW tag (day N stays
-      * readable until day N+1 commits, then this reclaims the space).
-      * Safe by construction: [[absorb]] materializes real files under
-      * the new tag's own path, so no later generation references the
-      * vacuumed one. Idempotent — a missing directory is not an
-      * error. Mirrors [[Dedup.SignatureStore.vacuum]]. */
-    def vacuum(tag: String): Unit = synchronized {
-      val base = path(tag)
-      if (java.nio.file.Files.exists(base)) {
-        val walk = java.nio.file.Files.walk(base)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      }
-      written -= tag
     }
   }
 
@@ -1157,15 +1112,11 @@ object Similarity {
     * of only the `cands` survivors for the exact re-rank. The raw
     * corpus is never touched. Output is bit-identical to
     * [[ivfPqTopK]] over the same corpus, so one oracle gates both. */
-  object IvfPqStore {
-    def path(tag: String): java.nio.file.Path = java.nio.file.Paths.get(
-      Dedup.SignatureStore.root, s"ivfpq_store_$tag")
-
+  object IvfPqStore extends graft.core.Store("ivfpq") {
     def write(spark: org.apache.spark.sql.SparkSession, corpus: DataFrame,
               cId: String, embCol: String, cellCol: String, blocks: Int,
               codes: Int, iters: Int, tag: String): Unit = {
-      val base = path(tag)
-      java.nio.file.Files.createDirectories(base)
+      val base = dir(tag)
       val len = pqBlockLen(corpus, embCol, blocks)
       val (coded, cents) = pqCodeCorpus(corpus, cId, embCol, blocks, codes,
         iters, len)
@@ -1191,21 +1142,11 @@ object Similarity {
         .parquet(base.resolve("codebooks").toString)
     }
 
-    private val written = scala.collection.mutable.Set[String]()
-    def writeOnce(spark: org.apache.spark.sql.SparkSession, corpus: DataFrame,
-                  cId: String, embCol: String, cellCol: String, blocks: Int,
-                  codes: Int, iters: Int, tag: String): Unit = synchronized {
-      if (!written.contains(tag)) {
-        write(spark, corpus, cId, embCol, cellCol, blocks, codes, iters, tag)
-        written += tag
-      }
-    }
-
     /** The persisted per-block codebooks, as [[pqCodeCorpus]] shapes
       * them — blocks×codes rows of bounded driver state. */
     def codebooks(spark: org.apache.spark.sql.SparkSession,
                   tag: String): IndexedSeq[Seq[(Int, Array[Double])]] =
-      spark.read.parquet(path(tag).resolve("codebooks").toString)
+      spark.read.parquet(dir(tag).resolve("codebooks").toString)
         .collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
         .groupBy(_._1).toIndexedSeq.sortBy(_._1)
@@ -1226,11 +1167,9 @@ object Similarity {
     def absorb(spark: org.apache.spark.sql.SparkSession, fromTag: String,
                toTag: String, delta: DataFrame, cId: String,
                embCol: String, cellCol: String): Unit = {
-      require(fromTag != toTag,
-        "absorb writes a NEW tag; in-place overwrite would read and clobber the same files")
-      val base = path(toTag)
-      java.nio.file.Files.createDirectories(base)
-      val from = path(fromTag)
+      requireNewTag(fromTag, toTag)
+      val base = dir(toTag)
+      val from = dir(fromTag)
       val cents = codebooks(spark, fromTag)
       val blocks = cents.size
       val len = cents.head.head._2.length
@@ -1276,37 +1215,12 @@ object Similarity {
         .parquet(base.resolve("codebooks").toString)
     }
 
-    /** [[absorb]] memoized per JVM per `toTag`. */
-    def absorbOnce(spark: org.apache.spark.sql.SparkSession, fromTag: String,
-                   toTag: String, delta: DataFrame, cId: String,
-                   embCol: String, cellCol: String): Unit = synchronized {
-      if (!written.contains(toTag)) {
-        absorb(spark, fromTag, toTag, delta, cId, embCol, cellCol)
-        written += toTag
-      }
-    }
-
-    /** RETENTION for the composite index — same contract as
-      * [[IvfStore.vacuum]]: reclaim generation `tag` (vectors, codes,
-      * centroids, codebooks) after its successor commits and its
-      * probe verifies. Idempotent. */
-    def vacuum(tag: String): Unit = synchronized {
-      val base = path(tag)
-      if (java.nio.file.Files.exists(base)) {
-        val walk = java.nio.file.Files.walk(base)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      }
-      written -= tag
-    }
-
     /** Serve top-k from the artifact: probe → cell-pruned ADC over
       * codes → exact re-rank reading only the survivors' vectors. */
     def topK(spark: org.apache.spark.sql.SparkSession, queries: DataFrame,
              tag: String, qId: String, cId: String, embCol: String,
              cellCol: String, probes: Int, cands: Int, k: Int): DataFrame = {
-      val base = path(tag)
+      val base = dir(tag)
       val centDim = spark.read.parquet(base.resolve("centroids").toString)
       val cellType = centDim.schema(cellCol).dataType
       val probed = graft.core.Caches.track(

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Store, Tables}
 import graft.multimodal.Multimodal
 import graft.operators.Clustering
 import graft.streaming.EventStreams
@@ -595,16 +595,20 @@ object MlQueries extends QueryModule {
       Multimodal.decodeAHash(Multimodal.imageMedia(d, "doc_id"), grid = 8)
         .where(col("ahash").isNotNull)
         .select(col("media_id"), col("ahash"))
-    val tagBase = "imgday2_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    ImageHashStore.writeOnce(s,
-      hashes(imgDocs.where(col("doc_id") % 7 =!= 0 && col("doc_id") % 7 =!= 3)),
-      s"${tagBase}_g1", maxHamming = AHashMaxHamming)
-    ImageHashStore.absorbOnce(s, s"${tagBase}_g1", s"${tagBase}_g2",
-      hashes(imgDocs.where(col("doc_id") % 7 === 3)),
-      maxHamming = AHashMaxHamming)
+    val (tag1, tag2) = (Store.tag("day2g1", dir), Store.tag("day2g2", dir))
+    ImageHashStore.once(tag1) {
+      ImageHashStore.write(s,
+        hashes(imgDocs.where(col("doc_id") % 7 =!= 0 && col("doc_id") % 7 =!= 3)),
+        tag1, maxHamming = AHashMaxHamming)
+    }
+    ImageHashStore.once(tag2) {
+      ImageHashStore.absorb(s, tag1, tag2,
+        hashes(imgDocs.where(col("doc_id") % 7 === 3)),
+        maxHamming = AHashMaxHamming)
+    }
     ImageHashStore.day2Pairs(s,
         hashes(imgDocs.where(col("doc_id") % 7 === 0)),
-        s"${tagBase}_g2", maxHamming = AHashMaxHamming)
+        tag2, maxHamming = AHashMaxHamming)
       .orderBy(col("id_a"), col("id_b"))
   }
 

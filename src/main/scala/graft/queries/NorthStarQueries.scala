@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Store, Tables}
 import graft.functions.TextFns
 import graft.operators.{Dedup, Selection, Similarity}
 
@@ -567,14 +567,16 @@ object NorthStarQueries extends QueryModule {
 
   /** [[qIvfTopK]] served from the PERSISTED index (the reference's
     * save-the-FAISS-index-to-disk lifecycle): build once via
-    * `IvfStore.writeOnce` — vectors partitioned by cell, centroids as
+    * `IvfStore.once` — vectors partitioned by cell, centroids as
     * exact numerators — then answer the query set from the artifact;
     * the probed cells' literal filter prunes whole cell directories
     * (PartitionFilters, spec-asserted) and the raw corpus is never
     * read. Same oracle as the from-scratch path: identical output. */
   private def qIvfStore(implicit s: SparkSession, dir: String): DataFrame = {
-    val tag = "ivf_" + java.lang.Integer.toHexString(dir.hashCode)
-    Similarity.IvfStore.writeOnce(s, embs, "vec_id", "embedding", "label", tag)
+    val tag = Store.tag("full", dir)
+    Similarity.IvfStore.once(tag) {
+      Similarity.IvfStore.write(s, embs, "vec_id", "embedding", "label", tag)
+    }
     Similarity.ivfTopKFromStore(s, queryVecs, tag, "vec_id", "vec_id",
         "embedding", "label", probes = 2, k = 10)
       .select(col("query_id"), col("rk"), col("vec_id"), col("sim"))
@@ -588,14 +590,16 @@ object NorthStarQueries extends QueryModule {
     * absorbed index is bit-identical to a from-scratch build over the
     * full corpus, so the SAME oracle as [[qIvfTopK]] gates it. */
   private def qIvfStoreDay2(implicit s: SparkSession, dir: String): DataFrame = {
-    val hex = java.lang.Integer.toHexString(dir.hashCode)
     val day0 = embs.where(col("vec_id") % 7 =!= 3)
     val delta = embs.where(col("vec_id") % 7 === 3)
-    Similarity.IvfStore.writeOnce(s, day0, "vec_id", "embedding", "label",
-      s"ivf_${hex}_d0")
-    Similarity.IvfStore.absorbOnce(s, s"ivf_${hex}_d0", s"ivf_${hex}_d1",
-      delta, "vec_id", "embedding", "label")
-    Similarity.ivfTopKFromStore(s, queryVecs, s"ivf_${hex}_d1",
+    val (tag0, tag1) = (Store.tag("day2g0", dir), Store.tag("day2g1", dir))
+    Similarity.IvfStore.once(tag0) {
+      Similarity.IvfStore.write(s, day0, "vec_id", "embedding", "label", tag0)
+    }
+    Similarity.IvfStore.once(tag1) {
+      Similarity.IvfStore.absorb(s, tag0, tag1, delta, "vec_id", "embedding", "label")
+    }
+    Similarity.ivfTopKFromStore(s, queryVecs, tag1,
         "vec_id", "vec_id", "embedding", "label", probes = 2, k = 10)
       .select(col("query_id"), col("rk"), col("vec_id"), col("sim"))
       .orderBy(col("query_id"), col("rk"))
@@ -694,9 +698,11 @@ object NorthStarQueries extends QueryModule {
     * Bit-identical to the from-scratch composite, so the same oracle
     * gates it. */
   private def qIvfPqStore(implicit s: SparkSession, dir: String): DataFrame = {
-    val tag = "ivfpq_" + java.lang.Integer.toHexString(dir.hashCode)
-    Similarity.IvfPqStore.writeOnce(s, embs, "vec_id", "embedding", "label",
-      blocks = PqBlocks, codes = PqCodes, iters = PqIters, tag = tag)
+    val tag = Store.tag("full", dir)
+    Similarity.IvfPqStore.once(tag) {
+      Similarity.IvfPqStore.write(s, embs, "vec_id", "embedding", "label",
+        blocks = PqBlocks, codes = PqCodes, iters = PqIters, tag = tag)
+    }
     Similarity.IvfPqStore.topK(s, queryVecs, tag, "vec_id", "vec_id",
         "embedding", "label", probes = 2, cands = PqCands, k = 10)
       .select(col("query_id"), col("rk"), col("vec_id"), col("sim"))
@@ -713,15 +719,17 @@ object NorthStarQueries extends QueryModule {
     * write-then-absorb (for day-0 members the frozen-codebook argmin
     * IS the training chain's own final assignment). */
   private def qIvfPqStoreDay2(implicit s: SparkSession, dir: String): DataFrame = {
-    val hex = java.lang.Integer.toHexString(dir.hashCode)
     val day0 = embs.where(col("vec_id") % 7 =!= 5)
     val delta = embs.where(col("vec_id") % 7 === 5)
-    Similarity.IvfPqStore.writeOnce(s, day0, "vec_id", "embedding", "label",
-      blocks = PqBlocks, codes = PqCodes, iters = PqIters,
-      tag = s"ivfpq_${hex}_d0")
-    Similarity.IvfPqStore.absorbOnce(s, s"ivfpq_${hex}_d0",
-      s"ivfpq_${hex}_d1", delta, "vec_id", "embedding", "label")
-    Similarity.IvfPqStore.topK(s, queryVecs, s"ivfpq_${hex}_d1", "vec_id",
+    val (tag0, tag1) = (Store.tag("day2g0", dir), Store.tag("day2g1", dir))
+    Similarity.IvfPqStore.once(tag0) {
+      Similarity.IvfPqStore.write(s, day0, "vec_id", "embedding", "label",
+        blocks = PqBlocks, codes = PqCodes, iters = PqIters, tag = tag0)
+    }
+    Similarity.IvfPqStore.once(tag1) {
+      Similarity.IvfPqStore.absorb(s, tag0, tag1, delta, "vec_id", "embedding", "label")
+    }
+    Similarity.IvfPqStore.topK(s, queryVecs, tag1, "vec_id",
         "vec_id", "embedding", "label", probes = 2, cands = PqCands, k = 10)
       .select(col("query_id"), col("rk"), col("vec_id"), col("sim"))
       .orderBy(col("query_id"), col("rk"))
@@ -1502,9 +1510,11 @@ object NorthStarQueries extends QueryModule {
     val all = docs.select(col("doc_id"), col("text"))
     val delta = all.where(col("doc_id") % 10 === 0)
     val corpus = all.where(col("doc_id") % 10 =!= 0)
-    val tag = java.lang.Integer.toHexString(dir.hashCode)
-    Dedup.SignatureStore.writeOnce(s, corpus, "doc_id", "text", tag,
-      n = 3, k = MhK, bands = MhBands)
+    val tag = Store.tag("inc", dir)
+    Dedup.SignatureStore.once(tag) {
+      Dedup.SignatureStore.write(s, corpus, "doc_id", "text", tag,
+        n = 3, k = MhK, bands = MhBands)
+    }
     val newBanded = Dedup.bandedSignatures(delta, "doc_id", "text",
       n = 3, k = MhK, bands = MhBands)
     val allSets = Dedup.SignatureStore.sets(s, tag)
@@ -1532,12 +1542,15 @@ object NorthStarQueries extends QueryModule {
     val day0 = all.where(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 5)
     val delta1 = all.where(col("doc_id") % 10 === 5)
     val delta2 = all.where(col("doc_id") % 10 === 0)
-    val hex = java.lang.Integer.toHexString(dir.hashCode)
-    val (tag0, tag1) = (s"${hex}_d0", s"${hex}_d1")
-    Dedup.SignatureStore.writeOnce(s, day0, "doc_id", "text", tag0,
-      n = 3, k = MhK, bands = MhBands)
-    Dedup.SignatureStore.absorbOnce(s, tag0, tag1, delta1, "doc_id", "text",
-      n = 3, k = MhK, bands = MhBands)
+    val (tag0, tag1) = (Store.tag("day2g0", dir), Store.tag("day2g1", dir))
+    Dedup.SignatureStore.once(tag0) {
+      Dedup.SignatureStore.write(s, day0, "doc_id", "text", tag0,
+        n = 3, k = MhK, bands = MhBands)
+    }
+    Dedup.SignatureStore.once(tag1) {
+      Dedup.SignatureStore.absorb(s, tag0, tag1, delta1, "doc_id", "text",
+        n = 3, k = MhK, bands = MhBands)
+    }
     val newBanded = Dedup.bandedSignatures(delta2, "doc_id", "text",
       n = 3, k = MhK, bands = MhBands)
     val allSets = Dedup.SignatureStore.sets(s, tag1)
@@ -1563,9 +1576,11 @@ object NorthStarQueries extends QueryModule {
     * measures from the shingle CTEs. */
   private def qDedupGroupResolve(implicit s: SparkSession, dir: String): DataFrame = {
     val all = docs.select(col("doc_id"), col("text"))
-    val tag = java.lang.Integer.toHexString(dir.hashCode) + "_gr"
-    Dedup.SignatureStore.writeOnce(s, all, "doc_id", "text", tag,
-      n = 3, k = MhK, bands = MhBands)
+    val tag = Store.tag("group", dir)
+    Dedup.SignatureStore.once(tag) {
+      Dedup.SignatureStore.write(s, all, "doc_id", "text", tag,
+        n = 3, k = MhK, bands = MhBands)
+    }
     Dedup.SignatureStore.resolveLargestGroup(s, tag, "doc_id")
   }
 
@@ -1586,7 +1601,7 @@ object NorthStarQueries extends QueryModule {
   /** The persisted store probed from a STREAM — ingestion-time dedup:
     * delta documents arrive as micro-batches and each batch is
     * LSH-probed against the same bucketed on-disk store
-    * [[qDedupIncrementalStore]] persists (shared tag — `writeOnce`
+    * [[qDedupIncrementalStore]] persists (shared tag — `once`
     * builds it exactly once per JVM). Emits STREAM×STORE pairs only,
     * so the result is batch-boundary-invariant and a batch SQL oracle
     * gates the streaming run exactly: the full run's pairs restricted
@@ -1595,9 +1610,11 @@ object NorthStarQueries extends QueryModule {
   private def qStreamDedupStore(implicit s: SparkSession, dir: String): DataFrame = {
     val all = docs.select(col("doc_id"), col("text"))
     val corpus = all.where(col("doc_id") % 10 =!= 0)
-    val tag = java.lang.Integer.toHexString(dir.hashCode)
-    Dedup.SignatureStore.writeOnce(s, corpus, "doc_id", "text", tag,
-      n = 3, k = MhK, bands = MhBands)
+    val tag = Store.tag("inc", dir)
+    Dedup.SignatureStore.once(tag) {
+      Dedup.SignatureStore.write(s, corpus, "doc_id", "text", tag,
+        n = 3, k = MhK, bands = MhBands)
+    }
     graft.streaming.EventStreams.streamingStoreProbe(s, dir, tag,
         n = 3, k = MhK, bands = MhBands)
       .orderBy(col("id_a"), col("id_b"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Store, Tables}
 import graft.functions.TextFns
 
 /** Round-3 training-data-pipeline operators (BASELINE.json north star,
@@ -1281,17 +1281,17 @@ object TrainDataQueries extends QueryModule {
     * only for families holding a 1→≥2 threshold-crossing wid (occ is
     * monotone in an append-only corpus, so nothing else can change).
     * Gated EQUAL to the from-scratch collapse-first census over
-    * v0 ∪ delta: the oracle IS `q_dup_span_scalable`'s SQL. The
-    * full-path-derived store tag avoids the 32-bit dir.hashCode
-    * collision class. */
+    * v0 ∪ delta: the oracle IS `q_dup_span_scalable`'s SQL. */
   private def qDupSpanDay2(implicit s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
     val all = docs.select(col("doc_id"), col("text"))
     val v0 = all.where(col("doc_id") % 10 =!= 0)
     val delta = all.where(col("doc_id") % 10 === 0)
-    val tag = "spanday2_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    Dedup.SpanStore.writeOnce(s, v0, "doc_id", "text",
-      win = DupSpanWin, seed = DupSpanSeed, tag = tag)
+    val tag = Store.tag("day2", dir)
+    Dedup.SpanStore.once(tag) {
+      Dedup.SpanStore.write(s, v0, "doc_id", "text",
+        win = DupSpanWin, seed = DupSpanSeed, tag = tag)
+    }
     Dedup.SpanStore.day2Stats(s, all, delta, "doc_id", "text",
         win = DupSpanWin, seed = DupSpanSeed, tag = tag)
       .orderBy(col("doc_id"))
@@ -1315,13 +1315,17 @@ object TrainDataQueries extends QueryModule {
     val v0 = all.where(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 5)
     val delta1 = all.where(col("doc_id") % 10 === 5)
     val delta2 = all.where(col("doc_id") % 10 === 0)
-    val tagBase = "spanabs_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    Dedup.SpanStore.writeOnce(s, v0, "doc_id", "text",
-      win = DupSpanWin, seed = DupSpanSeed, tag = s"${tagBase}_g1")
-    Dedup.SpanStore.absorbOnce(s, s"${tagBase}_g1", s"${tagBase}_g2", delta1,
-      "doc_id", "text", win = DupSpanWin, seed = DupSpanSeed)
+    val (tag1, tag2) = (Store.tag("absorbg1", dir), Store.tag("absorbg2", dir))
+    Dedup.SpanStore.once(tag1) {
+      Dedup.SpanStore.write(s, v0, "doc_id", "text",
+        win = DupSpanWin, seed = DupSpanSeed, tag = tag1)
+    }
+    Dedup.SpanStore.once(tag2) {
+      Dedup.SpanStore.absorb(s, tag1, tag2, delta1,
+        "doc_id", "text", win = DupSpanWin, seed = DupSpanSeed)
+    }
     Dedup.SpanStore.day2Stats(s, all, delta2, "doc_id", "text",
-        win = DupSpanWin, seed = DupSpanSeed, tag = s"${tagBase}_g2")
+        win = DupSpanWin, seed = DupSpanSeed, tag = tag2)
       .orderBy(col("doc_id"))
   }
 

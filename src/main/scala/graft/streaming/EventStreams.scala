@@ -663,13 +663,13 @@ object EventStreams {
   def streamingIvfIngest(spark: SparkSession, dir: String,
                          parts: Int = 3): DataFrame = {
     import graft.operators.Similarity
-    val root = java.nio.file.Paths.get(graft.operators.Dedup.SignatureStore.root)
+    val root = java.nio.file.Paths.get(Similarity.IvfStore.root)
     if (java.nio.file.Files.isDirectory(root)) {
       val ls = java.nio.file.Files.list(root)
       try ls.forEach { p =>
         val name = p.getFileName.toString
         if (name.startsWith("ivf_store_stream_ivf_"))
-          Similarity.IvfStore.vacuum(name.stripPrefix("ivf_store_"))
+          Similarity.IvfStore.vacuum(spark, name.stripPrefix("ivf_store_"))
       } finally ls.close()
     }
     val embs = graft.core.Tables.embeddings(spark, dir)
@@ -677,15 +677,17 @@ object EventStreams {
     val run = java.util.UUID.randomUUID.toString.replace("-", "")
     val genTag = s"stream_ivf_${run}_g"
     // The day-0 index is the SETUP artifact the stream ingests into —
-    // built once per corpus per JVM (writeOnce, the same convention
+    // built once per corpus per JVM (`once`, the same convention
     // the batch day-2 twin `q_embed_ivf_day2` and the signature-store
     // family already use); the measured work is the absorb CHAIN,
     // which runs in full on every invocation. The tag sits outside
     // the `stream_ivf_` sweep prefix so run-start reclamation of
     // stale run-scoped generations never deletes the shared base.
-    val day0Tag = s"annd0_${java.lang.Integer.toHexString(dir.hashCode)}"
-    Similarity.IvfStore.writeOnce(spark, day0, "vec_id", "embedding", "label",
-      day0Tag)
+    val day0Tag = graft.core.Store.tag("annd0", dir)
+    Similarity.IvfStore.once(day0Tag) {
+      Similarity.IvfStore.write(spark, day0, "vec_id", "embedding", "label",
+        day0Tag)
+    }
     def tagOf(g: Int): String = if (g == 0) day0Tag else genTag + g
     val staged = stageDeltaVecSplits(spark, dir, parts)
     val gen = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -703,7 +705,7 @@ object EventStreams {
             // g+1 is fully materialized (absorb's writes are actions);
             // reclaim the run-scoped generation it superseded — never
             // the shared day-0 base.
-            if (g > 0) Similarity.IvfStore.vacuum(tagOf(g))
+            if (g > 0) Similarity.IvfStore.vacuum(spark, tagOf(g))
           }
         }
         .start()

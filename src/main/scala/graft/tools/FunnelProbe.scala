@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Scratch probe: split a query's wall time into BUILD (the builder
   * call — for the curate funnel that includes the eager LSH + CC
@@ -16,14 +15,7 @@ object FunnelProbe {
     val names = args(1).split(",")
     val iters = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    (graft.core.Tables.SessionConfigs ++ graft.core.Tables.HarnessConfigs)
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.localSession(cpus.toInt)
     names.foreach { n =>
       val runs = (1 to iters).map { _ =>
         val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Plane-count / occupancy probe for the embedding-LSH dedup path:
@@ -16,14 +15,7 @@ import org.apache.spark.sql.functions._
 object LshProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, planesCsv) = args
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    (graft.core.Tables.SessionConfigs ++ graft.core.Tables.HarnessConfigs)
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.localSession(32)
 
     val emb = graft.core.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding")).cache()

@@ -103,9 +103,7 @@ object MakeSf {
         .findFirst().orElseThrow(() => new IllegalStateException(s"no part file for $name"))
       Files.move(part, Paths.get(s"$dstDir/$name.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
-      // clean the staging dir
-      Files.walk(Paths.get(stage)).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
+      graft.core.Scratch.deleteTree(Paths.get(stage))
       println(s"[makesf] $name: ${spark.read.parquet(s"$dstDir/$name.parquet").count()} rows")
     }
 

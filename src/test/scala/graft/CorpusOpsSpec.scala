@@ -165,12 +165,12 @@ class CorpusOpsSpec extends AnyFunSuite {
     // stored frames ≡ from-scratch write over v0 ∪ delta1
     Dedup.SpanStore.write(spark, (v0 ++ delta1).toDF("doc_id", "text"),
       "doc_id", "text", win = 5, seed = 3011L, tag = tagRb)
-    def famSet(t: String) = spark.table(Dedup.SpanStore.famsTable(t))
+    def famSet(t: String) = spark.table(Dedup.SpanStore.table(t, "fams"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
-    def censusSet(t: String) = spark.table(Dedup.SpanStore.censusTable(t))
+    def censusSet(t: String) = spark.table(Dedup.SpanStore.table(t, "census"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def winsSet(t: String) = spark.table(Dedup.SpanStore.winsTable(t))
+    def winsSet(t: String) = spark.table(Dedup.SpanStore.table(t, "wins"))
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
     assert(famSet(tag2) == famSet(tagRb),
       s"fams: ${famSet(tag2).diff(famSet(tagRb))} vs ${famSet(tagRb).diff(famSet(tag2))}")
@@ -199,10 +199,10 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(fromStore == scratch12, s"statsFromStore ${fromStore.diff(scratch12)}")
     // vacuum gen1: tables + files gone, gen2 untouched
     Dedup.SpanStore.vacuum(spark, tag1)
-    assert(!spark.catalog.tableExists(Dedup.SpanStore.famsTable(tag1)))
+    assert(!spark.catalog.tableExists(Dedup.SpanStore.table(tag1, "fams")))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
       Dedup.SpanStore.root, s"span_store_$tag1")))
-    assert(spark.table(Dedup.SpanStore.famsTable(tag2)).count() ==
+    assert(spark.table(Dedup.SpanStore.table(tag2, "fams")).count() ==
       famSet(tagRb).size)
     Dedup.SpanStore.vacuum(spark, tag2)
     Dedup.SpanStore.vacuum(spark, tagRb)
@@ -225,9 +225,9 @@ class CorpusOpsSpec extends AnyFunSuite {
     ImageHashStore.absorb(spark, g1, g2, df(d1), maxHamming = 3)
     // absorbed generation ≡ from-scratch write over v0 ∪ d1
     ImageHashStore.write(spark, df(v0 ++ d1), rb, maxHamming = 3)
-    def famSet(t: String) = spark.table(ImageHashStore.famsTable(t))
+    def famSet(t: String) = spark.table(ImageHashStore.table(t, "fams"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    def pairSet(t: String) = spark.table(ImageHashStore.pairsTable(t))
+    def pairSet(t: String) = spark.table(ImageHashStore.table(t, "pairs"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(famSet(g2) == famSet(rb),
       s"fams: ${famSet(g2).diff(famSet(rb))} vs ${famSet(rb).diff(famSet(g2))}")
@@ -254,10 +254,10 @@ class CorpusOpsSpec extends AnyFunSuite {
       "the day-3 hash must pair with h1's family")
     // vacuum gen1; gen2 stays readable
     ImageHashStore.vacuum(spark, g1)
-    assert(!spark.catalog.tableExists(ImageHashStore.famsTable(g1)))
+    assert(!spark.catalog.tableExists(ImageHashStore.table(g1, "fams")))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
       ImageHashStore.root, s"img_store_$g1")))
-    assert(spark.table(ImageHashStore.famsTable(g2)).count() == 4)
+    assert(spark.table(ImageHashStore.table(g2, "fams")).count() == 4)
     ImageHashStore.vacuum(spark, g2)
     ImageHashStore.vacuum(spark, rb)
   }

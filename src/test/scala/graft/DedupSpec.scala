@@ -452,8 +452,8 @@ class DedupSpec extends AnyFunSuite {
 
     Dedup.SignatureStore.vacuum(spark, "vac0")
     // old generation fully gone: catalog and disk
-    assert(!spark.catalog.tableExists(Dedup.SignatureStore.bandedTable("vac0")))
-    assert(!spark.catalog.tableExists(Dedup.SignatureStore.setsTable("vac0")))
+    assert(!spark.catalog.tableExists(Dedup.SignatureStore.table("vac0", "banded")))
+    assert(!spark.catalog.tableExists(Dedup.SignatureStore.table("vac0", "sets")))
     val oldDir = java.nio.file.Paths.get(
       Dedup.SignatureStore.root, "sig_store_vac0")
     assert(!java.nio.file.Files.exists(oldDir), s"$oldDir survived vacuum")

@@ -30,7 +30,14 @@ class OracleParitySpec extends AnyFunSuite {
     "q_audio_headers",
     // r9-final additions: hand-mirrored hash/window/decimal math
     "q_dedup_embed_scalable", "q_cdc_apply", "q_rollup_incremental",
-    "q_median_scalable", "q_export_manifest")
+    "q_median_scalable", "q_export_manifest",
+    // the persisted-store family: every store's persist, absorb and
+    // probe through the shared generational lifecycle
+    "q_dedup_incremental_store", "q_dedup_store_day2",
+    "q_dedup_group_resolve", "q_stream_dedup_store", "q_embed_ivf_store",
+    "q_embed_ivf_day2", "q_stream_ann_ingest", "q_embed_ivfpq_store",
+    "q_embed_ivfpq_day2", "q_image_dedup_day2", "q_dup_span_day2",
+    "q_dup_span_absorb")
 
   private val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR_VERIFY",
     "/root/testdata/sf0.01")

@@ -555,7 +555,7 @@ class SimilaritySpec extends AnyFunSuite {
     // (b) day-0 members' codes are untouched by the absorb
     def codes(tag: String, pred: org.apache.spark.sql.Column) =
       spark.read.parquet(
-          Similarity.IvfPqStore.path(tag).resolve("codes").toString)
+          Similarity.IvfPqStore.dir(tag).resolve("codes").toString)
         .where(pred)
         .select($"vec_id", $"_code0", $"_code1", $"_code2", $"_code3")
         .collect().map(_.toSeq).toSet
@@ -566,7 +566,7 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.IvfPqStore.write(spark, embs, "vec_id", "embedding", "label",
       blocks = 4, codes = 4, iters = 2, tag = "spec_ipq_full")
     def cents(tag: String) = spark.read.parquet(
-        Similarity.IvfPqStore.path(tag).resolve("centroids").toString)
+        Similarity.IvfPqStore.dir(tag).resolve("centroids").toString)
       .select($"label", $"pos", $"cn".cast("string"), $"n")
       .collect().map(_.toSeq).toSet
     assert(cents("spec_ipq_d1") == cents("spec_ipq_full"))
@@ -577,7 +577,7 @@ class SimilaritySpec extends AnyFunSuite {
     val deltaVecs = delta.select($"vec_id", $"embedding")
       .as[(Long, Array[Float])].collect().toMap
     val gotDelta = spark.read.parquet(
-        Similarity.IvfPqStore.path("spec_ipq_d1").resolve("codes").toString)
+        Similarity.IvfPqStore.dir("spec_ipq_d1").resolve("codes").toString)
       .where($"vec_id" % 7 === 5)
       .select($"vec_id", $"_code0", $"_code1", $"_code2", $"_code3")
       .collect().map(r => r.getLong(0) ->
@@ -638,15 +638,15 @@ class SimilaritySpec extends AnyFunSuite {
       .orderBy($"query_id", $"rk").collect().map(_.toSeq).toSeq
     val before = probe()
     assert(before.nonEmpty)
-    Similarity.IvfStore.vacuum("spec_ivfvac_d0")
+    Similarity.IvfStore.vacuum(spark, "spec_ivfvac_d0")
     assert(!java.nio.file.Files.exists(
-        Similarity.IvfStore.path("spec_ivfvac_d0")),
+        Similarity.IvfStore.dir("spec_ivfvac_d0")),
       "vacuum must remove generation N's directory tree")
     // generation N+1 materialized its own files under absorb —
     // nothing in it references the vacuumed generation
     assert(probe() == before, "gen N+1 probe changed after vacuuming gen N")
-    Similarity.IvfStore.vacuum("spec_ivfvac_d0") // idempotent
-    Similarity.IvfStore.vacuum("spec_ivfvac_never_written") // not an error
+    Similarity.IvfStore.vacuum(spark, "spec_ivfvac_d0") // idempotent
+    Similarity.IvfStore.vacuum(spark, "spec_ivfvac_never_written") // not an error
     graft.core.Caches.releaseAll()
   }
 
@@ -666,12 +666,12 @@ class SimilaritySpec extends AnyFunSuite {
       .orderBy($"query_id", $"rk").collect().map(_.toSeq).toSeq
     val before = probe()
     assert(before.nonEmpty)
-    Similarity.IvfPqStore.vacuum("spec_ipqvac_d0")
+    Similarity.IvfPqStore.vacuum(spark, "spec_ipqvac_d0")
     assert(!java.nio.file.Files.exists(
-        Similarity.IvfPqStore.path("spec_ipqvac_d0")),
+        Similarity.IvfPqStore.dir("spec_ipqvac_d0")),
       "vacuum must remove generation N's directory tree")
     assert(probe() == before, "gen N+1 probe changed after vacuuming gen N")
-    Similarity.IvfPqStore.vacuum("spec_ipqvac_d0") // idempotent
+    Similarity.IvfPqStore.vacuum(spark, "spec_ipqvac_d0") // idempotent
     graft.core.Caches.releaseAll()
   }
 

@@ -1,0 +1,79 @@
+package graft
+
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.Store
+import graft.operators.{Dedup, Similarity}
+
+/** The shared generational store lifecycle: tag derivation and the
+  * per-JVM once memo every store's persist and absorb go through. */
+class StoreSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  test("store tags are injective over fixture dirs and valid catalog identifiers") {
+    // equal 32-bit String.hashCode, and a pair a [^A-Za-z0-9] -> _
+    // rewrite merges; a case-only difference a case-insensitive
+    // catalog would merge
+    assert("/data/Aa".hashCode == "/data/BB".hashCode)
+    val dirs = Seq("/data/Aa", "/data/BB", "/data/sf0.1", "/data/sf0_1",
+      "/data/aA", "/data/aa")
+    val tags = dirs.map(Store.tag("inc", _))
+    assert(tags.distinct.size == dirs.size, tags)
+    assert(tags.map(_.toLowerCase).distinct.size == dirs.size, tags)
+    tags.foreach(t => assert(t.matches("[a-z0-9_]+"), t))
+    // role and dir never trade characters
+    assert(Store.tag("d0", "x") != Store.tag("d", "0x"))
+    assert(Store.tag("inc", "/data/sf0.1") == Store.tag("inc", "/data/sf0.1"))
+    intercept[IllegalArgumentException](Store.tag("day_2", "/data"))
+  }
+
+  test("once runs its body once per store generation until vacuum") {
+    val tag = "spec_once_memo"
+    val sig = new AtomicInteger()
+    val ivf = new AtomicInteger()
+    Dedup.SignatureStore.vacuum(spark, tag)
+    Similarity.IvfStore.vacuum(spark, tag)
+    Dedup.SignatureStore.once(tag)(sig.incrementAndGet(): Unit)
+    Dedup.SignatureStore.once(tag)(sig.incrementAndGet(): Unit)
+    assert(sig.get == 1, "once ran its body twice")
+    // the same tag in another store is its own generation
+    Similarity.IvfStore.once(tag)(ivf.incrementAndGet(): Unit)
+    assert(ivf.get == 1, "one tag in two stores shared a memo entry")
+    Dedup.SignatureStore.vacuum(spark, tag)
+    Dedup.SignatureStore.once(tag)(sig.incrementAndGet(): Unit)
+    assert(sig.get == 2, "once did not run again after vacuum")
+    // vacuuming one store left the other's entry alone
+    Similarity.IvfStore.once(tag)(ivf.incrementAndGet(): Unit)
+    assert(ivf.get == 1)
+    Dedup.SignatureStore.vacuum(spark, tag)
+    Similarity.IvfStore.vacuum(spark, tag)
+  }
+
+  test("once runs its body once when two threads race on one generation") {
+    val tag = "spec_once_race"
+    Dedup.SignatureStore.vacuum(spark, tag)
+    val runs = new AtomicInteger()
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val calls = (1 to 2).map { _ =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            start.await()
+            Dedup.SignatureStore.once(tag) {
+              runs.incrementAndGet()
+              Thread.sleep(200) // hold the body while the other thread arrives
+            }
+          }
+        })
+      }
+      start.countDown()
+      calls.foreach(_.get(30, TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    assert(runs.get == 1, s"body ran ${runs.get} times")
+    Dedup.SignatureStore.vacuum(spark, tag)
+  }
+}

@@ -112,7 +112,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streamingStoreProbe equals the batch cross pairs and is batch-boundary-invariant") {
     val dir = TestSpark.SfDir
-    // the registered query persists the store (writeOnce) and streams
+    // the registered query persists the store (once) and streams
     // the delta in 4 file-batches
     val got = SparkEntry.queries("q_stream_dedup_store")(spark, dir)
       .collect().map(_.toSeq).toSeq
@@ -124,7 +124,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.nonEmpty && got == want)
     // chopping the same stream into a different number of micro-batches
     // must not change the result — the invariance the oracle relies on
-    val tag = java.lang.Integer.toHexString(dir.hashCode)
+    val tag = graft.core.Store.tag("inc", dir)
     val reChopped = EventStreams.streamingStoreProbe(spark, dir, tag,
         n = 3, k = 12, bands = 4, parts = 2)
       .orderBy($"id_a", $"id_b").collect().map(_.toSeq).toSeq
@@ -171,14 +171,16 @@ class StreamingSpec extends AnyFunSuite {
     // centroid STATE (not just the probe) is bit-identical to a
     // from-scratch build over the full corpus — addition all the way
     val embs = graft.core.Tables.embeddings(spark, dir)
-    Similarity.IvfStore.writeOnce(spark, embs, "vec_id", "embedding",
-      "label", "spec_sai_full")
+    Similarity.IvfStore.once("spec_sai_full") {
+      Similarity.IvfStore.write(spark, embs, "vec_id", "embedding",
+        "label", "spec_sai_full")
+    }
     val full = Similarity.IvfStore.centroids(spark, "spec_sai_full")
       .select($"label", $"pos", $"cn".cast("string"), $"n")
       .collect().map(_.toSeq).toSet
-    val hex = java.lang.Integer.toHexString(dir.hashCode)
     // the day-2 store the batch twin wrote (same tag scheme)
-    val d1 = Similarity.IvfStore.centroids(spark, s"ivf_${hex}_d1")
+    val d1 = Similarity.IvfStore.centroids(spark,
+      graft.core.Store.tag("day2g1", dir))
       .select($"label", $"pos", $"cn".cast("string"), $"n")
       .collect().map(_.toSeq).toSet
     assert(full == d1)

@@ -4,17 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    (graft.core.Tables.SessionConfigs ++ graft.core.Tables.HarnessConfigs)
-      .foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.core.Tables.localSession(4,
+    "spark.sql.warehouse.dir" -> "/tmp/graft_warehouse")
   val SfDir = "/root/testdata/sf0.001"
 }
