@@ -246,7 +246,8 @@ object ScaleSmoke {
       // Pair→cluster resolution on the real corpus: label-propagation
       // ROUNDS must stay flat as the corpus grows (near-dup graphs are
       // tiny cliques; rounds are bounded by the longest chain, not by
-      // corpus size). Iteration count is printed alongside the timing.
+      // corpus size). Iteration count is printed alongside the timing;
+      // it reads 0 while the pair graph is under CC's driver gate.
       time("cc_clusters") {
         val pairs = graft.operators.Dedup
           .nearDupPairsAfterExact(docs, "doc_id", "text")
@@ -264,7 +265,7 @@ object ScaleSmoke {
         val chain = spark.range(0, 4L * n)
           .selectExpr("id AS id_a", "id + 1 AS id_b")
         val (labels, iters) = graft.operators.Dedup
-          .connectedComponentsWithIters(chain, "id_a", "id_b")
+          .labelPropagationWithIters(chain, "id_a", "id_b", 50)
         println(f"""{"scale_smoke":"cc_chain_iters","mult":$n,"iters":$iters}""")
         labels.count()
       }

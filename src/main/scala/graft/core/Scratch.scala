@@ -9,8 +9,10 @@ package graft.core
   *
   * Path hygiene (why this replaces ad-hoc `dir.hashCode` paths under
   * the signature-store root):
-  *  - keyed by the FULL sanitized fixture path, so two fixture dirs
-  *    can never collide the way a 32-bit String.hashCode can;
+  *  - keyed by the FULL fixture path under an injective encoding
+  *    ([[escape]]), so two fixture dirs can never collide the way a
+  *    32-bit String.hashCode (or a lossy `[^A-Za-z0-9]→_` rename,
+  *    which maps `a b` and `a_b` together) can;
   *  - the root is pid-scoped, so two concurrent runs over the same
   *    fixture never clobber each other's artifact mid-read, and a
   *    fixture regenerated in place between runs can never be read
@@ -64,9 +66,14 @@ object Scratch {
   }
 
   /** The path [[buildOnce]] would use — for specs that inspect the
-    * artifact's on-disk layout after the query built it. */
-  def pathFor(kind: String, dir: String): String =
-    root.resolve(kind + "__" + sanitize(dir)).toString
+    * artifact's on-disk layout after the query built it. `kind` is
+    * `[a-z0-9]+` words joined by single `_`s, so the first `__` in the
+    * name ends it and the name is injective in (kind, dir). */
+  def pathFor(kind: String, dir: String): String = {
+    require(kind.matches("[a-z0-9]+(_[a-z0-9]+)*"),
+      s"scratch kind must be [a-z0-9]+ words joined by single _: '$kind'")
+    root.resolve(kind + "__" + escape(dir)).toString
+  }
 
   /** Return the scratch path for artifact `kind` derived from fixture
     * `dir`, running `build(path)` the first time this JVM asks for it
@@ -86,6 +93,16 @@ object Scratch {
       finally walk.close()
     }
 
-  private def sanitize(s: String): String =
-    s.replaceAll("[^A-Za-z0-9._-]", "_")
+  /** `s`'s UTF-8 bytes as `[a-z0-9_]`: `a-z` and `0-9` as themselves,
+    * `_` as `__`, any other byte as `_` plus two lower-case hex digits.
+    * Injective, so distinct strings never share a name, and free of
+    * upper case, so a case-insensitive file system or catalog lookup
+    * cannot merge two names (`Aa` and `aA` encode apart). */
+  def escape(s: String): String =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8).map { b =>
+      val c = (b & 0xff).toChar
+      if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')) c.toString
+      else if (c == '_') "__"
+      else f"_${b & 0xff}%02x"
+    }.mkString
 }

@@ -78,20 +78,14 @@ abstract class Store(kind: String, tables: String*) {
 
 object Store {
   /** The store tag for one `role` (which store generation a query
-    * uses, `[a-z0-9]+`) over fixture `dir`. Injective in (role, dir):
-    * the role ends at the first `_`, and the dir's UTF-8 bytes encode
-    * as themselves when they are `a-z`/`0-9`, `__` for `_`, and `_` plus
-    * two lower-case hex digits otherwise. So two fixture dirs never
-    * share a store, and the tag is a valid catalog identifier that
-    * case-insensitive name resolution cannot merge with another (`Aa`
-    * and `aA` encode apart). */
+    * uses, `[a-z0-9]+`) over fixture `dir`: the role, `_`, then
+    * [[Scratch.escape]] of the dir. Injective in (role, dir), as the
+    * role ends at the first `_` and the encoding is injective, so two
+    * fixture dirs never share a store; and the tag is a valid catalog
+    * identifier that case-insensitive name resolution cannot merge
+    * with another. */
   def tag(role: String, dir: String): String = {
     require(role.matches("[a-z0-9]+"), s"store tag role must be [a-z0-9]+: '$role'")
-    role + "_" + dir.getBytes(java.nio.charset.StandardCharsets.UTF_8).map { b =>
-      val c = (b & 0xff).toChar
-      if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')) c.toString
-      else if (c == '_') "__"
-      else f"_${b & 0xff}%02x"
-    }.mkString
+    role + "_" + Scratch.escape(dir)
   }
 }

@@ -198,7 +198,10 @@ object Dedup {
     * — re-shuffling the heavy array payload TWICE just to attach two
     * arrays to each pair (guide §8: decide with small rows, move the
     * heavy side as little as possible). Measure the candidate count
-    * once (the localCheckpoint makes the count a scan) and BROADCAST
+    * once — an observed metric on the localCheckpoint that
+    * materializes the pairs, so the count costs no job of its own
+    * ([[graft.core.Observed.longOr]] recounts the checkpoint only if
+    * the metric never arrives) — and BROADCAST
     * the pair side when it fits: the sets frame is then only ever
     * scanned, never shuffled. The second join's build side carries one
     * shingle array per pair, so the gate is sized for that payload
@@ -210,8 +213,9 @@ object Dedup {
     * the multiset; DedupSpec asserts equality on a planted corpus). */
   def jaccardForPairsAdaptive(pairs: DataFrame, shingleSets: DataFrame,
                               idCol: String, setCol: String): DataFrame = {
-    val p = pairs.localCheckpoint()
-    if (p.count() > 262144L)
+    val obs = org.apache.spark.sql.Observation()
+    val p = pairs.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+    if (graft.core.Observed.longOr(obs, "n", p) > 262144L)
       jaccardForPairs(p, shingleSets, idCol, setCol)
         .select(col("id_a"), col("id_b"), col("jaccard"))
     else {
@@ -273,42 +277,59 @@ object Dedup {
   }
 
   /** Connected components over an undirected pair graph (id_a, id_b)
-    * by iterative smallest-id label propagation — the step that turns
-    * near-dup candidate PAIRS into dedup GROUPS (pair A–B plus B–C →
-    * one keeper for {A,B,C}), which is what a corpus-dedup run
-    * actually keys its keep/drop decision on.
+    * — the step that turns near-dup candidate PAIRS into dedup GROUPS
+    * (pair A–B plus B–C → one keeper for {A,B,C}), which is what a
+    * corpus-dedup run actually keys its keep/drop decision on.
     *
-    * Every node starts labeled with its own id; each round every node
-    * takes the min of its label, its neighbors' labels, AND its
-    * label's label (path halving — the comp pointers form a forest
-    * that contracts geometrically, the pointer-jumping trick of
-    * hash-min connected components); converged when a round changes
-    * nothing. Pure joins + grouped min — no graph library, nothing
-    * driver-side (the per-round change count rides the round's own
-    * materialization as an observed metric).
-    *
-    * Scale posture: with path halving rounds are bounded by
-    * O(log diameter) — near-dup graphs are overwhelmingly tiny
-    * cliques/stars, so 2–3 rounds dominate (ScaleSmoke: round count
-    * flat at 20× corpus growth; even a planted 80-edge PATH — the
-    * adversarial worst shape — converges in ~10). Each round is ONE
-    * grouped min over a union of self/neighbor/path-halving label
-    * messages (two label joins feed it); all frames are
-    * localCheckpoint-ed so lineage (and the plan) stays constant-size
-    * across rounds. The edge list is ≪ corpus (only near-dup members
-    * appear), so even at 100 TB the propagation runs over a sliver of
-    * the data.
+    * The pairs become a distinct two-direction edge list, checkpointed
+    * once; its row count rides that checkpoint as an observed metric
+    * (no count job), and a MEASURED gate picks one of two paths:
+    *  - ≤ 4M edges (the near-dup graph is ≪ the corpus — only near-dup
+    *    members appear — so this is the common case): the edge list is
+    *    collected once, one packed long array per partition, and
+    *    resolved on the driver by one union-find pass over the sorted
+    *    node ids. Driver memory at the gate, all primitive arrays:
+    *    ≤ 64 MB collected (each undirected edge once, two longs),
+    *    ≤ 64 MB to sort the endpoints into ≤ 4M distinct ids (every
+    *    node has an edge), 16 MB of int parent pointers and ≤ 64 MB of
+    *    (id, comp) slices shipped back — under 200 MB at its peak,
+    *    below the 200–400 MB HashedRelation the broadcast label join
+    *    it replaces built every round. Rounds = 0.
+    *  - above the gate: [[labelPropagationWithIters]]'s shuffled
+    *    smallest-id label propagation, which never holds the graph on
+    *    one machine.
     *
     * Returns (id, comp): one row per node that appears in `pairs`,
-    * comp = smallest id reachable (the group keeper). */
+    * comp = smallest id reachable (the group keeper). A pair with a
+    * null end is not an edge. Both paths return the same rows
+    * (DedupSpec). */
   def connectedComponents(pairs: DataFrame, idA: String, idB: String,
                           maxIter: Int = 50): DataFrame =
     connectedComponentsWithIters(pairs, idA, idB, maxIter)._1
 
-  /** [[connectedComponents]] plus the round count it took to converge
-    * (the ScaleSmoke evidence surface). */
+  /** [[connectedComponents]] plus the label-propagation round count it
+    * took to converge (0 when the driver path resolved it). */
   def connectedComponentsWithIters(pairs: DataFrame, idA: String, idB: String,
                                    maxIter: Int = 50): (DataFrame, Int) = {
+    val obs = org.apache.spark.sql.Observation()
+    val edges = edgeList(pairs, idA, idB)
+      .observe(obs, count(lit(1)).as("n"))
+      .localCheckpoint()
+    if (graft.core.Observed.longOr(obs, "n", edges) <= 4000000L)
+      (componentsOnDriver(edges), 0)
+    else propagateLabels(edges, maxIter)
+  }
+
+  /** The above-gate path of [[connectedComponentsWithIters]], callable
+    * on any graph so specs and ScaleSmoke can measure its rounds. */
+  private[graft] def labelPropagationWithIters(pairs: DataFrame, idA: String,
+                                               idB: String,
+                                               maxIter: Int): (DataFrame, Int) =
+    propagateLabels(edgeList(pairs, idA, idB).localCheckpoint(), maxIter)
+
+  /** (src, dst) longs, both directions of every pair, distinct
+    * (robustness to duplicate and reversed input pairs; one shuffle). */
+  private def edgeList(pairs: DataFrame, idA: String, idB: String): DataFrame = {
     // The smallest-id label algebra needs numeric ids; a string doc key
     // under cast("long") would become NULL silently and corrupt the
     // edge list. Fail at plan time instead (hash a string key to a
@@ -324,37 +345,91 @@ object Dedup {
           s"got ${pairs.schema(c).dataType.simpleString} — non-numeric ids would " +
           "silently become NULL under cast(long) and corrupt the edge list")
     }
-    val edges = pairs
-      .select(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst"))
-      .union(pairs
+    val oneWay = pairs.where(col(idA).isNotNull && col(idB).isNotNull)
+    oneWay.select(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst"))
+      .union(oneWay
         .select(col(idB).cast("long").as("src"), col(idA).cast("long").as("dst")))
-      .distinct() // robustness to duplicate input pairs; one shuffle, once
-      .localCheckpoint()
-    // SCALE-ADAPTIVE join strategy for the iteration: the label/message
-    // frames are node-sized (≤ edges), but behind localCheckpoint their
-    // size is unknown to the planner, which falls back to sort-merge —
-    // every round then re-shuffles all three loop frames. Decide from
-    // the MEASURED edge count (the checkpoint makes the count free):
-    // a graph whose labels fit a broadcast iterates with no per-round
-    // label shuffle; bigger graphs keep the shuffled joins that spill
-    // gracefully. Sizing at the 4M threshold: 4M (long, long) rows is
-    // ~64 MB of raw column bytes, but a built HashedRelation is 3–6×
-    // that (~200–400 MB), and a round holds the fresh broadcast until
-    // ContextCleaner reclaims superseded ones — real headroom needed
-    // is several hundred MB, still well under the 8 GB relation cap.
-    val small = edges.count() <= 4000000L
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df
-    // big graphs: re-checkpoint the (iteration-invariant) edge list
-    // pre-partitioned by the probe key, so shuffled-mode rounds join
-    // labels onto edges WITHOUT re-shuffling the edge list each round
-    // (the TextRank edge treatment; localCheckpoint preserves the
-    // physical partitioning in the LogicalRDD it plans over). Small
-    // graphs broadcast labels instead — edges partitioning is
-    // irrelevant there, so skip the extra setup shuffle.
-    val edgesJ =
-      if (small) edges
-      else edges.repartition(col("dst")).localCheckpoint()
+      .distinct()
+  }
+
+  /** Union-find over a checkpointed edge list that fits the driver
+    * (the gate in [[connectedComponentsWithIters]] sizes it). Node ids
+    * are sorted, so a node's index orders like its id; unions keep the
+    * smaller root, so every root is its component's smallest id. */
+  private def componentsOnDriver(edges: DataFrame): DataFrame = {
+    // each undirected edge once (the list holds both directions), as
+    // (src, dst, src, dst, …) — one primitive array per partition
+    val parts = edges.where(col("src") <= col("dst"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val b = new scala.collection.mutable.ArrayBuilder.ofLong
+        rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+        Iterator.single(b.result())
+      }.collect()
+    val ends = Array.concat(parts.toIndexedSeq: _*)
+    val sorted = ends.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    var i = 0
+    while (i < sorted.length) {
+      if (n == 0 || sorted(n - 1) != sorted(i)) { sorted(n) = sorted(i); n += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(sorted, n)
+    val parent = Array.range(0, n)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var e = 0
+    while (e < ends.length) {
+      val a = find(java.util.Arrays.binarySearch(ids, ends(e)))
+      val b = find(java.util.Arrays.binarySearch(ids, ends(e + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      e += 2
+    }
+    // ship (id, comp) back as primitive slices of ≤ 1M nodes
+    val slices = (0 until n by (1 << 20)).map { lo =>
+      val is = ids.slice(lo, math.min(n, lo + (1 << 20)))
+      (is, Array.tabulate(is.length)(j => ids(find(lo + j))))
+    }
+    val spark = edges.sparkSession
+    val rows = spark.sparkContext.parallelize(slices, math.max(1, slices.size))
+      .flatMap { case (is, cs) =>
+        is.indices.iterator.map(i => org.apache.spark.sql.Row(is(i), cs(i)))
+      }
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("comp", LongType, nullable = false))))
+  }
+
+  /** Iterative smallest-id label propagation over a checkpointed edge
+    * list. Every node starts labeled with its own id; each round every
+    * node takes the min of its label, its neighbors' labels, AND its
+    * label's label (path halving — the comp pointers form a forest
+    * that contracts geometrically, the pointer-jumping trick of
+    * hash-min connected components); converged when a round changes
+    * nothing. Pure joins + grouped min — no graph library, nothing
+    * driver-side (the per-round change count rides the round's own
+    * materialization as an observed metric).
+    *
+    * Scale posture: with path halving rounds are bounded by
+    * O(log diameter) — near-dup graphs are overwhelmingly tiny
+    * cliques/stars, so 2–3 rounds dominate (ScaleSmoke: round count
+    * flat at 20× corpus growth; even a planted 80-edge PATH — the
+    * adversarial worst shape — converges in ~10). Each round is ONE
+    * grouped min over a union of self/neighbor/path-halving label
+    * messages (two shuffled label joins feed it); all frames are
+    * localCheckpoint-ed so lineage (and the plan) stays constant-size
+    * across rounds. */
+  private def propagateLabels(edges: DataFrame, maxIter: Int): (DataFrame, Int) = {
+    // re-checkpoint the (iteration-invariant) edge list pre-partitioned
+    // by the probe key, so rounds join labels onto edges WITHOUT
+    // re-shuffling the edge list each round (the TextRank edge
+    // treatment; localCheckpoint preserves the physical partitioning
+    // in the LogicalRDD it plans over)
+    val edgesJ = edges.repartition(col("dst")).localCheckpoint()
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id"))
       .localCheckpoint()
@@ -370,12 +445,8 @@ object Dedup {
       // least(coalesce(comp_comp, comp), coalesce(nbr_comp, comp))
       // because comp(comp(v)) ≤ comp(v) (labels only ever decrease
       // from id under min) and every node has ≥1 edge and a labeled
-      // comp, so no message source is ever empty for a node. Both
-      // propagation joins build against the SAME (id, comp)
-      // projection, so in broadcast mode ReuseExchange builds ONE
-      // relation per round (scratch-probed: 3 broadcast builds → 1).
-      val lk = maybeBcast(labels.select(col("id").as("_lid"),
-        col("comp").as("_lcomp")))
+      // comp, so no message source is ever empty for a node.
+      val lk = labels.select(col("id").as("_lid"), col("comp").as("_lcomp"))
       val selfMsg = labels.select(col("id"), col("comp").as("m"),
         col("comp").as("_old"))
       val nbrMsg = edgesJ.join(lk, col("dst") === col("_lid"))

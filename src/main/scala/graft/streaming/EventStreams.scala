@@ -35,10 +35,11 @@ object EventStreams {
   private val rollupHookArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
   private def nioDeleteRecursive(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder())
+      val walk = java.nio.file.Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder())
         .forEach(f => try java.nio.file.Files.deleteIfExists(f)
           catch { case _: java.io.IOException => () })
+      finally walk.close()
     }
 
   /** Reclaim generation dirs whose mtime is over an hour old — stale
@@ -54,12 +55,13 @@ object EventStreams {
     val root = java.nio.file.Paths.get(RollupRoot)
     if (java.nio.file.Files.isDirectory(root)) {
       val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-      java.nio.file.Files.list(root).forEach { d =>
+      val ls = java.nio.file.Files.list(root)
+      try ls.forEach { d =>
         try {
           if (java.nio.file.Files.getLastModifiedTime(d).toMillis < cutoff)
             nioDeleteRecursive(d)
         } catch { case _: java.io.IOException => () }
-      }
+      } finally ls.close()
     }
   }
 
@@ -431,22 +433,15 @@ object EventStreams {
   // -------------------------------------------------- crash recovery
   /** Split the events fixture into `parts` parquet files so the
     * file-stream source sees multiple micro-batches
-    * (`maxFilesPerTrigger=1` → one batch per file). Written once per
-    * (dir, parts) per JVM; `overwrite` keeps a stale cross-JVM
-    * leftover from poisoning the stream. */
-  private val splitsWritten = scala.collection.mutable.Set[String]()
+    * (`maxFilesPerTrigger=1` → one batch per file). Built once per
+    * (dir, parts) per JVM in the pid-scoped scratch root
+    * ([[graft.core.Scratch.buildOnce]]), so two fixture dirs or two
+    * JVMs never share the split files. */
   private def stageSplits(spark: SparkSession, dir: String, parts: Int): String =
-    synchronized {
-      val key = "ev_" + Integer.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash(s"$dir/$parts"))
-      val out = java.nio.file.Paths.get("/tmp/graft_stream_splits", key).toString
-      if (!splitsWritten.contains(out)) {
-        spark.read.parquet(s"$dir/events.parquet")
-          .repartition(parts)
-          .write.mode("overwrite").parquet(out)
-        splitsWritten += out
-      }
-      out
+    graft.core.Scratch.buildOnce(s"stream_splits_$parts", dir) { out =>
+      spark.read.parquet(s"$dir/events.parquet")
+        .repartition(parts)
+        .write.mode("overwrite").parquet(out)
     }
 
   /** STREAMING incremental view maintenance — the streaming half of
@@ -583,44 +578,32 @@ object EventStreams {
 
   /** Split the DELTA documents (doc_id % 10 = 0 — the same delta the
     * incremental-dedup family keys on) into `parts` parquet files for
-    * per-file micro-batches. Memoized per (dir, parts) per JVM like
+    * per-file micro-batches. Built once per (dir, parts) per JVM like
     * [[stageSplits]]. */
-  private val docSplitsWritten = scala.collection.mutable.Set[String]()
   private def stageDeltaDocSplits(spark: SparkSession, dir: String,
-                                  parts: Int): String = synchronized {
-    val key = "dd_" + Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"$dir/$parts"))
-    val out = java.nio.file.Paths.get("/tmp/graft_stream_docdelta", key).toString
-    if (!docSplitsWritten.contains(out)) {
+                                  parts: Int): String =
+    graft.core.Scratch.buildOnce(s"stream_docdelta_$parts", dir) { out =>
       spark.read.parquet(s"$dir/documents.parquet")
         .where(col("doc_id") % 10 === 0)
         .repartition(parts)
         .write.mode("overwrite").parquet(out)
-      docSplitsWritten += out
     }
-    out
-  }
 
   private val VecSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
-  private val vecSplitsWritten = scala.collection.mutable.Set[String]()
+  /** The delta embeddings (vec_id % 7 = 3) split like
+    * [[stageDeltaDocSplits]]. */
   private def stageDeltaVecSplits(spark: SparkSession, dir: String,
-                                  parts: Int): String = synchronized {
-    val key = "vd_" + Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"$dir/$parts"))
-    val out = java.nio.file.Paths.get("/tmp/graft_stream_vecdelta", key).toString
-    if (!vecSplitsWritten.contains(out)) {
+                                  parts: Int): String =
+    graft.core.Scratch.buildOnce(s"stream_vecdelta_$parts", dir) { out =>
       spark.read.parquet(s"$dir/embeddings.parquet")
         .where(col("vec_id") % 7 === 3)
         .repartition(parts)
         .write.mode("overwrite").parquet(out)
-      vecSplitsWritten += out
     }
-    out
-  }
 
   /** STREAMING ANN INGEST — the persisted IVF index's day-2 absorb
     * ([[graft.operators.Similarity.IvfStore.absorb]]) deployed as a

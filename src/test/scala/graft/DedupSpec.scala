@@ -196,7 +196,7 @@ class DedupSpec extends AnyFunSuite {
     // travel from one end; path halving contracts it in O(log 9) rounds
     val chain = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val (labels, itersChain) =
-      Dedup.connectedComponentsWithIters(chain, "id_a", "id_b")
+      Dedup.labelPropagationWithIters(chain, "id_a", "id_b", 50)
     assert(labels.as[(Long, Long)].collect().forall(_._2 == 0L))
     assert(itersChain <= 7, s"9-edge path took $itersChain rounds (want ~log)")
     // 200 extra 2-cliques (400 nodes): same chain, same round count —
@@ -204,12 +204,12 @@ class DedupSpec extends AnyFunSuite {
     val wide = chain.union(
       (100L until 300L).map(i => (2 * i, 2 * i + 1)).toDF("id_a", "id_b"))
     val (_, itersWide) =
-      Dedup.connectedComponentsWithIters(wide, "id_a", "id_b")
+      Dedup.labelPropagationWithIters(wide, "id_a", "id_b", 50)
     assert(itersWide == itersChain, s"$itersWide != $itersChain")
     // and a pure clique corpus converges in ~2 rounds regardless of size
     val cliques = (0L until 200L).map(i => (2 * i, 2 * i + 1)).toDF("id_a", "id_b")
     val (_, itersCliques) =
-      Dedup.connectedComponentsWithIters(cliques, "id_a", "id_b")
+      Dedup.labelPropagationWithIters(cliques, "id_a", "id_b", 50)
     assert(itersCliques <= 2, s"cliques took $itersCliques rounds")
   }
 
@@ -540,7 +540,7 @@ class DedupSpec extends AnyFunSuite {
     val pairEdge  = Seq((30L, 31L))
     val pairs = (pathEdges ++ starEdges ++ pairEdge).toDF("id_a", "id_b")
     val (labels, iters) =
-      Dedup.connectedComponentsWithIters(pairs, "id_a", "id_b")
+      Dedup.labelPropagationWithIters(pairs, "id_a", "id_b", 50)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (10L to 15L).foreach(i => assert(got(i) == 10L, s"path node $i → ${got(i)}"))
     (20L to 23L).foreach(i => assert(got(i) == 20L, s"star node $i → ${got(i)}"))
@@ -549,5 +549,64 @@ class DedupSpec extends AnyFunSuite {
     // path halving: the 6-path converges in O(log n) rounds, and the
     // final round is the observed-zero-change fixpoint confirmation
     assert(iters >= 2 && iters <= 6, s"iters=$iters")
+  }
+
+  /** The 12-node planted graph: a 6-node path, a 4-node star and an
+    * isolated pair. */
+  private def plantedPairs =
+    ((10L until 15L).map(i => (i, i + 1)) ++
+      Seq((20L, 21L), (20L, 22L), (20L, 23L), (30L, 31L))).toDF("id_a", "id_b")
+
+  test("connectedComponents: the driver union-find and label propagation return identical rows") {
+    val cliques = for (c <- 0L until 3L; a <- 0L until 4L; b <- a + 1 until 4L)
+      yield (100 * c + a, 100 * c + b)
+    val graphs = Seq(
+      "planted path + star + pair" -> plantedPairs,
+      "cliques" -> cliques.toDF("id_a", "id_b"),
+      "duplicate pairs" -> Seq((1L, 2L), (1L, 2L), (2L, 3L), (2L, 3L)).toDF("id_a", "id_b"),
+      "reversed pairs" -> Seq((5L, 4L), (4L, 5L), (6L, 5L)).toDF("id_a", "id_b"),
+      "self-pairs" -> Seq((7L, 7L), (9L, 9L), (9L, 8L)).toDF("id_a", "id_b"),
+      "int ids" -> Seq((3, 2), (2, 1), (50, 40)).toDF("id_a", "id_b"))
+    for ((name, pairs) <- graphs) {
+      val (driver, rounds) = Dedup.connectedComponentsWithIters(pairs, "id_a", "id_b")
+      assert(rounds == 0, s"$name: the small graph did not take the driver path")
+      val (loop, loopRounds) = Dedup.labelPropagationWithIters(pairs, "id_a", "id_b", 50)
+      assert(loopRounds >= 1)
+      val got = driver.as[(Long, Long)].collect().sorted.toSeq
+      val want = loop.as[(Long, Long)].collect().sorted.toSeq
+      assert(got == want, s"$name: driver $got != loop $want")
+    }
+    // self-pairs are nodes of their own; 8 joins 9's group
+    val self = Dedup.connectedComponents(graphs(4)._2, "id_a", "id_b")
+      .as[(Long, Long)].collect().toMap
+    assert(self == Map(7L -> 7L, 8L -> 8L, 9L -> 8L))
+  }
+
+  test("connectedComponents: a small graph resolves in at most 3 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val pairs = plantedPairs
+    val marker = "cc-job-count-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counting = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val sawMarker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker)) {
+          counting.set(false)
+          sawMarker.countDown()
+        } else if (counting.get) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      Dedup.connectedComponents(pairs, "id_a", "id_b")
+      // the listener bus is asynchronous but ordered: once the marker
+      // job's start arrives, every job CC started has been counted
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(sawMarker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get >= 1 && jobs.get <= 3,
+      s"CC over the 12-node planted graph ran ${jobs.get} Spark jobs (want ≤ 3)")
   }
 }

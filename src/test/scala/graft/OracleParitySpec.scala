@@ -37,7 +37,12 @@ class OracleParitySpec extends AnyFunSuite {
     "q_dedup_group_resolve", "q_stream_dedup_store", "q_embed_ivf_store",
     "q_embed_ivf_day2", "q_stream_ann_ingest", "q_embed_ivfpq_store",
     "q_embed_ivfpq_day2", "q_image_dedup_day2", "q_dup_span_day2",
-    "q_dup_span_absorb")
+    "q_dup_span_absorb",
+    // connected components' consumers: below CC's measured gate the
+    // driver union-find resolves their groups
+    "q_curate_pipeline", "q_curate_sink", "q_curate_funnel",
+    "q_curate_incremental", "q_stream_curate", "q_dedup_clusters",
+    "q_split_leakage_safe")
 
   private val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR_VERIFY",
     "/root/testdata/sf0.01")

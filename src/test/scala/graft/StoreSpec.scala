@@ -76,4 +76,21 @@ class StoreSpec extends AnyFunSuite {
     assert(runs.get == 1, s"body ran ${runs.get} times")
     Dedup.SignatureStore.vacuum(spark, tag)
   }
+
+  test("build-once scratch paths are injective over fixture dirs") {
+    import graft.core.Scratch
+    // a [^A-Za-z0-9._-] -> _ rename merged these two into one path
+    val (a, b) = ("/d/a b", "/d/a_b")
+    assert(Scratch.pathFor("k", a) != Scratch.pathFor("k", b))
+    // and kind and dir never trade characters
+    assert(Scratch.pathFor("k_x", "y") != Scratch.pathFor("k", "x_y"))
+    assert(Scratch.pathFor("k", "_y") != Scratch.pathFor("k_y", ""))
+    intercept[IllegalArgumentException](Scratch.pathFor("k__x", "y"))
+    val builds = new AtomicInteger()
+    val pa = Scratch.buildOnce("spec_inj", a)(_ => builds.incrementAndGet(): Unit)
+    val pb = Scratch.buildOnce("spec_inj", b)(_ => builds.incrementAndGet(): Unit)
+    assert(pa != pb && builds.get == 2, "the second dir reused the first one's build")
+    Scratch.buildOnce("spec_inj", a)(_ => builds.incrementAndGet(): Unit)
+    assert(builds.get == 2, "buildOnce ran twice for one dir")
+  }
 }
