@@ -1,9 +1,14 @@
 package graft.operators
 
+import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.PCA
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.mllib.clustering.{GraftKMeans, KMeans => MllibKMeans,
+  KMeansModel => MllibKMeansModel}
+import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
@@ -13,11 +18,15 @@ import org.apache.spark.sql.functions._
   *
   * Reference provenance: `KMeans(n_clusters, random_state=0)` fit on
   * the full embedding matrix (`main.py:316–322,353`) — a driver-side
-  * sklearn call that materializes every vector in memory. Here the
-  * vectors stay distributed: MLlib's KMeans is the driver-orchestrated
-  * iterative-job pattern (one pass per iteration, centers broadcast),
-  * which is exactly what survives 100 TB. PCA mirrors
-  * `main.py:362–364`.
+  * sklearn call that materializes every vector in memory. Here that
+  * happens only below a measured-size gate (at most 2^22 vector values
+  * on the driver, and rows ≥ dim): there MLlib's k-means|| init runs
+  * distributed and Lloyd's rounds run on the driver with MLlib's own
+  * code, bit-identical to MLlib and with no Spark job per round. Above
+  * the gate the vectors stay distributed: MLlib's KMeans is the
+  * driver-orchestrated iterative-job pattern (one pass per iteration,
+  * centers broadcast), which is exactly what survives 100 TB. See
+  * [[Clustering.kmeansLabels]]. PCA mirrors `main.py:362–364`.
   *
   * Determinism: seeded (reference pins seed 0); label VALUES differ
   * from sklearn's (init differs) but the contract — k clusters,
@@ -27,20 +36,57 @@ import org.apache.spark.sql.functions._
 object Clustering {
 
   /** Add a `cluster` label column via KMeans(k, seed) on `embCol`
-    * (array<float> → ml Vector under the hood).
+    * (array<float> → ml Vector under the hood), labelled exactly as
+    * `ml.clustering.KMeans` with its defaults labels it.
+    *
+    * Two paths, chosen by a measured-size gate that costs no extra job:
+    *  - *Driver path.* [[driverKMeans]] persists the vectors MLlib would
+    *    build and runs one job over them that returns each partition's
+    *    row count and, while rows × dim ≤ 2^22 / numPartitions, its
+    *    points ([[DriverValues]]: at most 2^22 values, 32 MB as
+    *    doubles, plus a small object header per point). When every
+    *    partition shipped its points and rows ≥ dim, MLlib's own
+    *    k-means|| init runs (still distributed, ~7 jobs) and then
+    *    Lloyd's rounds run on the driver with MLlib's own distance,
+    *    sum and centroid code, so no round costs a Spark job. Labels
+    *    come from the resulting mllib model's `predict`, the call ml's
+    *    `transform` makes.
+    *  - *MLlib path.* Otherwise `ml.clustering.KMeans` fits and
+    *    transforms as before: one shuffled job per Lloyd round, centers
+    *    broadcast. This is the path for inputs too large for the
+    *    driver; it runs after the gate job, which adds one pass of
+    *    vector conversion to its ≥ 28.
+    *
+    * Why rows ≥ dim: ml's default `solver = "auto"` runs its *block*
+    * solver exactly when rows < dim (Spark 4.1's `preferBlockSolver`
+    * sums the indices of `numNonZeros`, not its values), and the driver
+    * path copies the *row* solver, so those inputs stay on ml.
+    *
+    * Why the driver path is exact: its points are the rows
+    * `ml.KMeans.trainWithRow` builds (the same projection, so the same
+    * partitions in the same order), its init is MLlib's, each round
+    * sums each partition in row order and merges the partitions in
+    * index order, as `reduceByKey` merges local map outputs, and every
+    * floating-point step is an MLlib call
+    * ([[org.apache.spark.mllib.clustering.GraftKMeans]]). Centers are
+    * bitwise equal to ml's and labels identical (ClusteringSpec).
+    *
+    * Both paths fail on a null embedding (in `array_to_vector`) and on
+    * a NaN or ±Inf one (ml's `checkNonNanVectors`, restated in
+    * [[checkedVector]]).
     *
     * A shuffle-free input is persisted once (tracked in
-    * [[graft.core.Caches]]): the passes KMeans `fit` makes over `df`
-    * itself (before its own vector cache takes over) and the
-    * `transform` then read one materialization of `df` instead of each
-    * re-running its upstream — for model-scored rows that upstream is
-    * the scorer itself. The cache sits on `df`, not on the `_features`
-    * projection, so MLlib still sees an uncached dataset and persists
-    * its own vector RDD for the Lloyd's iterations. Consumers of the
-    * labeled frame cache it themselves where they need to
-    * ([[Selection.percentileBand]] does), so under
-    * [[clusterAndSelect]] the scored rows are held twice, here and in
-    * the band's cache, besides MLlib's vectors.
+    * [[graft.core.Caches]]): the gate job, the init and the labelling
+    * (or, above the gate, the passes KMeans `fit` makes over `df` itself
+    * before its own vector cache takes over, and the `transform`) read
+    * one materialization of `df` instead of each re-running its
+    * upstream — for model-scored rows that upstream is the scorer
+    * itself. The cache sits on `df`, not on the `_features` projection,
+    * so the vectors are still persisted separately for the init (or
+    * MLlib's iterations). Consumers of the labeled frame cache it
+    * themselves where they need to ([[Selection.percentileBand]] does),
+    * so under [[clusterAndSelect]] the scored rows are held twice, here
+    * and in the band's cache.
     *
     * An input with an exchange is left uncached, because there the
     * cache could change the labels: MLlib reads the frame pruned to
@@ -52,11 +98,64 @@ object Clustering {
                    seed: Long = 0L): DataFrame = {
     val rows = if (shuffleFree(df)) graft.core.Caches.track(df) else df
     val withVec = rows.withColumn("_features", array_to_vector(col(embCol)))
-    val model = new KMeans()
-      .setK(k).setSeed(seed).setFeaturesCol("_features")
-      .setPredictionCol("cluster")
-      .fit(withVec)
-    model.transform(withVec).drop("_features")
+    val labeled = driverKMeans(withVec, "_features", k, seed, DriverValues) match {
+      case Some(model) =>
+        val predict = udf((v: Vector) => model.predict(OldVectors.fromML(v)))
+        // ml's transform tags the prediction as nominal with one value
+        // per center
+        val meta = NominalAttribute.defaultAttr.withNumValues(model.k).toMetadata()
+        withVec.withColumn("cluster", predict(col("_features")))
+          .withMetadata("cluster", meta)
+      case None =>
+        estimator(k, seed).setFeaturesCol("_features")
+          .setPredictionCol("cluster").fit(withVec).transform(withVec)
+    }
+    labeled.drop("_features")
+  }
+
+  /** Most vector values [[driverKMeans]] collects to the driver. */
+  private[graft] val DriverValues: Long = 1L << 22
+
+  /** The KMeans estimator whose defaults both paths follow. */
+  private def estimator(k: Int, seed: Long): KMeans =
+    new KMeans().setK(k).setSeed(seed)
+
+  /** The driver path of [[kmeansLabels]]: the mllib model
+    * `ml.clustering.KMeans` with its defaults would fit on `featuresCol`
+    * (bitwise-equal centers), or `None` when the input is above the gate
+    * (some partition held more than `maxValues` / numPartitions values)
+    * or has fewer rows than dimensions (ml's block solver). Runs one
+    * job for the gate, then MLlib's k-means|| init; Lloyd's rounds run
+    * on the driver. */
+  private[graft] def driverKMeans(withVec: DataFrame, featuresCol: String,
+                                  k: Int, seed: Long, maxValues: Long)
+      : Option[MllibKMeansModel] = {
+    // ml.KMeans.trainWithRow's instances: the same projection (so the
+    // same partitions and row order), weight 1.0
+    val instances = withVec.select(checkedVector(col(featuresCol)), lit(1.0)).rdd
+      .map(r => (OldVectors.fromML(r.getAs[Vector](0)), r.getDouble(1)))
+    val est = estimator(k, seed)
+    val algo = new MllibKMeans()
+      .setK(est.getK)
+      .setInitializationMode(est.getInitMode)
+      .setInitializationSteps(est.getInitSteps)
+      .setMaxIterations(est.getMaxIter)
+      .setSeed(est.getSeed)
+      .setEpsilon(est.getTol)
+      .setDistanceMeasure(est.getDistanceMeasure)
+    GraftKMeans.fitOnDriver(instances, algo, maxValues)
+  }
+
+  /** ml's input contract for KMeans (its `private[ml]`
+    * `DatasetUtils.checkNonNanVectors`): a null vector, or one holding
+    * NaN or ±Infinity, fails the job that reads it. */
+  private def checkedVector(v: Column): Column = {
+    val bad = exists(unwrap_udt(v).getField("values"),
+      x => x.isNaN || x === Double.PositiveInfinity || x === Double.NegativeInfinity)
+    when(v.isNull, raise_error(lit("Vectors MUST NOT be Null")))
+      .when(bad, raise_error(concat(
+        lit("Vector values MUST NOT be NaN or Infinity, but got "), v.cast("string"))))
+      .otherwise(v)
   }
 
   private object PlanWalk extends AdaptiveSparkPlanHelper

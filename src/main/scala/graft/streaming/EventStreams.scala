@@ -74,34 +74,25 @@ object EventStreams {
   def rawEventsSchema(spark: SparkSession, path: String): StructType =
     spark.read.parquet(path).schema
 
-  /** Stage `dir/file` into a per-source /tmp directory for the
-    * file-stream source (which requires a DIRECTORY; the single-file
-    * test fixture is staged via a symlink — production sources are
-    * directories already). The staging key includes a hash of the FULL
-    * source path: a sanitized-name-only key would collide two distinct
-    * dirs (e.g. `sf0.1a` vs `sf0_1a`) onto one symlink and silently
-    * stream the wrong table. A link whose target moved or vanished is
-    * recreated rather than trusted. */
-  private def stageFile(base: String, dir: String, file: String): String = {
-    import java.nio.file.{Files, LinkOption, Paths}
-    val target = Paths.get(s"$dir/$file").toAbsolutePath
-    val key = dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(s"$dir/$file"))
-    val staged = Paths.get(base, key)
-    Files.createDirectories(staged)
-    val link = staged.resolve(file)
-    if (Files.isSymbolicLink(link) &&
-        (Files.readSymbolicLink(link) != target || !Files.exists(target)))
-      Files.delete(link)
-    if (!Files.exists(link, LinkOption.NOFOLLOW_LINKS))
-      Files.createSymbolicLink(link, target)
-    staged.toString
-  }
+  /** Stage `dir/file` as a symlink in a directory for the file-stream
+    * source, which requires a DIRECTORY (the single-file test fixture
+    * is staged; production sources are directories already). The
+    * directory is a per-JVM scratch artifact of `kind`
+    * ([[graft.core.Scratch.buildOnce]]): keyed by the full source path
+    * under an injective encoding, in a pid-scoped root that is removed
+    * on exit, so two fixture dirs or two concurrent runs never share a
+    * link. */
+  private def stageFile(kind: String, dir: String, file: String): String =
+    graft.core.Scratch.buildOnce(kind, dir) { out =>
+      import java.nio.file.{Files, Paths}
+      val staged = Files.createDirectories(Paths.get(out))
+      Files.createSymbolicLink(staged.resolve(file), Paths.get(s"$dir/$file").toAbsolutePath)
+    }
 
   /** The events parquet as a bounded stream (drives the streaming
     * operators synchronously in tests/verify). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageFile("/tmp/graft_stream", dir, "events.parquet")
+    val staged = stageFile("stream_events", dir, "events.parquet")
     graft.core.Tables.normalizeEventTs(
       spark.readStream.schema(rawEventsSchema(spark, staged)).parquet(staged))
   }
@@ -119,7 +110,7 @@ object EventStreams {
     * [[eventsStream]]). */
   def documentsStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(DocSchema)
-      .parquet(stageFile("/tmp/graft_stream_docs", dir, "documents.parquet"))
+      .parquet(stageFile("stream_docs", dir, "documents.parquet"))
 
   /** STREAMING model scoring: the Scorers mapPartitions operator (one
     * backend init per partition) applied to an unbounded document

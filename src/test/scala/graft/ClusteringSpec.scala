@@ -106,4 +106,151 @@ class ClusteringSpec extends AnyFunSuite {
     assert(out.size == plain.size && relabeled == 0,
       s"$relabeled of ${plain.size} rows relabeled")
   }
+
+  // ---- driver-side Lloyd's: exact against plain ml.KMeans ----------
+
+  import org.apache.spark.ml.clustering.KMeans
+  import org.apache.spark.ml.functions.array_to_vector
+  import org.apache.spark.sql.DataFrame
+
+  /** `pts` with ml's feature column, as kmeansLabels builds it. */
+  private def withFeatures(pts: DataFrame) =
+    pts.withColumn("_features", array_to_vector($"embedding"))
+
+  private def plainKMeans(pts: DataFrame, k: Int, seed: Long) =
+    new KMeans().setK(k).setSeed(seed).setFeaturesCol("_features")
+      .setPredictionCol("cluster").fit(withFeatures(pts))
+
+  private def labelsOf(df: DataFrame): Map[Long, Int] =
+    df.select("vec_id", "cluster").as[(Long, Int)].collect().toMap
+
+  /** Driver path vs plain ml.KMeans on `pts` (vec_id, embedding):
+    * bitwise-equal centers, identical labels and output schema. */
+  private def assertExact(pts: DataFrame, k: Int, seed: Long, what: String): Unit = {
+    val plain = plainKMeans(pts, k, seed)
+    val plainOut = plain.transform(withFeatures(pts)).drop("_features")
+    val driver = Clustering.driverKMeans(withFeatures(pts), "_features", k, seed,
+      Clustering.DriverValues)
+    assert(driver.isDefined, s"$what: routed to ml, not the driver")
+    def bits(vs: Seq[Array[Double]]) =
+      vs.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq)
+    assert(bits(driver.get.clusterCenters.toSeq.map(_.toArray)) ==
+      bits(plain.clusterCenters.toSeq.map(_.toArray)), s"$what: centers differ")
+    val out = Clustering.kmeansLabels(pts, "embedding", k, seed)
+    try {
+      assert(out.schema == plainOut.schema, s"$what: output schema differs")
+      val (got, want) = (labelsOf(out), labelsOf(plainOut))
+      val relabeled = want.count { case (id, c) => !got.get(id).contains(c) }
+      assert(got.size == want.size && relabeled == 0,
+        s"$what: $relabeled of ${want.size} rows relabeled")
+    } finally graft.core.Caches.releaseAll()
+  }
+
+  /** `n` points of dim `dim` around `k` Gaussian centers, in `parts`
+    * partitions (a shuffle-free RDD scan). */
+  private def blobs(n: Int, dim: Int, k: Int, parts: Int): DataFrame = {
+    val rnd = new scala.util.Random(7L)
+    val centers = Array.fill(k, dim)(rnd.nextGaussian() * 10)
+    val rows = (0 until n).map { i =>
+      val c = centers(rnd.nextInt(k))
+      (i.toLong, c.map(x => (x + rnd.nextGaussian()).toFloat))
+    }
+    spark.sparkContext.parallelize(rows, parts).toDF("vec_id", "embedding")
+  }
+
+  test("driver-side Lloyd's: bitwise-equal centers and labels to ml.KMeans") {
+    assertExact((0L until 60L).map(i =>
+        (i, Array((i % 4).toFloat * 5, (i % 4).toFloat * 5)))
+      .toDF("vec_id", "embedding"), k = 4, seed = 0L, "4 stacked points")
+    assertExact((0L until 300L).map(i =>
+        (i, s"payload-${(i * 7919) % 300}",
+          Array(((i * 37) % 101).toFloat, ((i * 53) % 97).toFloat)))
+      .toDF("vec_id", "payload", "embedding").repartition(3),
+      k = 5, seed = 0L, "round-robin repartitioned")
+    for (parts <- Seq(1, 3, 4, 7, 16);
+         (n, dim, k) <- Seq((2000, 8, 5), (5000, 64, 10), (700, 32, 25));
+         seed <- Seq(0L, 42L))
+      assertExact(blobs(n, dim, k, parts), k, seed,
+        s"blobs n=$n dim=$dim k=$k parts=$parts seed=$seed")
+  }
+
+  test("driver-side Lloyd's: fewer distinct points than k stays exact") {
+    // 3 distinct points repeated: k-means|| finds fewer than k distinct
+    // candidate centers and returns them all
+    val pts = spark.sparkContext.parallelize((0L until 200L).map(i =>
+      (i, Array((i % 3).toFloat, (i % 3).toFloat * 2))), 4).toDF("vec_id", "embedding")
+    assertExact(pts, k = 5, seed = 0L, "3 distinct points, k = 5")
+  }
+
+  test("kmeansLabels: fewer rows than dimensions routes to ml.KMeans") {
+    // ml's auto solver picks its block solver for rows < dim, which the
+    // driver path does not copy
+    val rnd = new scala.util.Random(3L)
+    val pts = spark.sparkContext.parallelize((0L until 63L).map(i =>
+      (i, Array.fill(64)(rnd.nextGaussian().toFloat))), 2).toDF("vec_id", "embedding")
+    assert(Clustering.driverKMeans(withFeatures(pts), "_features", 4, 0L,
+      Clustering.DriverValues).isEmpty)
+    val want = labelsOf(plainKMeans(pts, 4, 0L).transform(withFeatures(pts)))
+    val got =
+      try labelsOf(Clustering.kmeansLabels(pts, "embedding", 4, 0L))
+      finally graft.core.Caches.releaseAll()
+    assert(got == want)
+  }
+
+  test("driverKMeans: a partition above its share of the value bound routes to ml") {
+    val pts = blobs(400, 8, 4, parts = 4)
+    // 4 partitions of 100 rows × 8 values; a bound of 1 600 values
+    // allows 400 per partition, one of 12 800 allows 3 200
+    assert(Clustering.driverKMeans(withFeatures(pts), "_features", 4, 0L, 1600L).isEmpty)
+    assert(Clustering.driverKMeans(withFeatures(pts), "_features", 4, 0L, 3200L * 4).isDefined)
+  }
+
+  test("kmeansLabels: a null or NaN embedding fails the fit") {
+    // a null array already fails in array_to_vector, before ml's check;
+    // NaN and ±Infinity fail ml's input check
+    for ((what, bad, message) <- Seq[(String, Array[Float], String)](
+           ("null", null, "is null"),
+           ("NaN", Array(Float.NaN, 1f), "MUST NOT be NaN or Infinity"),
+           ("Infinity", Array(Float.NegativeInfinity, 1f), "MUST NOT be NaN or Infinity"))) {
+      val pts = ((0L, bad) +: (1L until 100L).map(i =>
+        (i, Array((i % 5).toFloat, (i % 7).toFloat)))).toDF("vec_id", "embedding")
+      val e = intercept[Exception] {
+        try Clustering.kmeansLabels(pts, "embedding", 3, 0L).collect()
+        finally graft.core.Caches.releaseAll()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains(message)),
+        s"$what embedding: ${e.getMessage}")
+    }
+  }
+
+  test("kmeansLabels: a small input runs at most 12 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val pts = spark.range(0, 400, 1, 4).selectExpr("id AS vec_id",
+      "array(CAST((id * 37) % 101 AS FLOAT), CAST((id * 53) % 97 AS FLOAT)) AS embedding")
+    val marker = "kmeans-job-count-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counting = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val sawMarker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker)) {
+          counting.set(false)
+          sawMarker.countDown()
+        } else if (counting.get) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      try Clustering.kmeansLabels(pts, "embedding", k = 4, seed = 0L).collect()
+      finally graft.core.Caches.releaseAll()
+      // the listener bus is asynchronous but ordered: once the marker
+      // job's start arrives, every job the labelling started is counted
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(sawMarker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get >= 1 && jobs.get <= 12,
+      s"kmeansLabels over 400 rows ran ${jobs.get} Spark jobs (want ≤ 12)")
+  }
 }
