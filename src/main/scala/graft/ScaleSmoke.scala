@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.streaming.EventStreams
+
 /** Scale-smoke: multiply the corpus N× (re-keyed ids) and time the
   * text/dedup pipelines, to observe how their cost scales between the
   * fixture size and a larger synthetic corpus. Usage:
@@ -391,7 +393,7 @@ object ScaleSmoke {
         import java.nio.file.{Files, Paths, StandardCopyOption}
         val users = 1000L
         val batches = 6 + n
-        val root = Files.createTempDirectory("graft_state_smoke")
+        val root = Paths.get(graft.core.Scratch.runDir("state_smoke"))
         val watched = root.resolve("stream"); Files.createDirectories(watched)
         val baseUs = 1700000000L * 1000000L
         for (k <- 0 until batches) {
@@ -407,29 +409,25 @@ object ScaleSmoke {
             StandardCopyOption.ATOMIC_MOVE)
           Thread.sleep(15) // distinct mtimes → in-order file batches
         }
-        val stream = spark.readStream
-          .schema(StructType(Seq(
+        val stream = EventStreams.fileStream(spark,
+          StructType(Seq(
             StructField("user_id", LongType),
             StructField("ts", TimestampType),
-            StructField("value", DoubleType))))
-          .option("maxFilesPerTrigger", "1")
-          .parquet(watched.toString)
+            StructField("value", DoubleType))),
+          watched.toString)
         val agg = stream.withWatermark("ts", "2 hours")
           .groupBy(window(col("ts"), "1 hour"), col("user_id"))
           .agg(sum(col("value")).as("v"))
-        graft.streaming.EventStreams.withStreamParallelism(spark, 4) {
-          val q = agg.writeStream.outputMode("append").format("memory")
-            .queryName(s"state_smoke_$n").start()
-          try q.processAllAvailable() finally q.stop()
-          val perBatch = q.recentProgress.toSeq
-            .filter(_.stateOperators.nonEmpty)
-            .map(p => p.stateOperators.map(_.numRowsTotal).sum)
-          println(s"""{"scale_smoke":"stream_state_rows","mult":$n,""" +
-            s""""batches":${perBatch.length},"rows":[${perBatch.mkString(",")}]}""")
-          require(perBatch.nonEmpty && perBatch.max <= 5 * users,
-            s"streaming state grew unbounded: ${perBatch.mkString(",")}")
-          perBatch.last
-        }
+        val q = EventStreams.run(spark, agg.writeStream.outputMode("append")
+          .format("memory").queryName(s"state_smoke_$n"))
+        val perBatch = q.recentProgress.toSeq
+          .filter(_.stateOperators.nonEmpty)
+          .map(p => p.stateOperators.map(_.numRowsTotal).sum)
+        println(s"""{"scale_smoke":"stream_state_rows","mult":$n,""" +
+          s""""batches":${perBatch.length},"rows":[${perBatch.mkString(",")}]}""")
+        require(perBatch.nonEmpty && perBatch.max <= 5 * users,
+          s"streaming state grew unbounded: ${perBatch.mkString(",")}")
+        perBatch.last
       }
       time("packing") {
         val w = org.apache.spark.sql.expressions.Window

@@ -1,5 +1,7 @@
 package graft.core
 
+import java.nio.file.{Files, Path, Paths}
+
 /** Per-JVM build-once scratch artifacts for queries whose SEMANTICS
   * include a storage layout (partitioned/sorted/z-ordered/bloom-keyed
   * lakes, variant-encoded parquet): the layout is built ONCE per
@@ -18,7 +20,14 @@ package graft.core
   *    fixture regenerated in place between runs can never be read
   *    through a stale artifact from an earlier process;
   *  - the root is removed on JVM exit (multi-GB ladder copies don't
-  *    accumulate in the temp dir).
+  *    accumulate in the temp dir), and a root whose JVM died before
+  *    its exit hook ran is reclaimed by the next JVM that creates its
+  *    own ([[sweepDeadRoots]]).
+  *
+  * Besides the build-once artifacts, the root holds per-call run
+  * directories ([[runDir]]): a streaming query's checkpoint, sink
+  * output or generations, fresh on every call so two runs in one JVM
+  * never share them, and reclaimed with the root.
   *
   * Scale posture: on a real lake these artifacts are the ingest-time
   * layout jobs (partitioning, sort-clustering, bloom embedding) paid
@@ -26,14 +35,39 @@ package graft.core
   * stand-in for exactly that amortization.
   */
 object Scratch {
-  private lazy val root: java.nio.file.Path = {
-    val p = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_scratch_" + sys.props.getOrElse("user.name", "anon") +
-        "_" + ProcessHandle.current().pid())
-    java.nio.file.Files.createDirectories(p)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(p)))
+  private val rootPrefix =
+    "graft_scratch_" + sys.props.getOrElse("user.name", "anon") + "_"
+
+  private lazy val root: Path = {
+    val tmp = Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
+    sweepDeadRoots(tmp)
+    val p = tmp.resolve(rootPrefix + ProcessHandle.current().pid())
+    Files.createDirectories(p)
+    Runtime.getRuntime.addShutdownHook(new Thread(() => reclaim(p)))
     p
+  }
+
+  /** Reclaim the roots in `parent` that this user's JVMs left behind
+    * when they died before their exit hook ran: a
+    * `graft_scratch_<user>_<pid>` directory whose pid no live process
+    * has AND whose mtime is over an hour old. The pid check keeps a
+    * live JVM's root however long it idles; the hour keeps a fresh
+    * root whose JVM this process cannot see (another pid namespace
+    * sharing the temp dir). Best effort, like the exit hook. */
+  private[graft] def sweepDeadRoots(parent: Path): Unit = {
+    val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
+    def dead(d: Path): Boolean = {
+      val pid = d.getFileName.toString.stripPrefix(rootPrefix)
+      d.getFileName.toString.startsWith(rootPrefix) &&
+        pid.nonEmpty && pid.forall(_.isDigit) &&
+        pid.toLongOption.forall(ProcessHandle.of(_).isEmpty) &&
+        (try Files.getLastModifiedTime(d).toMillis < cutoff
+         catch { case _: java.io.IOException => false })
+    }
+    try {
+      val ls = Files.list(parent)
+      try ls.filter(d => dead(d)).forEach(d => reclaim(d)) finally ls.close()
+    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
   }
 
   private val done =
@@ -70,10 +104,27 @@ object Scratch {
     * `[a-z0-9]+` words joined by single `_`s, so the first `__` in the
     * name ends it and the name is injective in (kind, dir). */
   def pathFor(kind: String, dir: String): String = {
-    require(kind.matches("[a-z0-9]+(_[a-z0-9]+)*"),
-      s"scratch kind must be [a-z0-9]+ words joined by single _: '$kind'")
+    requireKind(kind)
     root.resolve(kind + "__" + escape(dir)).toString
   }
+
+  private def requireKind(kind: String): Unit =
+    require(kind.matches("[a-z0-9]+(_[a-z0-9]+)*"),
+      s"scratch kind must be [a-z0-9]+ words joined by single _: '$kind'")
+
+  /** `kind` plus a random 128-bit hex suffix: unique across calls and
+    * JVMs, valid as a store tag or a catalog name, and free of `__`, so
+    * never a [[pathFor]] name. */
+  def freshName(kind: String): String = {
+    requireKind(kind)
+    kind + "_" + java.util.UUID.randomUUID.toString.replace("-", "")
+  }
+
+  /** A new, empty directory for one call of a query that writes files
+    * it reads back (a streaming checkpoint, sink output, generations):
+    * under the pid-scoped root, so it goes with the root. */
+  def runDir(kind: String): String =
+    Files.createDirectories(root.resolve(freshName(kind))).toString
 
   /** Return the scratch path for artifact `kind` derived from fixture
     * `dir`, running `build(path)` the first time this JVM asks for it
@@ -85,11 +136,20 @@ object Scratch {
   }
 
   /** Delete `p` and everything under it; a missing path is a no-op. */
-  def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
+  def deleteTree(p: Path): Unit = deleteEach(p, f => Files.deleteIfExists(f))
+
+  /** [[deleteTree]] that skips what it cannot delete and goes on, for
+    * the exit hook and the dead-root sweep: one unremovable file must
+    * not keep the rest of a root on disk. */
+  private def reclaim(p: Path): Unit =
+    try deleteEach(p, f =>
+      try Files.deleteIfExists(f) catch { case _: java.io.IOException => false })
+    catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+
+  private def deleteEach(p: Path, delete: Path => Boolean): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(f => delete(f))
       finally walk.close()
     }
 

@@ -71,9 +71,9 @@ object Clustering {
     * ([[org.apache.spark.mllib.clustering.GraftKMeans]]). Centers are
     * bitwise equal to ml's and labels identical (ClusteringSpec).
     *
-    * Both paths fail on a null embedding (in `array_to_vector`) and on
-    * a NaN or ±Inf one (ml's `checkNonNanVectors`, restated in
-    * [[checkedVector]]).
+    * Both paths fail on a null embedding (in [[features]]) and on a NaN
+    * or ±Inf one (ml's `checkNonNanVectors`, restated in
+    * [[checkedVector]]), with ml's messages.
     *
     * A shuffle-free input is persisted once (tracked in
     * [[graft.core.Caches]]): the gate job, the init and the labelling
@@ -97,7 +97,7 @@ object Clustering {
   def kmeansLabels(df: DataFrame, embCol: String, k: Int,
                    seed: Long = 0L): DataFrame = {
     val rows = if (shuffleFree(df)) graft.core.Caches.track(df) else df
-    val withVec = rows.withColumn("_features", array_to_vector(col(embCol)))
+    val withVec = rows.withColumn("_features", features(embCol))
     val labeled = driverKMeans(withVec, "_features", k, seed, DriverValues) match {
       case Some(model) =>
         val predict = udf((v: Vector) => model.predict(OldVectors.fromML(v)))
@@ -112,6 +112,14 @@ object Clustering {
     }
     labeled.drop("_features")
   }
+
+  /** `embCol` as an ml vector. A null array fails with ml's own
+    * "Vectors MUST NOT be Null" (its `checkNonNanVectors`), which
+    * `array_to_vector` alone would turn into an internal
+    * NullPointerException before ml's check could run. */
+  private[graft] def features(embCol: String): Column =
+    when(col(embCol).isNull, raise_error(lit("Vectors MUST NOT be Null")))
+      .otherwise(array_to_vector(col(embCol)))
 
   /** Most vector values [[driverKMeans]] collects to the driver. */
   private[graft] val DriverValues: Long = 1L << 22
@@ -147,14 +155,14 @@ object Clustering {
   }
 
   /** ml's input contract for KMeans (its `private[ml]`
-    * `DatasetUtils.checkNonNanVectors`): a null vector, or one holding
-    * NaN or ±Infinity, fails the job that reads it. */
+    * `DatasetUtils.checkNonNanVectors`): a vector holding NaN or
+    * ±Infinity fails the job that reads it. A null one already failed
+    * in [[features]]. */
   private def checkedVector(v: Column): Column = {
     val bad = exists(unwrap_udt(v).getField("values"),
       x => x.isNaN || x === Double.PositiveInfinity || x === Double.NegativeInfinity)
-    when(v.isNull, raise_error(lit("Vectors MUST NOT be Null")))
-      .when(bad, raise_error(concat(
-        lit("Vector values MUST NOT be NaN or Infinity, but got "), v.cast("string"))))
+    when(bad, raise_error(concat(
+      lit("Vector values MUST NOT be NaN or Infinity, but got "), v.cast("string"))))
       .otherwise(v)
   }
 
@@ -345,7 +353,7 @@ object Clustering {
     * PCA(10) pre-t-SNE step); returns the input plus a `pca` array
     * column. */
   def pcaProject(df: DataFrame, embCol: String, dims: Int): DataFrame = {
-    val withVec = df.withColumn("_features", array_to_vector(col(embCol)))
+    val withVec = df.withColumn("_features", features(embCol))
     val model = new PCA()
       .setK(dims).setInputCol("_features").setOutputCol("_pca")
       .fit(withVec)

@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, StreamingQueryException}
 import org.apache.spark.sql.types._
+
+import graft.core.Scratch
 
 /** Structured Streaming over the events table (SURVEY.md §2b
   * streaming row — an engine capability the reference lacks).
@@ -16,54 +18,13 @@ import org.apache.spark.sql.types._
   * Scale posture: watermark + windowed aggregation is incremental
   * state (per open window per key), not a full-table hold;
   * flatMapGroupsWithState keeps one session struct per active user.
+  *
+  * Every query here runs over a bounded source through one scaffold:
+  * [[fileStream]] reads a directory one file per micro-batch, [[run]]
+  * starts, drains and stops the query, and files a query writes and
+  * reads back go to a fresh [[graft.core.Scratch.runDir]].
   */
 object EventStreams {
-
-  /** Shared parent of every [[streamingRollup]] generation store.
-    * One JVM-wide shutdown hook reaps THIS JVM's dirs (tracked below)
-    * — per-invocation hooks accumulated unboundedly across bench
-    * iterations — and deletes with java.nio rather than a Hadoop
-    * FileSystem handle, which its own shutdown hook may already have
-    * closed by the time ours runs. Dirs leaked by a crashed/killed
-    * JVM (its hook never ran) are reclaimed by the mtime sweep at
-    * the next invocation, not here: deleting the WHOLE root at exit
-    * would race a concurrently-running second JVM (bench + verify)
-    * mid-stream. */
-  private val RollupRoot = "/tmp/graft_stream_rollup"
-  private val rollupDirsThisJvm =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val rollupHookArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def nioDeleteRecursive(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => try java.nio.file.Files.deleteIfExists(f)
-          catch { case _: java.io.IOException => () })
-      finally walk.close()
-    }
-
-  /** Reclaim generation dirs whose mtime is over an hour old — stale
-    * by construction (a live rollup runs for seconds) and therefore
-    * left by a JVM whose exit hook never fired. */
-  private def sweepStaleRollupDirs(): Unit = synchronized {
-    if (rollupHookArmed.compareAndSet(false, true))
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        rollupDirsThisJvm.forEach { d =>
-          try nioDeleteRecursive(java.nio.file.Paths.get(d))
-          catch { case _: Throwable => () }
-        }))
-    val root = java.nio.file.Paths.get(RollupRoot)
-    if (java.nio.file.Files.isDirectory(root)) {
-      val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-      val ls = java.nio.file.Files.list(root)
-      try ls.forEach { d =>
-        try {
-          if (java.nio.file.Files.getLastModifiedTime(d).toMillis < cutoff)
-            nioDeleteRecursive(d)
-        } catch { case _: java.io.IOException => () }
-      } finally ls.close()
-    }
-  }
 
   /** Raw parquet schema of an events directory/file, read from the
     * footer (a streaming source needs an explicit schema). Derived
@@ -83,7 +44,7 @@ object EventStreams {
     * on exit, so two fixture dirs or two concurrent runs never share a
     * link. */
   private def stageFile(kind: String, dir: String, file: String): String =
-    graft.core.Scratch.buildOnce(kind, dir) { out =>
+    Scratch.buildOnce(kind, dir) { out =>
       import java.nio.file.{Files, Paths}
       val staged = Files.createDirectories(Paths.get(out))
       Files.createSymbolicLink(staged.resolve(file), Paths.get(s"$dir/$file").toAbsolutePath)
@@ -94,8 +55,27 @@ object EventStreams {
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     val staged = stageFile("stream_events", dir, "events.parquet")
     graft.core.Tables.normalizeEventTs(
-      spark.readStream.schema(rawEventsSchema(spark, staged)).parquet(staged))
+      fileStream(spark, rawEventsSchema(spark, staged), staged))
   }
+
+  /** The parquet files in `path` as a stream of one file per
+    * micro-batch, so a source of `parts` files runs `parts` batches. */
+  private[graft] def fileStream(spark: SparkSession, schema: StructType,
+                                path: String): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
+
+  /** Split fixture file `dir/file`, restricted to `keep`, into `parts`
+    * parquet files for [[fileStream]]. Built once per (kind, dir,
+    * parts) per JVM in the pid-scoped scratch root
+    * ([[graft.core.Scratch.buildOnce]]), so two fixture dirs or two
+    * JVMs never share the split files. */
+  private def stageSplits(spark: SparkSession, kind: String, dir: String,
+                          file: String, keep: Column, parts: Int): String =
+    Scratch.buildOnce(s"${kind}_$parts", dir) { out =>
+      spark.read.parquet(s"$dir/$file").where(keep)
+        .repartition(parts)
+        .write.mode("overwrite").parquet(out)
+    }
 
   /** Raw parquet schema of documents (for the streaming-scoring
     * pipeline). */
@@ -109,8 +89,7 @@ object EventStreams {
   /** The documents parquet as a bounded stream (same staging as
     * [[eventsStream]]). */
   def documentsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(DocSchema)
-      .parquet(stageFile("stream_docs", dir, "documents.parquet"))
+    fileStream(spark, DocSchema, stageFile("stream_docs", dir, "documents.parquet"))
 
   /** STREAMING model scoring: the Scorers mapPartitions operator (one
     * backend init per partition) applied to an unbounded document
@@ -133,8 +112,7 @@ object EventStreams {
       .agg(count(lit(1)).as("n"),
         round(sum(col("ppl").cast(DecimalType(30, 10))), 4).cast("double")
           .as("ppl_total"))
-    val name = s"stream_scores_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    runToCompletion(spark, agg, name)
+    runToCompletion(spark, agg, OutputMode.Complete)
   }
 
   /** Tumbling 1-hour windowed aggregation with a 2-hour watermark. */
@@ -167,17 +145,16 @@ object EventStreams {
       .agg(count(lit(1)).as("n"),
         round(sum(col("value").cast(DecimalType(30, 4))), 2).cast("double")
           .as("total_value"))
-    val name = s"stream_enrich_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    runToCompletion(spark, agg, name)
+    runToCompletion(spark, agg, OutputMode.Complete)
   }
 
   /** Stateful operators create one state store instance per shuffle
     * partition and checkpoint each per batch; at test scale that
     * fixed cost dominates, so streaming queries run with a smaller
     * state parallelism (the partition count is pinned per query at
-    * its first batch — batch queries in the same session are
-    * unaffected because the conf is restored immediately). A real
-    * deployment sizes this to keys÷memory, not cores. */
+    * its first batch; [[run]] restores the conf once the query has
+    * stopped). A real deployment sizes this to keys÷memory, not
+    * cores. */
   def withStreamParallelism[T](spark: SparkSession, n: Int)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)
@@ -205,28 +182,33 @@ object EventStreams {
   val RocksDBProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Run a streaming aggregation to completion over the bounded
-    * source and return the final result as a batch DataFrame
-    * (memory sink, complete mode). */
-  def runToCompletion(spark: SparkSession, agg: DataFrame,
-                      name: String): DataFrame = {
+  /** Start `writer`'s query with a stream parallelism of 4, run it
+    * over everything its bounded source holds, and stop it — also when
+    * a batch throws, which `processAllAvailable` rethrows as a
+    * [[StreamingQueryException]]. Returns the stopped query, whose
+    * `recentProgress` stays readable. The only place a query starts. */
+  private[graft] def run(spark: SparkSession,
+                         writer: DataStreamWriter[_]): StreamingQuery =
     withStreamParallelism(spark, 4) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete)
-        .format("memory")
-        .queryName(name)
-        .start()
+      val q = writer.start()
       try q.processAllAvailable()
       finally q.stop()
+      q
     }
+
+  /** Run a streaming query to completion over the bounded source in
+    * output `mode` and return what it emitted as a batch DataFrame
+    * (a memory sink under a fresh name). */
+  def runToCompletion(spark: SparkSession, query: DataFrame,
+                      mode: OutputMode): DataFrame = {
+    val name = Scratch.freshName("stream")
+    run(spark, query.writeStream.outputMode(mode).format("memory").queryName(name))
     spark.table(name)
   }
 
   /** The full streaming hourly pipeline, batch-oracle-comparable. */
-  def streamingHourly(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_hourly_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    runToCompletion(spark, hourlyAgg(eventsStream(spark, dir)), name)
-  }
+  def streamingHourly(spark: SparkSession, dir: String): DataFrame =
+    runToCompletion(spark, hourlyAgg(eventsStream(spark, dir)), OutputMode.Complete)
 
   /** STREAMING distinct-count sketch: the KMV aggregate
     * ([[graft.operators.KmvAgg]] — buffer = the ≤k-value sketch, a
@@ -244,8 +226,7 @@ object EventStreams {
     val hv = eventsStream(spark, dir)
       .select(Sketches.kmvHash(col("user_id")).as("hv"))
     val agg = hv.agg(Sketches.kmvAggCol(col("hv"), k).as("sketch"))
-    val name = s"stream_kmv_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    runToCompletion(spark, agg, name)
+    runToCompletion(spark, agg, OutputMode.Complete)
       .select(Sketches.kmvEstimateFromBuffer(col("sketch"), k): _*)
   }
 
@@ -267,14 +248,13 @@ object EventStreams {
     * construction of the baseline). */
   def streamingDrift(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val name = s"stream_drift_${java.util.UUID.randomUUID.toString.replace("-", "")}"
     val sunk = runToCompletion(spark,
       eventsStream(spark, dir)
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("c"))
         .select(col("window.start").as("hour"), col("event_type"), col("c")),
-      name)
+      OutputMode.Complete)
     // the memory-sink View (MemoryPlan) is not multi-instance: joining
     // an aggregate of it back against it fails attribute dedup. Rebase
     // onto an RDD-backed plan (distributed, no driver materialization)
@@ -320,17 +300,14 @@ object EventStreams {
 
   /** The full streaming sliding-window pipeline, batch-oracle-
     * comparable (every window start is a 30-minute grid point). */
-  def streamingSliding(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_sliding_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    runToCompletion(spark, slidingAgg(eventsStream(spark, dir)), name)
-  }
+  def streamingSliding(spark: SparkSession, dir: String): DataFrame =
+    runToCompletion(spark, slidingAgg(eventsStream(spark, dir)), OutputMode.Complete)
 
   /** Built-in merging session windows on the stream (the declarative
     * alternative to flatMapGroupsWithState sessionize): state is one
     * open session per user, merged/evicted by the engine. Same output
     * shape and oracle as the batch `q_session_window`. */
   def streamingSessionWindow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_sess_${java.util.UUID.randomUUID.toString.replace("-", "")}"
     val agg = eventsStream(spark, dir)
       .withWatermark("ts", "2 hours")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
@@ -339,7 +316,7 @@ object EventStreams {
         date_trunc("second", col("sw.start")).as("sess_start"),
         date_trunc("second", col("sw.end")).as("sess_end"),
         col("n_events"))
-    runToCompletion(spark, agg, name)
+    runToCompletion(spark, agg, OutputMode.Complete)
   }
 
   /** Streaming exact deduplication: dropDuplicates on a semantic key
@@ -347,7 +324,6 @@ object EventStreams {
     * then a per-type count — the streaming twin of
     * `SELECT DISTINCT … GROUP BY`. */
   def streamingDedupCounts(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_dedup_${java.util.UUID.randomUUID.toString.replace("-", "")}"
     val deduped = eventsStream(spark, dir)
       .withWatermark("ts", "2 hours")
       .select(col("user_id"), date_trunc("hour", col("ts")).as("hour"),
@@ -355,7 +331,7 @@ object EventStreams {
       .dropDuplicates("user_id", "hour", "event_type")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_distinct"))
-    runToCompletion(spark, deduped, name)
+    runToCompletion(spark, deduped, OutputMode.Complete)
   }
 
   /** Per-shuffle-partition census of a streaming dedup's STATE,
@@ -374,18 +350,15 @@ object EventStreams {
     * "bounded per-executor state" claim with numbers local mode can
     * actually produce (StreamingSpec asserts max ≈ total/N). */
   def dedupStatePartitionCensus(spark: SparkSession, dir: String): DataFrame = {
-    val run = java.util.UUID.randomUUID.toString.replace("-", "")
-    val ckpt = s"/tmp/graft_state_census/$run/ckpt"
-    val q = eventsStream(spark, dir)
+    val ckpt = s"${Scratch.runDir("state_census")}/ckpt"
+    run(spark, eventsStream(spark, dir)
       .withWatermark("ts", "2 hours")
       .select(col("user_id"), date_trunc("hour", col("ts")).as("hour"),
         col("event_type"), col("ts"))
       .dropDuplicates("user_id", "hour", "event_type")
       .writeStream.outputMode(OutputMode.Append)
       .option("checkpointLocation", ckpt)
-      .format("noop")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      .format("noop"))
     spark.read.format("statestore").load(ckpt)
       .groupBy(col("partition_id"))
       .agg(count(lit(1)).as("n_keys"))
@@ -411,29 +384,14 @@ object EventStreams {
       col("user_id") === col("buy_user") &&
         col("buy_ts") >= col("click_ts") &&
         col("buy_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-    val name = s"stream_join_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    withStreamParallelism(spark, 4) {
-      val q = joined.writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+    runToCompletion(spark, joined, OutputMode.Append)
   }
 
   // -------------------------------------------------- crash recovery
-  /** Split the events fixture into `parts` parquet files so the
-    * file-stream source sees multiple micro-batches
-    * (`maxFilesPerTrigger=1` → one batch per file). Built once per
-    * (dir, parts) per JVM in the pid-scoped scratch root
-    * ([[graft.core.Scratch.buildOnce]]), so two fixture dirs or two
-    * JVMs never share the split files. */
-  private def stageSplits(spark: SparkSession, dir: String, parts: Int): String =
-    graft.core.Scratch.buildOnce(s"stream_splits_$parts", dir) { out =>
-      spark.read.parquet(s"$dir/events.parquet")
-        .repartition(parts)
-        .write.mode("overwrite").parquet(out)
-    }
+  /** The events fixture split into `parts` files, so the file-stream
+    * source runs `parts` micro-batches. */
+  private def eventSplits(spark: SparkSession, dir: String, parts: Int): String =
+    stageSplits(spark, "stream_splits", dir, "events.parquet", lit(true), parts)
 
   /** STREAMING incremental view maintenance — the streaming half of
     * the [[graft.operators.Merge.additiveMerge]] contract: each
@@ -449,46 +407,34 @@ object EventStreams {
     * without ever re-scanning history. */
   def streamingRollup(spark: SparkSession, dir: String,
                       parts: Int = 4): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val splits = stageSplits(spark, dir, parts)
-    // Per-invocation UUID in the root (as streamingEnriched does for its
-    // memory-sink name): a fixture-keyed fixed path would let two
-    // concurrent runs over the same fixture (bench + verify) race on one
-    // directory and read/overwrite each other's generations mid-stream.
-    val root = java.nio.file.Paths.get(RollupRoot,
-      "g_" + java.util.UUID.randomUUID().toString).toString
-    sweepStaleRollupDirs()
-    rollupDirsThisJvm.add(root)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
+    val splits = eventSplits(spark, dir, parts)
+    // a fresh run dir per call: a fixture-keyed path would let two runs
+    // read and overwrite each other's generations mid-stream
+    val root = Scratch.runDir("stream_rollup")
     def rollup(df: DataFrame): DataFrame =
       graft.core.Tables.normalizeEventTs(df)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(DecimalType(30, 4))).as("value_sum"))
     @volatile var lastGen = -1L
-    withStreamParallelism(spark, 4) {
-      val q = spark.readStream.schema(rawEventsSchema(spark, splits))
-        .option("maxFilesPerTrigger", "1").parquet(splits)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val b = rollup(batch)
-          val merged =
-            if (id == 0) b
-            else graft.operators.Merge.additiveMerge(
-              spark.read.parquet(s"$root/gen=${id - 1}").unionByName(b),
-              Seq("event_type", "day"), Seq("n", "value_sum"))
-          merged.write.mode("overwrite").parquet(s"$root/gen=$id")
-          lastGen = math.max(lastGen, id)
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+    run(spark, fileStream(spark, rawEventsSchema(spark, splits), splits)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val b = rollup(batch)
+        val merged =
+          if (id == 0) b
+          else graft.operators.Merge.additiveMerge(
+            spark.read.parquet(s"$root/gen=${id - 1}").unionByName(b),
+            Seq("event_type", "day"), Seq("n", "value_sum"))
+        merged.write.mode("overwrite").parquet(s"$root/gen=$id")
+        lastGen = math.max(lastGen, id)
+      })
     require(lastGen >= 0, "streamingRollup: no batch ran")
     // Superseded generations are dead once the stream finishes — only
     // gen=lastGen backs the returned (lazy) frame, so the rest can go
-    // now; the final generation is reaped at JVM exit.
-    (0L until lastGen).foreach(g => fs.delete(new Path(s"$root/gen=$g"), true))
+    // now; the final generation goes with the scratch root.
+    (0L until lastGen).foreach(g =>
+      Scratch.deleteTree(java.nio.file.Paths.get(s"$root/gen=$g")))
     spark.read.parquet(s"$root/gen=$lastGen")
       .select(col("event_type"), col("day"), col("n"),
         round(col("value_sum"), 2).cast("double").as("total_value"))
@@ -526,75 +472,48 @@ object EventStreams {
                          crashAfterBatch: Long = 1): DataFrame = {
     require(crashAfterBatch < parts,
       s"crash batch $crashAfterBatch must exist among $parts file-batches")
-    val splits = stageSplits(spark, dir, parts)
-    val run = java.util.UUID.randomUUID.toString.replace("-", "")
-    val base = s"/tmp/graft_stream_recovery/$run"
+    val splits = eventSplits(spark, dir, parts)
+    val base = Scratch.runDir("stream_recovery")
     val ckpt = s"$base/ckpt"
     val out = s"$base/out"
     // armed exactly once: the first pass dies at `crashAfterBatch`,
     // the restarted pass sails through
     val crashArmed = new java.util.concurrent.atomic.AtomicBoolean(true)
 
-    def start() = withStreamParallelism(spark, 4) {
-      graft.core.Tables.normalizeEventTs(
-        spark.readStream.schema(rawEventsSchema(spark, splits))
-          .option("maxFilesPerTrigger", 1)
-          .parquet(splits))
-        .select(col("user_id"), date_trunc("hour", col("ts")).as("hour"),
-          col("event_type"))
-        .dropDuplicates("user_id", "hour", "event_type")
-        .writeStream.outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.write.mode("overwrite").parquet(s"$out/b=$id")
-          if (id >= crashAfterBatch && crashArmed.getAndSet(false))
-            throw new RuntimeException(
-              s"injected crash after sink write of batch $id, before commit")
-        }
-        .start()
-    }
+    def dedup() = run(spark, graft.core.Tables.normalizeEventTs(
+        fileStream(spark, rawEventsSchema(spark, splits), splits))
+      .select(col("user_id"), date_trunc("hour", col("ts")).as("hour"),
+        col("event_type"))
+      .dropDuplicates("user_id", "hour", "event_type")
+      .writeStream.outputMode(OutputMode.Append)
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        batch.write.mode("overwrite").parquet(s"$out/b=$id")
+        if (id >= crashAfterBatch && crashArmed.getAndSet(false))
+          throw new RuntimeException(
+            s"injected crash after sink write of batch $id, before commit")
+      })
 
-    val q1 = start()
-    try q1.awaitTermination() // the armed crash terminates this query
-    catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => () }
+    try dedup() // the armed crash terminates this run
+    catch { case _: StreamingQueryException => () }
     require(!crashArmed.get, "injected crash never fired — nothing was recovered")
-
-    val q2 = start() // same checkpoint: replays the uncommitted batch, then finishes
-    try q2.processAllAvailable()
-    finally q2.stop()
+    dedup() // same checkpoint: replays the uncommitted batch, then finishes
 
     spark.read.parquet(out)
       .select(col("user_id"), col("hour"), col("event_type"))
   }
 
-  /** Split the DELTA documents (doc_id % 10 = 0 — the same delta the
-    * incremental-dedup family keys on) into `parts` parquet files for
-    * per-file micro-batches. Built once per (dir, parts) per JVM like
-    * [[stageSplits]]. */
-  private def stageDeltaDocSplits(spark: SparkSession, dir: String,
-                                  parts: Int): String =
-    graft.core.Scratch.buildOnce(s"stream_docdelta_$parts", dir) { out =>
-      spark.read.parquet(s"$dir/documents.parquet")
-        .where(col("doc_id") % 10 === 0)
-        .repartition(parts)
-        .write.mode("overwrite").parquet(out)
-    }
+  /** The DELTA documents (doc_id % 10 = 0 — the same delta the
+    * incremental-dedup family keys on) split into `parts` files. */
+  private def docDeltaSplits(spark: SparkSession, dir: String, parts: Int): String =
+    stageSplits(spark, "stream_docdelta", dir, "documents.parquet",
+      col("doc_id") % 10 === 0, parts)
 
   private val VecSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
-  /** The delta embeddings (vec_id % 7 = 3) split like
-    * [[stageDeltaDocSplits]]. */
-  private def stageDeltaVecSplits(spark: SparkSession, dir: String,
-                                  parts: Int): String =
-    graft.core.Scratch.buildOnce(s"stream_vecdelta_$parts", dir) { out =>
-      spark.read.parquet(s"$dir/embeddings.parquet")
-        .where(col("vec_id") % 7 === 3)
-        .repartition(parts)
-        .write.mode("overwrite").parquet(out)
-    }
 
   /** STREAMING ANN INGEST — the persisted IVF index's day-2 absorb
     * ([[graft.operators.Similarity.IvfStore.absorb]]) deployed as a
@@ -632,7 +551,7 @@ object EventStreams {
     * The start-of-run sweep reclaims EVERY stale `stream_ivf_*`
     * generation under the store root (not just this JVM's — min-of-5
     * bench, correctness gate, and ladder rungs run in separate
-    * processes); safe because these UUID-run-scoped tags are owned
+    * processes); safe because these fresh run-scoped tags are owned
     * exclusively by this operator. */
   def streamingIvfIngest(spark: SparkSession, dir: String,
                          parts: Int = 3): DataFrame = {
@@ -648,8 +567,7 @@ object EventStreams {
     }
     val embs = graft.core.Tables.embeddings(spark, dir)
     val day0 = embs.where(col("vec_id") % 7 =!= 3)
-    val run = java.util.UUID.randomUUID.toString.replace("-", "")
-    val genTag = s"stream_ivf_${run}_g"
+    val genTag = Scratch.freshName("stream_ivf") + "_g"
     // The day-0 index is the SETUP artifact the stream ingests into —
     // built once per corpus per JVM (`once`, the same convention
     // the batch day-2 twin `q_embed_ivf_day2` and the signature-store
@@ -663,29 +581,24 @@ object EventStreams {
         day0Tag)
     }
     def tagOf(g: Int): String = if (g == 0) day0Tag else genTag + g
-    val staged = stageDeltaVecSplits(spark, dir, parts)
+    // the delta embeddings (vec_id % 7 = 3), one file per batch
+    val staged = stageSplits(spark, "stream_vecdelta", dir,
+      "embeddings.parquet", col("vec_id") % 7 === 3, parts)
     val gen = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = withStreamParallelism(spark, 4) {
-      spark.readStream.schema(VecSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            val g = gen.getAndIncrement()
-            Similarity.IvfStore.absorb(spark, tagOf(g), tagOf(g + 1),
-              batch.select(col("vec_id"), col("embedding"), col("label")),
-              "vec_id", "embedding", "label")
-            // g+1 is fully materialized (absorb's writes are actions);
-            // reclaim the run-scoped generation it superseded — never
-            // the shared day-0 base.
-            if (g > 0) Similarity.IvfStore.vacuum(spark, tagOf(g))
-          }
+    run(spark, fileStream(spark, VecSchema, staged)
+      .writeStream.outputMode(OutputMode.Append)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) {
+          val g = gen.getAndIncrement()
+          Similarity.IvfStore.absorb(spark, tagOf(g), tagOf(g + 1),
+            batch.select(col("vec_id"), col("embedding"), col("label")),
+            "vec_id", "embedding", "label")
+          // g+1 is fully materialized (absorb's writes are actions);
+          // reclaim the run-scoped generation it superseded — never
+          // the shared day-0 base.
+          if (g > 0) Similarity.IvfStore.vacuum(spark, tagOf(g))
         }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
+      })
     val queries = graft.core.Tables.embeddings(spark, dir)
       .where(col("vec_id") < 5)
     Similarity.ivfTopKFromStore(spark, queries, tagOf(gen.get()),
@@ -716,36 +629,28 @@ object EventStreams {
                           threshold: Double = 0.5,
                           parts: Int = 4): DataFrame = {
     import graft.operators.Dedup
-    val staged = stageDeltaDocSplits(spark, dir, parts)
-    val run = java.util.UUID.randomUUID.toString.replace("-", "")
-    val out = s"/tmp/graft_stream_storeprobe/$run"
+    val staged = docDeltaSplits(spark, dir, parts)
+    val out = Scratch.runDir("stream_storeprobe")
     val storeBanded = Dedup.SignatureStore.banded(spark, tag)
     val storeSets = Dedup.SignatureStore.sets(spark, tag)
-    val q = withStreamParallelism(spark, 4) {
-      spark.readStream.schema(DocSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .select(col("doc_id"), col("text"))
-        .writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val nb = Dedup.bandedSignatures(batch, "doc_id", "text", n, k, bands)
-          val cands = Dedup.probeSignatureStore(storeBanded, nb, "doc_id")
-            .distinct()
-          val sets = storeSets.unionByName(
-            Dedup.shingleSets(batch, "doc_id", "text", n))
-          // batch-bounded candidates: broadcast the measured-small
-          // pair side so the STORE-sized sets frame is scanned, not
-          // re-shuffled by id twice per micro-batch
-          Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")
-            .where(col("jaccard") >= threshold)
-            .select(col("id_a"), col("id_b"),
-              round(col("jaccard"), 6).as("jaccard"))
-            .write.mode("overwrite").parquet(s"$out/b=$id")
-        }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
+    run(spark, fileStream(spark, DocSchema, staged)
+      .select(col("doc_id"), col("text"))
+      .writeStream.outputMode(OutputMode.Append)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val nb = Dedup.bandedSignatures(batch, "doc_id", "text", n, k, bands)
+        val cands = Dedup.probeSignatureStore(storeBanded, nb, "doc_id")
+          .distinct()
+        val sets = storeSets.unionByName(
+          Dedup.shingleSets(batch, "doc_id", "text", n))
+        // batch-bounded candidates: broadcast the measured-small
+        // pair side so the STORE-sized sets frame is scanned, not
+        // re-shuffled by id twice per micro-batch
+        Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")
+          .where(col("jaccard") >= threshold)
+          .select(col("id_a"), col("id_b"),
+            round(col("jaccard"), 6).as("jaccard"))
+          .write.mode("overwrite").parquet(s"$out/b=$id")
+      })
     spark.read.parquet(out).select("id_a", "id_b", "jaccard")
   }
 
@@ -777,62 +682,54 @@ object EventStreams {
                           threshold: Double = 0.5,
                           parts: Int = 4): (DataFrame, DataFrame) = {
     import graft.operators.Dedup
-    val staged = stageDeltaDocSplits(spark, dir, parts)
-    val run = java.util.UUID.randomUUID.toString.replace("-", "")
-    val out = s"/tmp/graft_stream_curate/$run"
+    val staged = docDeltaSplits(spark, dir, parts)
+    val out = Scratch.runDir("stream_curate")
     val stateFam = spark.read.parquet(s"$statePath/fam")
     val storeBanded = spark.read.parquet(s"$statePath/banded")
     val storeSets = spark.read.parquet(s"$statePath/sets")
-    val q = withStreamParallelism(spark, 4) {
-      spark.readStream.schema(DocSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .select(col("doc_id"), col("text"), col("lang"))
-        .writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val bf = batch.groupBy(md5(col("text")).as("digest"))
-            .agg(min(col("doc_id")).as("dmin"),
-              min_by(col("lang"), col("doc_id")).as("dlang"),
-              min_by(col("text"), col("doc_id")).as("dtext"))
-            .persist()
+    run(spark, fileStream(spark, DocSchema, staged)
+      .select(col("doc_id"), col("text"), col("lang"))
+      .writeStream.outputMode(OutputMode.Append)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val bf = batch.groupBy(md5(col("text")).as("digest"))
+          .agg(min(col("doc_id")).as("dmin"),
+            min_by(col("lang"), col("doc_id")).as("dlang"),
+            min_by(col("text"), col("doc_id")).as("dtext"))
+          .persist()
+        try {
+          bf.write.mode("overwrite").parquet(s"$out/fams/b=$id")
+          // only digests UNSEEN by the v0 state probe the store —
+          // a re-ingested family's pairs are already in the
+          // persisted pair set
+          val newCand = bf.join(stateFam.select(col("digest")),
+            Seq("digest"), "left_anti").persist()
           try {
-            bf.write.mode("overwrite").parquet(s"$out/fams/b=$id")
-            // only digests UNSEEN by the v0 state probe the store —
-            // a re-ingested family's pairs are already in the
-            // persisted pair set
-            val newCand = bf.join(stateFam.select(col("digest")),
-              Seq("digest"), "left_anti").persist()
-            try {
-              val reps = newCand.select(col("dmin").as("doc_id"),
-                col("dtext").as("text"))
-              val nb = Dedup.bandedSignatures(reps, "doc_id", "text",
-                n, k, bands)
-              val cands = Dedup.probeSignatureStore(storeBanded, nb,
-                "doc_id").distinct()
-              val sets = storeSets.unionByName(
-                Dedup.shingleSets(reps, "doc_id", "text", n))
-              // map the batch-side id back to its digest (delta and
-              // store id spaces are disjoint, so exactly one side
-              // resolves). Adaptive verification: the candidate set is
-              // batch-bounded, so the v0-store-sized sets frame is
-              // scanned in place instead of shuffled twice per batch.
-              Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")
-                .where(col("jaccard") >= threshold)
-                .join(broadcast(newCand.select(col("dmin").as("id_a"),
-                  col("digest").as("dg_a"))), Seq("id_a"), "left")
-                .join(broadcast(newCand.select(col("dmin").as("id_b"),
-                  col("digest").as("dg_b"))), Seq("id_b"), "left")
-                .select(coalesce(col("dg_a"), col("dg_b")).as("digest"),
-                  when(col("dg_a").isNotNull, col("id_b"))
-                    .otherwise(col("id_a")).as("store_id"))
-                .write.mode("overwrite").parquet(s"$out/pairs/b=$id")
-            } finally newCand.unpersist()
-          } finally bf.unpersist()
-        }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
+            val reps = newCand.select(col("dmin").as("doc_id"),
+              col("dtext").as("text"))
+            val nb = Dedup.bandedSignatures(reps, "doc_id", "text",
+              n, k, bands)
+            val cands = Dedup.probeSignatureStore(storeBanded, nb,
+              "doc_id").distinct()
+            val sets = storeSets.unionByName(
+              Dedup.shingleSets(reps, "doc_id", "text", n))
+            // map the batch-side id back to its digest (delta and
+            // store id spaces are disjoint, so exactly one side
+            // resolves). Adaptive verification: the candidate set is
+            // batch-bounded, so the v0-store-sized sets frame is
+            // scanned in place instead of shuffled twice per batch.
+            Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")
+              .where(col("jaccard") >= threshold)
+              .join(broadcast(newCand.select(col("dmin").as("id_a"),
+                col("digest").as("dg_a"))), Seq("id_a"), "left")
+              .join(broadcast(newCand.select(col("dmin").as("id_b"),
+                col("digest").as("dg_b"))), Seq("id_b"), "left")
+              .select(coalesce(col("dg_a"), col("dg_b")).as("digest"),
+                when(col("dg_a").isNotNull, col("id_b"))
+                  .otherwise(col("id_a")).as("store_id"))
+              .write.mode("overwrite").parquet(s"$out/pairs/b=$id")
+          } finally newCand.unpersist()
+        } finally bf.unpersist()
+      })
     (spark.read.parquet(s"$out/fams")
        .select("digest", "dmin", "dlang", "dtext"),
      spark.read.parquet(s"$out/pairs").select("digest", "store_id"))
@@ -875,17 +772,9 @@ object EventStreams {
       out.iterator
     }
 
-    val name = s"sessions_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    withStreamParallelism(spark, 4) {
-      val q = evs.groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(fn)
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+    runToCompletion(spark, evs.groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout)(fn).toDF(), OutputMode.Append)
   }
 
   /** [[sessionize]] re-expressed on the Spark-4 `transformWithState`
@@ -933,18 +822,10 @@ object EventStreams {
       }
     }
 
-    val name = s"sessions_tws_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    withStreamParallelism(spark, 4) {
-      withStateStoreProvider(spark, RocksDBProvider) {
-        val q = evs.groupByKey(_.user_id)
-          .transformWithState(new SessionProc, TimeMode.None(),
-            OutputMode.Append())
-          .writeStream.outputMode(OutputMode.Append)
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+    withStateStoreProvider(spark, RocksDBProvider) {
+      runToCompletion(spark, evs.groupByKey(_.user_id)
+        .transformWithState(new SessionProc, TimeMode.None(),
+          OutputMode.Append()).toDF(), OutputMode.Append)
     }
-    spark.table(name)
   }
 }

@@ -110,12 +110,11 @@ class ClusteringSpec extends AnyFunSuite {
   // ---- driver-side Lloyd's: exact against plain ml.KMeans ----------
 
   import org.apache.spark.ml.clustering.KMeans
-  import org.apache.spark.ml.functions.array_to_vector
   import org.apache.spark.sql.DataFrame
 
   /** `pts` with ml's feature column, as kmeansLabels builds it. */
   private def withFeatures(pts: DataFrame) =
-    pts.withColumn("_features", array_to_vector($"embedding"))
+    pts.withColumn("_features", Clustering.features("embedding"))
 
   private def plainKMeans(pts: DataFrame, k: Int, seed: Long) =
     new KMeans().setK(k).setSeed(seed).setFeaturesCol("_features")
@@ -205,22 +204,39 @@ class ClusteringSpec extends AnyFunSuite {
     assert(Clustering.driverKMeans(withFeatures(pts), "_features", 4, 0L, 3200L * 4).isDefined)
   }
 
+  private def assertFailsWith(what: String, message: String)(body: => Any): Unit = {
+    val e = intercept[Exception] {
+      try body finally graft.core.Caches.releaseAll()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(message)),
+      s"$what: ${e.getMessage}")
+  }
+
   test("kmeansLabels: a null or NaN embedding fails the fit") {
-    // a null array already fails in array_to_vector, before ml's check;
-    // NaN and ±Infinity fail ml's input check
     for ((what, bad, message) <- Seq[(String, Array[Float], String)](
-           ("null", null, "is null"),
+           ("null", null, "Vectors MUST NOT be Null"),
            ("NaN", Array(Float.NaN, 1f), "MUST NOT be NaN or Infinity"),
            ("Infinity", Array(Float.NegativeInfinity, 1f), "MUST NOT be NaN or Infinity"))) {
       val pts = ((0L, bad) +: (1L until 100L).map(i =>
         (i, Array((i % 5).toFloat, (i % 7).toFloat)))).toDF("vec_id", "embedding")
-      val e = intercept[Exception] {
-        try Clustering.kmeansLabels(pts, "embedding", 3, 0L).collect()
-        finally graft.core.Caches.releaseAll()
+      assertFailsWith(s"$what embedding", message) {
+        Clustering.kmeansLabels(pts, "embedding", 3, 0L).collect()
       }
-      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-          .exists(t => String.valueOf(t.getMessage).contains(message)),
-        s"$what embedding: ${e.getMessage}")
+    }
+    // fewer rows than dimensions: the input ml.KMeans fits itself
+    val wide = ((0L, null: Array[Float]) +: (1L until 4L).map(i =>
+      (i, Array.tabulate(8)(j => ((i * 7 + j) % 5).toFloat)))).toDF("vec_id", "embedding")
+    assertFailsWith("null embedding on the ml path", "Vectors MUST NOT be Null") {
+      Clustering.kmeansLabels(wide, "embedding", 2, 0L).collect()
+    }
+  }
+
+  test("pcaProject: a null embedding fails with ml's message") {
+    val pts = ((0L, null: Array[Float]) +: (1L until 50L).map(i =>
+      (i, Array((i % 5).toFloat, (i % 7).toFloat, (i % 3).toFloat)))).toDF("vec_id", "embedding")
+    assertFailsWith("null embedding", "Vectors MUST NOT be Null") {
+      Clustering.pcaProject(pts, "embedding", 2).collect()
     }
   }
 

@@ -42,7 +42,12 @@ class OracleParitySpec extends AnyFunSuite {
     // driver union-find resolves their groups
     "q_curate_pipeline", "q_curate_sink", "q_curate_funnel",
     "q_curate_incremental", "q_stream_curate", "q_dedup_clusters",
-    "q_split_leakage_safe")
+    "q_split_leakage_safe",
+    // every other query on the streaming scaffold (EventStreams.run)
+    "q_stream_hourly", "q_stream_drift", "q_stream_kmv", "q_stream_scores",
+    "q_sessionize", "q_sessionize_tws", "q_stream_session",
+    "q_stream_enrich", "q_stream_sliding", "q_stream_dedup",
+    "q_stream_recovery", "q_stream_join", "q_stream_rollup")
 
   private val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR_VERIFY",
     "/root/testdata/sf0.01")

@@ -93,4 +93,34 @@ class StoreSpec extends AnyFunSuite {
     Scratch.buildOnce("spec_inj", a)(_ => builds.incrementAndGet(): Unit)
     assert(builds.get == 2, "buildOnce ran twice for one dir")
   }
+
+  test("the scratch sweep reclaims only this user's dead, hour-old roots") {
+    import java.nio.file.{Files, Path}
+    import java.nio.file.attribute.FileTime
+    import graft.core.Scratch
+    val parent = Files.createTempDirectory("graft_sweep_spec")
+    val user = sys.props.getOrElse("user.name", "anon")
+    // above Linux's largest pid_max (2^22), so no live process has them
+    val (dead1, dead2) = (4194400L, 4194401L)
+    assume(ProcessHandle.of(dead1).isEmpty && ProcessHandle.of(dead2).isEmpty)
+    val hourAgo = FileTime.fromMillis(System.currentTimeMillis() - 2L * 60 * 60 * 1000)
+    def root(owner: String, pid: Long, old: Boolean): Path = {
+      val d = Files.createDirectories(parent.resolve(s"graft_scratch_${owner}_$pid"))
+      Files.write(Files.createDirectories(d.resolve("run")).resolve("f"), Array[Byte](1))
+      if (old) Files.setLastModifiedTime(d, hourAgo)
+      d
+    }
+    val deadOld = root(user, dead1, old = true)
+    val liveOld = root(user, ProcessHandle.current().pid(), old = true)
+    val deadFresh = root(user, dead2, old = false)
+    // user `<user>_1`: its root also starts with this user's prefix
+    val otherUser = root(user + "_1", dead1, old = true)
+    try {
+      Scratch.sweepDeadRoots(parent)
+      assert(!Files.exists(deadOld), "a dead JVM's hour-old root was kept")
+      assert(Files.exists(liveOld), "a live JVM's root was reclaimed")
+      assert(Files.exists(deadFresh), "a root under an hour old was reclaimed")
+      assert(Files.exists(otherUser), "another user's root was reclaimed")
+    } finally Scratch.deleteTree(parent)
+  }
 }

@@ -198,6 +198,52 @@ class StreamingSpec extends AnyFunSuite {
     graft.core.Caches.releaseAll()
   }
 
+  test("streaming runs read only scratch files and leave the session as they found it") {
+    import java.nio.file.Paths
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import graft.core.Scratch
+    val dir = TestSpark.SfDir
+    val root = Paths.get(Scratch.pathFor("spec", dir)).getParent
+    val partsKey = "spark.sql.shuffle.partitions"
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val provider = spark.conf.getOption(providerKey)
+    val parts = spark.conf.get(partsKey)
+    spark.conf.set(partsKey, "3") // not the 4 a stream runs with
+    def restored(what: String): Unit = {
+      assert(spark.streams.active.isEmpty, s"$what left a query running")
+      assert(spark.conf.get(partsKey) == "3", s"$what left $partsKey changed")
+      assert(spark.conf.getOption(providerKey) == provider,
+        s"$what left the state-store provider changed")
+    }
+    def scratchOnly(what: String, df: DataFrame): Unit = {
+      val files = df.inputFiles.toSeq.map(f => Paths.get(new java.net.URI(f)))
+      assert(files.nonEmpty && files.forall(_.startsWith(root)),
+        s"$what reads outside $root: ${files.filterNot(_.startsWith(root))}")
+      restored(what)
+    }
+    try {
+      scratchOnly("streamingRollup", EventStreams.streamingRollup(spark, dir, parts = 2))
+      scratchOnly("crashRecoveryDedup", EventStreams.crashRecoveryDedup(spark, dir))
+      SparkEntry.queries("q_stream_dedup_store")(spark, dir) // persists the store
+      scratchOnly("streamingStoreProbe", EventStreams.streamingStoreProbe(spark, dir,
+        graft.core.Store.tag("inc", dir), n = 3, k = 12, bands = 4, parts = 2))
+      SparkEntry.queries("q_stream_curate")(spark, dir) // persists the v0 state
+      val (fams, pairs) = EventStreams.streamingCurateFeed(spark, dir,
+        Scratch.pathFor("curate_v0_state", dir), n = 3, k = 12, bands = 4, parts = 2)
+      scratchOnly("streamingCurateFeed's families", fams)
+      scratchOnly("streamingCurateFeed's pairs", pairs)
+      intercept[StreamingQueryException] {
+        EventStreams.run(spark, EventStreams.eventsStream(spark, dir).writeStream
+          .foreachBatch { (_: DataFrame, _: Long) => throw new RuntimeException("batch failed") })
+      }
+      restored("a batch that throws")
+    } finally {
+      spark.conf.set(partsKey, parts)
+      graft.core.Caches.releaseAll()
+    }
+  }
+
   test("sessionize closes sessions on the 30-min gap") {
     val sessions = EventStreams.sessionize(spark, TestSpark.SfDir, 30)
     assert(sessions.count() > 0)
