@@ -1,6 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.core.Harness
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -12,44 +15,31 @@ object Verify {
   def dump(spark: SparkSession, sfDir: String, outDir: String,
            only: Option[Set[String]]): Unit = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    Harness.select(only).foreach { case (name, build) =>
       // start/finish markers with wall-clock: a query that stalls at a
       // big SF is identifiable from the dump log alone (last start
       // without a done), and the per-query seconds map the ladder cost
       System.err.println(s"[verify] start $name")
-      val t0 = System.nanoTime()
       // an earlier dump's result must not survive a failed run: the
-      // checker would judge it as this run's output
+      // checker would judge it as this run's output. Deleted before the
+      // run, not in the act, since a throwing builder never reaches it
       graft.core.Scratch.deleteTree(Paths.get(outDir, name))
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        System.err.println(
-          f"[verify] done $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      Harness.run(spark, sfDir, build)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")) match {
+        case Right(r) => System.err.println(f"[verify] done $name ${r.wallS}%.1f s")
+        case Left(e)  => System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally graft.core.Caches.releaseAll() // operator caches per query
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir,
+      SparkEntry.oracleSql.filter { case (k, _) => only.forall(_.contains(k)) })
+  }
+
+  /** Write `sql` (query name → DuckDB SQL) as `outDir/oracle_sql.json`,
+    * the map `tools/check.py` and the driver `json.load`. */
+  def writeOracleSql(outDir: String, sql: Map[String, String]): Unit = {
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().createObjectNode()
+    sql.toSeq.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
+    Files.writeString(Paths.get(outDir, "oracle_sql.json"), node.toString)
   }
 
   def main(args: Array[String]): Unit = {

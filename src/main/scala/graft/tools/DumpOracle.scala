@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 /** Write the FULL registered oracle-SQL map as oracle_sql.json
   * WITHOUT running any query — lets a resumed / chunked Verify run
   * (whose own dump filters the map to its SPARK_GRAFT_ONLY subset)
@@ -15,18 +13,7 @@ object DumpOracle {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     new java.io.File(outDir).mkdirs()
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.Verify.writeOracleSql(outDir, graft.SparkEntry.oracleSql)
     println(s"[dump-oracle] ${graft.SparkEntry.oracleSql.size} entries -> $outDir/oracle_sql.json")
   }
 }

@@ -30,21 +30,15 @@ object ExplainDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.Tables.localSession(cpus.toInt)
 
-    val selected = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    selected.foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
+    graft.core.Harness.select(only).foreach { case (name, build) =>
+      graft.core.Harness.run(spark, sfDir, build) { df =>
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(outDir.resolve(s"$name.txt"),
           txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        System.err.println(s"[explain] $name ok")
-      } catch { case e: Throwable =>
-        System.err.println(s"[explain] $name FAILED: ${e.getMessage}")
-      } finally {
-        graft.core.Caches.releaseAll()
-        spark.catalog.clearCache()
+      } match {
+        case Right(_) => System.err.println(s"[explain] $name ok")
+        case Left(e)  => System.err.println(s"[explain] $name FAILED: ${e.getMessage}")
       }
     }
     spark.stop()

@@ -213,6 +213,21 @@ class DedupSpec extends AnyFunSuite {
     assert(itersCliques <= 2, s"cliques took $itersCliques rounds")
   }
 
+  test("an Observation on an eager localCheckpoint reaches Observed.longOr without its recount") {
+    // CC's gate, its propagation loop and jaccardForPairsAdaptive ride
+    // their counts on a checkpoint's observed metric; the recount is
+    // only the fallback for a metric that never arrives
+    def observedRows(df: org.apache.spark.sql.DataFrame): Long = {
+      val obs = org.apache.spark.sql.Observation()
+      df.observe(obs, sum(lit(1L)).as("n")).localCheckpoint()
+      graft.core.Observed.longOr(obs, "n",
+        fail("the observed metric never arrived; the recount ran"))
+    }
+    assert(observedRows(spark.range(1000).toDF()) == 1000L)
+    // sum over zero rows is null, read as 0
+    assert(observedRows(spark.range(10).where("id < 0").toDF()) == 0L)
+  }
+
   test("incremental dedup == full run restricted to delta-touching pairs; corpus never shuffles") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog today"),

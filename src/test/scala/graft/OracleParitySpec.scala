@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Local replica of the driver's DuckDB correctness gate for the
@@ -70,14 +68,16 @@ class OracleParitySpec extends AnyFunSuite {
     assume(oracleEnabled,
       "python3+duckdb or test data unavailable (or SPARK_GRAFT_ORACLE=0): " +
         "skipping parity gate")
-    val out = Files.createTempDirectory("graft_oracle_gate").toString
-    Verify.dump(spark, sfDir, out, Some(churn))
-    import scala.sys.process._
-    val log = new StringBuilder
-    val code = Process(Seq("python3", "tools/check.py", out, sfDir))
-      .!(ProcessLogger(l => log.append(l).append('\n'),
-         l => log.append(l).append('\n')))
-    assert(code == 0, s"oracle parity gate failed:\n$log")
-    assert(log.toString.contains("ALL OK"), log.toString)
+    TestSpark.withTempDir("graft_oracle_gate") { d =>
+      val out = d.toString
+      Verify.dump(spark, sfDir, out, Some(churn))
+      import scala.sys.process._
+      val log = new StringBuilder
+      val code = Process(Seq("python3", "tools/check.py", out, sfDir))
+        .!(ProcessLogger(l => log.append(l).append('\n'),
+           l => log.append(l).append('\n')))
+      assert(code == 0, s"oracle parity gate failed:\n$log")
+      assert(log.toString.contains("ALL OK"), log.toString)
+    }
   }
 }

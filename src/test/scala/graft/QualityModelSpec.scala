@@ -76,6 +76,19 @@ class QualityModelSpec extends AnyFunSuite {
     nGot.foreach(r => assert(r.isNullAt(0) == r.isNullAt(1)))
   }
 
+  test("GD rounds past the first two compile no new classes (weights are a reference object)") {
+    // with the weights inlined as literals every round with new weights
+    // emits new generated source and compiles it; the reference-object
+    // weights make the source round-invariant, so once rounds 1-2 have
+    // compiled, rounds 3-4 of a second fit are all code-cache hits
+    // (lr 5 is this test's own: no other fit here has met these weights)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    QualityModel.trainLogistic(fixture, cols, "y", lr = 5.0, rounds = 2)
+    val before = compiles.getCount
+    QualityModel.trainLogistic(fixture, cols, "y", lr = 5.0, rounds = 4)
+    assert(compiles.getCount - before == 0L)
+  }
+
   test("trainLogistic weights are unchanged by the reference-object z") {
     // frozen expectation from the literal-fold implementation (r14
     // HEAD, same fixture/lr/rounds): the codegen-cache optimization

@@ -85,25 +85,26 @@ class SelectionFusionSpec extends AnyFunSuite {
     val famText = "k1 k2 k3 k4 k5 k6"          // shingles: 4
     val overlap = "k1 k2 k3 k4 u1 u2"          // shares 2 of its 4
     val unique  = "z1 z2 z3 z4 z5 z6"          // 4, all its own
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_novelty_").toString
-    Seq((1L, famText), (2L, famText), (3L, overlap), (4L, unique))
-      .toDF("doc_id", "text")
-      .select($"doc_id", $"text", lit("en").as("lang"),
-        lit("src0").as("source"), length($"text").cast("long").as("n_chars"))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    TestSpark.withTempDir("graft_novelty_") { d =>
+      val dir = d.toString
+      Seq((1L, famText), (2L, famText), (3L, overlap), (4L, unique))
+        .toDF("doc_id", "text")
+        .select($"doc_id", $"text", lit("en").as("lang"),
+          lit("src0").as("source"), length($"text").cast("long").as("n_chars"))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
-    val out = SparkEntry.queries("q_ngram_novelty")(spark, dir)
-      .collect().map(r =>
-        r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
-    // exact duplicates inherit their family's numbers verbatim
-    assert(out(1L) == out(2L), s"family members disagree: $out")
-    // the family's 4 shingles: 2 also live in doc 3 -> 2 novel
-    assert(out(1L) == ((4L, 2L, 0.5)), s"family: ${out(1L)}")
-    // doc 3: 4 shingles, the 2 shared ones are seen in 2 families
-    assert(out(3L) == ((4L, 2L, 0.5)), s"overlap: ${out(3L)}")
-    // fully-unique doc: novelty 1
-    assert(out(4L) == ((4L, 4L, 1.0)), s"unique: ${out(4L)}")
+      val out = SparkEntry.queries("q_ngram_novelty")(spark, dir)
+        .collect().map(r =>
+          r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
+      // exact duplicates inherit their family's numbers verbatim
+      assert(out(1L) == out(2L), s"family members disagree: $out")
+      // the family's 4 shingles: 2 also live in doc 3 -> 2 novel
+      assert(out(1L) == ((4L, 2L, 0.5)), s"family: ${out(1L)}")
+      // doc 3: 4 shingles, the 2 shared ones are seen in 2 families
+      assert(out(3L) == ((4L, 2L, 0.5)), s"overlap: ${out(3L)}")
+      // fully-unique doc: novelty 1
+      assert(out(4L) == ((4L, 4L, 1.0)), s"unique: ${out(4L)}")
+    }
 
     // and on the real fixture: ranges hold and n_shingles agrees with
     // a direct distinct-shingle count

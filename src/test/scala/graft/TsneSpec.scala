@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -90,18 +89,19 @@ class TsneSpec extends AnyFunSuite {
     val df = clustered
     val coords = Tsne.project(df, "vec_id", "embedding", iters = 120)
       .join(df.select(col("vec_id"), col("label")), "vec_id")
-    val path = Files.createTempDirectory("graft_plot")
-      .resolve("scatter.png").toString
-    PlotSink.scatterPng(coords, "x", "y", "label", path,
-      width = 320, height = 240)
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    // our own header parser must agree it is a real 320×240 color PNG
-    assert(ImageCodec.parseHeader(bytes) == ("png", 320, 240, 3))
-    // content check: the plot contains the white background plus at
-    // least 3 distinct marker colors (one per label)
-    val img = javax.imageio.ImageIO.read(new java.io.File(path))
-    val colors = (for (x <- 0 until 320; y <- 0 until 240)
-      yield img.getRGB(x, y) & 0xffffff).toSet
-    assert(colors.size >= 4, s"expected background + 3 label colors, got ${colors.size}")
+    TestSpark.withTempDir("graft_plot") { d =>
+      val path = d.resolve("scatter.png").toString
+      PlotSink.scatterPng(coords, "x", "y", "label", path,
+        width = 320, height = 240)
+      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+      // our own header parser must agree it is a real 320×240 color PNG
+      assert(ImageCodec.parseHeader(bytes) == ("png", 320, 240, 3))
+      // content check: the plot contains the white background plus at
+      // least 3 distinct marker colors (one per label)
+      val img = javax.imageio.ImageIO.read(new java.io.File(path))
+      val colors = (for (x <- 0 until 320; y <- 0 until 240)
+        yield img.getRGB(x, y) & 0xffffff).toSet
+      assert(colors.size >= 4, s"expected background + 3 label colors, got ${colors.size}")
+    }
   }
 }
