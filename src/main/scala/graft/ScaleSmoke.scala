@@ -267,7 +267,7 @@ object ScaleSmoke {
         val chain = spark.range(0, 4L * n)
           .selectExpr("id AS id_a", "id + 1 AS id_b")
         val (labels, iters) = graft.operators.Dedup
-          .labelPropagationWithIters(chain, "id_a", "id_b", 50)
+          .connectedComponentsWithIters(chain, "id_a", "id_b", 50, 0L)
         println(f"""{"scale_smoke":"cc_chain_iters","mult":$n,"iters":$iters}""")
         labels.count()
       }

@@ -3,7 +3,8 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 
 /** Reader for observed metrics attached to an action that has ALREADY
-  * completed (a loop's eager localCheckpoint, a funnel's count pass).
+  * completed (CC's above-gate rounds' eager localCheckpoint,
+  * `q_curate_funnel`'s count pass; the size gates use [[LocalTier]]).
   * The listener that publishes observed metrics fires asynchronously
   * after the action, so the read polls briefly; if it never fires (a
   * Spark listener regression), the caller's recount runs instead —

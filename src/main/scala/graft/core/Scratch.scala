@@ -27,7 +27,8 @@ import java.nio.file.{Files, Path, Paths}
   * Besides the build-once artifacts, the root holds per-call run
   * directories ([[runDir]]): a streaming query's checkpoint, sink
   * output or generations, fresh on every call so two runs in one JVM
-  * never share them, and reclaimed with the root.
+  * never share them, and removed by the per-query release
+  * ([[Caches.releaseAll]]) or, at the latest, with the root.
   *
   * Scale posture: on a real lake these artifacts are the ingest-time
   * layout jobs (partitioning, sort-clustering, bloom embedding) paid
@@ -121,10 +122,14 @@ object Scratch {
   }
 
   /** A new, empty directory for one call of a query that writes files
-    * it reads back (a streaming checkpoint, sink output, generations):
-    * under the pid-scoped root, so it goes with the root. */
-  def runDir(kind: String): String =
-    Files.createDirectories(root.resolve(freshName(kind))).toString
+    * it reads back (a streaming checkpoint, sink output, generations),
+    * removed by the next [[Caches.releaseAll]] (the call's lazy frames
+    * read it until then) or with the root. */
+  def runDir(kind: String): String = {
+    val p = Files.createDirectories(root.resolve(freshName(kind)))
+    Caches.onRelease(() => reclaim(p))
+    p.toString
+  }
 
   /** Return the scratch path for artifact `kind` derived from fixture
     * `dir`, running `build(path)` the first time this JVM asks for it

@@ -41,16 +41,14 @@ object Clustering {
     *
     * Two paths, chosen by a measured-size gate that costs no extra job:
     *  - *Driver path.* [[driverKMeans]] persists the vectors MLlib would
-    *    build and runs one job over them that returns each partition's
-    *    row count and, while rows × dim ≤ 2^22 / numPartitions, its
-    *    points ([[DriverValues]]: at most 2^22 values, 32 MB as
-    *    doubles, plus a small object header per point). When every
-    *    partition shipped its points and rows ≥ dim, MLlib's own
-    *    k-means|| init runs (still distributed, ~7 jobs) and then
-    *    Lloyd's rounds run on the driver with MLlib's own distance,
-    *    sum and centroid code, so no round costs a Spark job. Labels
-    *    come from the resulting mllib model's `predict`, the call ml's
-    *    `transform` makes.
+    *    build and collects them in one [[graft.core.LocalTier]] job
+    *    while each partition holds at most its share of 2^22 values
+    *    ([[DriverValues]]: 32 MB as doubles, plus a small header per
+    *    point). If it did and rows ≥ dim, MLlib's own k-means|| init
+    *    runs (still distributed, ~7 jobs) and then Lloyd's rounds run
+    *    on the driver with MLlib's own code, so no round costs a Spark
+    *    job. Labels come from the resulting mllib model's `predict`,
+    *    the call ml's `transform` makes.
     *  - *MLlib path.* Otherwise `ml.clustering.KMeans` fits and
     *    transforms as before: one shuffled job per Lloyd round, centers
     *    broadcast. This is the path for inputs too large for the
@@ -64,10 +62,8 @@ object Clustering {
     *
     * Why the driver path is exact: its points are the rows
     * `ml.KMeans.trainWithRow` builds (the same projection, so the same
-    * partitions in the same order), its init is MLlib's, each round
-    * sums each partition in row order and merges the partitions in
-    * index order, as `reduceByKey` merges local map outputs, and every
-    * floating-point step is an MLlib call
+    * partitions in the same order), and every step after that is
+    * MLlib's, in MLlib's order
     * ([[org.apache.spark.mllib.clustering.GraftKMeans]]). Centers are
     * bitwise equal to ml's and labels identical (ClusteringSpec).
     *
@@ -130,11 +126,9 @@ object Clustering {
 
   /** The driver path of [[kmeansLabels]]: the mllib model
     * `ml.clustering.KMeans` with its defaults would fit on `featuresCol`
-    * (bitwise-equal centers), or `None` when the input is above the gate
-    * (some partition held more than `maxValues` / numPartitions values)
-    * or has fewer rows than dimensions (ml's block solver). Runs one
-    * job for the gate, then MLlib's k-means|| init; Lloyd's rounds run
-    * on the driver. */
+    * (bitwise-equal centers), or `None` when some partition holds more
+    * than `maxValues` / numPartitions values or the input has fewer
+    * rows than dimensions (ml's block solver). */
   private[graft] def driverKMeans(withVec: DataFrame, featuresCol: String,
                                   k: Int, seed: Long, maxValues: Long)
       : Option[MllibKMeansModel] = {

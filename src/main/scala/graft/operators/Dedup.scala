@@ -197,38 +197,45 @@ object Dedup {
     * sort-merge-joins them against the corpus-sized shingle-set frame
     * — re-shuffling the heavy array payload TWICE just to attach two
     * arrays to each pair (guide §8: decide with small rows, move the
-    * heavy side as little as possible). Measure the candidate count
-    * once — an observed metric on the localCheckpoint that
-    * materializes the pairs, so the count costs no job of its own
-    * ([[graft.core.Observed.longOr]] recounts the checkpoint only if
-    * the metric never arrives) — and BROADCAST
-    * the pair side when it fits: the sets frame is then only ever
+    * heavy side as little as possible). While every partition holds at
+    * most its share of 2^18 pairs, one [[graft.core.LocalTier]] job
+    * brings them to the driver as a `LocalRelation` (exact size for the
+    * planner), BROADCAST into both joins: the sets frame is then only ever
     * scanned, never shuffled. The second join's build side carries one
     * shingle array per pair, so the gate is sized for that payload
     * (2^18 pairs × ~2 KB of array ≈ a few hundred MB hashed), an
-    * order under the id-only 4M gates elsewhere. Oversized candidate
-    * sets keep the shuffled shape, which spills gracefully. Pairs must
-    * be exactly (id_a, id_b); output is (id_a, id_b, jaccard) — the
-    * same rows [[jaccardForPairs]] yields (join strategy cannot change
-    * the multiset; DedupSpec asserts equality on a planted corpus). */
+    * order under the id-only 4M gates elsewhere. Above the gate the
+    * pairs keep the shuffled shape over a checkpoint that reuses the
+    * gate job's shuffle output, which spills gracefully. Pairs must be
+    * exactly (id_a, id_b); output is (id_a, id_b, jaccard) — the same
+    * rows [[jaccardForPairs]] yields (join strategy cannot change the
+    * multiset; DedupSpec asserts equality on both branches). */
   def jaccardForPairsAdaptive(pairs: DataFrame, shingleSets: DataFrame,
-                              idCol: String, setCol: String): DataFrame = {
-    val obs = org.apache.spark.sql.Observation()
-    val p = pairs.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-    if (graft.core.Observed.longOr(obs, "n", p) > 262144L)
-      jaccardForPairs(p, shingleSets, idCol, setCol)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-    else {
-      val withA = shingleSets
-        .join(broadcast(p), col(idCol) === col("id_a"))
-        .select(col("id_a"), col("id_b"), col(setCol).as("_sa"))
-      shingleSets
-        .join(broadcast(withA), col(idCol) === col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          graft.plans.StringArrayJaccard(col("_sa"), col(setCol))
-            .as("jaccard"))
+                              idCol: String, setCol: String): DataFrame =
+    jaccardForPairsAdaptive(pairs, shingleSets, idCol, setCol, 1L << 18)
+
+  private[graft] def jaccardForPairsAdaptive(pairs: DataFrame, shingleSets: DataFrame,
+                                             idCol: String, setCol: String,
+                                             maxPairs: Long): DataFrame =
+    graft.core.LocalTier.collectBounded(pairs.queryExecution.toRdd.map(_.copy()),
+        maxPairs)(_ => 1L) match {
+      case None =>
+        jaccardForPairs(pairs.localCheckpoint(), shingleSets, idCol, setCol)
+          .select(col("id_a"), col("id_b"), col("jaccard"))
+      case Some(parts) =>
+        val p = org.apache.spark.sql.graftbridge.CatalystBridge.ofRows(pairs,
+          org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+            org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(pairs.schema),
+            parts.flatten.toSeq))
+        val withA = shingleSets
+          .join(broadcast(p), col(idCol) === col("id_a"))
+          .select(col("id_a"), col("id_b"), col(setCol).as("_sa"))
+        shingleSets
+          .join(broadcast(withA), col(idCol) === col("id_b"))
+          .select(col("id_a"), col("id_b"),
+            graft.plans.StringArrayJaccard(col("_sa"), col(setCol))
+              .as("jaccard"))
     }
-  }
 
   /** End-to-end scalable MinHash+LSH near-dup pairs (md5-h15 shingle
     * ids — no vocabulary): shingle → sign → band → candidate → verify
@@ -281,22 +288,20 @@ object Dedup {
     * (pair A–B plus B–C → one keeper for {A,B,C}), which is what a
     * corpus-dedup run actually keys its keep/drop decision on.
     *
-    * The pairs become a distinct two-direction edge list, checkpointed
-    * once; its row count rides that checkpoint as an observed metric
-    * (no count job), and a MEASURED gate picks one of two paths:
-    *  - ≤ 4M edges (the near-dup graph is ≪ the corpus — only near-dup
-    *    members appear — so this is the common case): the edge list is
-    *    collected once, one packed long array per partition, and
-    *    resolved on the driver by one union-find pass over the sorted
-    *    node ids. Driver memory at the gate, all primitive arrays:
-    *    ≤ 64 MB collected (each undirected edge once, two longs),
-    *    ≤ 64 MB to sort the endpoints into ≤ 4M distinct ids (every
-    *    node has an edge), 16 MB of int parent pointers and ≤ 64 MB of
-    *    (id, comp) slices shipped back — under 200 MB at its peak,
-    *    below the 200–400 MB HashedRelation the broadcast label join
-    *    it replaces built every round. Rounds = 0.
-    *  - above the gate: [[labelPropagationWithIters]]'s shuffled
-    *    smallest-id label propagation, which never holds the graph on
+    * The pairs become a distinct two-direction edge list, and one
+    * [[graft.core.LocalTier.collectBounded]] job over it picks a path:
+    *  - while every partition holds at most its share of 4M edge ends
+    *    (each undirected edge once, as two longs — the common case, as
+    *    only near-dup members appear): that job has collected them, and
+    *    one union-find pass over the sorted node ids resolves them on
+    *    the driver. Driver memory at the gate, all primitive arrays:
+    *    ≤ 32 MB collected, ≤ 32 MB sorted into ≤ 4M distinct ids, 16 MB
+    *    of int parents and ≤ 64 MB of (id, comp) slices shipped back —
+    *    below the 200–400 MB HashedRelation the broadcast label join it
+    *    replaces built every round. Rounds = 0.
+    *  - above the gate: shuffled smallest-id label propagation
+    *    ([[propagateLabels]]) over a checkpoint of the same edge list
+    *    (reusing the gate job's shuffle), never holding the graph on
     *    one machine.
     *
     * Returns (id, comp): one row per node that appears in `pairs`,
@@ -310,22 +315,25 @@ object Dedup {
   /** [[connectedComponents]] plus the label-propagation round count it
     * took to converge (0 when the driver path resolved it). */
   def connectedComponentsWithIters(pairs: DataFrame, idA: String, idB: String,
-                                   maxIter: Int = 50): (DataFrame, Int) = {
-    val obs = org.apache.spark.sql.Observation()
-    val edges = edgeList(pairs, idA, idB)
-      .observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint()
-    if (graft.core.Observed.longOr(obs, "n", edges) <= 4000000L)
-      (componentsOnDriver(edges), 0)
-    else propagateLabels(edges, maxIter)
-  }
+                                   maxIter: Int = 50): (DataFrame, Int) =
+    connectedComponentsWithIters(pairs, idA, idB, maxIter, 4000000L)
 
-  /** The above-gate path of [[connectedComponentsWithIters]], callable
-    * on any graph so specs and ScaleSmoke can measure its rounds. */
-  private[graft] def labelPropagationWithIters(pairs: DataFrame, idA: String,
-                                               idB: String,
-                                               maxIter: Int): (DataFrame, Int) =
-    propagateLabels(edgeList(pairs, idA, idB).localCheckpoint(), maxIter)
+  /** The gate at `maxEnds` edge ends; 0 runs label propagation on any
+    * graph with an edge, so specs and ScaleSmoke can measure rounds. */
+  private[graft] def connectedComponentsWithIters(pairs: DataFrame, idA: String,
+                                                  idB: String, maxIter: Int,
+                                                  maxEnds: Long): (DataFrame, Int) = {
+    val edges = edgeList(pairs, idA, idB)
+    // each undirected edge once: src, dst, src, dst, … longs
+    val ends = edges.queryExecution.toRdd.mapPartitions(_.flatMap { r =>
+      if (r.getLong(0) <= r.getLong(1)) Iterator(r.getLong(0), r.getLong(1))
+      else Iterator.empty
+    })
+    graft.core.LocalTier.collectBounded(ends, maxEnds)(_ => 1L) match {
+      case Some(parts) => (componentsOnDriver(edges.sparkSession, Array.concat(parts: _*)), 0)
+      case None        => propagateLabels(edges.localCheckpoint(), maxIter)
+    }
+  }
 
   /** (src, dst) longs, both directions of every pair, distinct
     * (robustness to duplicate and reversed input pairs; one shuffle). */
@@ -352,20 +360,12 @@ object Dedup {
       .distinct()
   }
 
-  /** Union-find over a checkpointed edge list that fits the driver
-    * (the gate in [[connectedComponentsWithIters]] sizes it). Node ids
+  /** Union-find over packed (src, dst) edge longs that fit the driver
+    * (the gate in [[connectedComponentsWithIters]] sizes them). Node ids
     * are sorted, so a node's index orders like its id; unions keep the
     * smaller root, so every root is its component's smallest id. */
-  private def componentsOnDriver(edges: DataFrame): DataFrame = {
-    // each undirected edge once (the list holds both directions), as
-    // (src, dst, src, dst, …) — one primitive array per partition
-    val parts = edges.where(col("src") <= col("dst"))
-      .queryExecution.toRdd.mapPartitions { rows =>
-        val b = new scala.collection.mutable.ArrayBuilder.ofLong
-        rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
-        Iterator.single(b.result())
-      }.collect()
-    val ends = Array.concat(parts.toIndexedSeq: _*)
+  private def componentsOnDriver(spark: org.apache.spark.sql.SparkSession,
+                                 ends: Array[Long]): DataFrame = {
     val sorted = ends.clone()
     java.util.Arrays.sort(sorted)
     var n = 0
@@ -393,15 +393,10 @@ object Dedup {
       val is = ids.slice(lo, math.min(n, lo + (1 << 20)))
       (is, Array.tabulate(is.length)(j => ids(find(lo + j))))
     }
-    val spark = edges.sparkSession
-    val rows = spark.sparkContext.parallelize(slices, math.max(1, slices.size))
-      .flatMap { case (is, cs) =>
-        is.indices.iterator.map(i => org.apache.spark.sql.Row(is(i), cs(i)))
-      }
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    spark.createDataFrame(rows, StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("comp", LongType, nullable = false))))
+    import spark.implicits._
+    spark.sparkContext.parallelize(slices, math.max(1, slices.size))
+      .flatMap { case (is, cs) => is.indices.iterator.map(i => (is(i), cs(i))) }
+      .toDF("id", "comp")
   }
 
   /** Iterative smallest-id label propagation over a checkpointed edge

@@ -21,10 +21,9 @@ object GraftKMeans {
     *    (`VectorWithNorm(v, Vectors.norm(v, 2.0), w)`) and persisted, so
     *    MLlib's distributed k-means|| init reads the same partitions in
     *    the same order;
-    *  - one job over them returns each partition's row count and, while
-    *    rows × dim ≤ `maxValues` / numPartitions, its points. Below the
-    *    gate (every partition shipped its points) the driver holds at
-    *    most `maxValues` vector values;
+    *  - one [[graft.core.LocalTier.collectBounded]] job brings them to
+    *    the driver, at most `maxValues` vector values (else, or with
+    *    fewer rows than dimensions, the fit is `None`);
     *  - each round accumulates one partition's sums in row order with
     *    `findClosest` and `updateClusterSum`, exactly as an MLlib task
     *    does, and merges the partitions in index order with
@@ -45,30 +44,14 @@ object GraftKMeans {
       .map { case (v, w) => new VectorWithNorm(v, Vectors.norm(v, 2.0), w) }
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val perPart = maxValues / math.max(1, data.getNumPartitions)
-      val parts = data.mapPartitions { it =>
-        var rows = 0L
-        var dim = 0
-        var values = 0L
-        var kept = new scala.collection.mutable.ArrayBuffer[VectorWithNorm]
-        it.foreach { p =>
-          rows += 1
-          dim = p.vector.size
-          values += dim
-          if (kept != null) {
-            if (values <= perPart) kept += p else kept = null
-          }
+      graft.core.LocalTier.collectBounded(data, maxValues)(_.vector.size.toLong)
+        .filter(parts => parts.iterator.map(_.length.toLong).sum >=
+          parts.iterator.flatten.map(_.vector.size).maxOption.getOrElse(0))
+        .map { parts =>
+          val measure = DistanceMeasure.decodeFromString(algo.getDistanceMeasure)
+          val centers = algo.initKMeansParallel(data, measure)
+          lloyd(data.sparkContext, algo, measure, centers, parts)
         }
-        Iterator.single((rows, dim, Option(kept).map(_.toArray)))
-      }.collect()
-      val rows = parts.iterator.map(_._1).sum
-      val dim = parts.iterator.map(_._2).maxOption.getOrElse(0)
-      if (parts.exists(_._3.isEmpty) || rows < dim) None
-      else {
-        val measure = DistanceMeasure.decodeFromString(algo.getDistanceMeasure)
-        val centers = algo.initKMeansParallel(data, measure)
-        Some(lloyd(data.sparkContext, algo, measure, centers, parts.map(_._3.get)))
-      }
     } finally data.unpersist(blocking = false)
   }
 

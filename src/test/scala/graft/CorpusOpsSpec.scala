@@ -118,22 +118,24 @@ class CorpusOpsSpec extends AnyFunSuite {
       (30L, (1 to 7).map("g" + _).mkString(" ")))
     val all = (v0 ++ delta).toDF("doc_id", "text")
     val tag = "spanday2_spec_" + System.nanoTime()
-    Dedup.SpanStore.write(spark, v0.toDF("doc_id", "text"),
-      "doc_id", "text", win = 5, seed = 3011L, tag = tag)
-    val got = Dedup.SpanStore.day2Stats(spark, all,
-        delta.toDF("doc_id", "text"), "doc_id", "text",
-        win = 5, seed = 3011L, tag = tag)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val scratch = Dedup.dupSpanCensusScalable(all, "doc_id", "text",
-        win = 5, seed = 3011L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == scratch,
-      s"day2 ${got.diff(scratch)} != scratch ${scratch.diff(got)}")
-    assert(got.contains((1L, 10L, 10L)) && got.contains((20L, 10L, 10L)),
-      s"re-ingested family must be fully covered: $got")
-    assert(got.contains((4L, 8L, 5L)) && got.contains((10L, 8L, 5L)),
-      s"crossing span must cover 5 tokens in both holders: $got")
-    assert(got.contains((30L, 7L, 0L)), s"unique new doc: $got")
+    try {
+      Dedup.SpanStore.write(spark, v0.toDF("doc_id", "text"),
+        "doc_id", "text", win = 5, seed = 3011L, tag = tag)
+      val got = Dedup.SpanStore.day2Stats(spark, all,
+          delta.toDF("doc_id", "text"), "doc_id", "text",
+          win = 5, seed = 3011L, tag = tag)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val scratch = Dedup.dupSpanCensusScalable(all, "doc_id", "text",
+          win = 5, seed = 3011L)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == scratch,
+        s"day2 ${got.diff(scratch)} != scratch ${scratch.diff(got)}")
+      assert(got.contains((1L, 10L, 10L)) && got.contains((20L, 10L, 10L)),
+        s"re-ingested family must be fully covered: $got")
+      assert(got.contains((4L, 8L, 5L)) && got.contains((10L, 8L, 5L)),
+        s"crossing span must cover 5 tokens in both holders: $got")
+      assert(got.contains((30L, 7L, 0L)), s"unique new doc: $got")
+    } finally Dedup.SpanStore.vacuum(spark, tag)
   }
 
   test("SpanStore absorb ≡ from-scratch rebuild; day-3 probe on gen2; vacuum reclaims gen1") {

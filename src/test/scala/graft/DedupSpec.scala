@@ -196,7 +196,7 @@ class DedupSpec extends AnyFunSuite {
     // travel from one end; path halving contracts it in O(log 9) rounds
     val chain = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val (labels, itersChain) =
-      Dedup.labelPropagationWithIters(chain, "id_a", "id_b", 50)
+      Dedup.connectedComponentsWithIters(chain, "id_a", "id_b", 50, 0L)
     assert(labels.as[(Long, Long)].collect().forall(_._2 == 0L))
     assert(itersChain <= 7, s"9-edge path took $itersChain rounds (want ~log)")
     // 200 extra 2-cliques (400 nodes): same chain, same round count —
@@ -204,19 +204,21 @@ class DedupSpec extends AnyFunSuite {
     val wide = chain.union(
       (100L until 300L).map(i => (2 * i, 2 * i + 1)).toDF("id_a", "id_b"))
     val (_, itersWide) =
-      Dedup.labelPropagationWithIters(wide, "id_a", "id_b", 50)
+      Dedup.connectedComponentsWithIters(wide, "id_a", "id_b", 50, 0L)
     assert(itersWide == itersChain, s"$itersWide != $itersChain")
     // and a pure clique corpus converges in ~2 rounds regardless of size
     val cliques = (0L until 200L).map(i => (2 * i, 2 * i + 1)).toDF("id_a", "id_b")
     val (_, itersCliques) =
-      Dedup.labelPropagationWithIters(cliques, "id_a", "id_b", 50)
+      Dedup.connectedComponentsWithIters(cliques, "id_a", "id_b", 50, 0L)
     assert(itersCliques <= 2, s"cliques took $itersCliques rounds")
   }
 
   test("an Observation on an eager localCheckpoint reaches Observed.longOr without its recount") {
-    // CC's gate, its propagation loop and jaccardForPairsAdaptive ride
-    // their counts on a checkpoint's observed metric; the recount is
-    // only the fallback for a metric that never arrives
+    // CC's above-gate propagation loop rides each round's change count
+    // on its checkpoint's observed metric, and q_curate_funnel its stage
+    // counts on its count pass; the recount is only the fallback for a
+    // metric that never arrives. The measured-size gates read no count:
+    // they run through LocalTier.collectBounded
     def observedRows(df: org.apache.spark.sql.DataFrame): Long = {
       val obs = org.apache.spark.sql.Observation()
       df.observe(obs, sum(lit(1L)).as("n")).localCheckpoint()
@@ -555,7 +557,7 @@ class DedupSpec extends AnyFunSuite {
     val pairEdge  = Seq((30L, 31L))
     val pairs = (pathEdges ++ starEdges ++ pairEdge).toDF("id_a", "id_b")
     val (labels, iters) =
-      Dedup.labelPropagationWithIters(pairs, "id_a", "id_b", 50)
+      Dedup.connectedComponentsWithIters(pairs, "id_a", "id_b", 50, 0L)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (10L to 15L).foreach(i => assert(got(i) == 10L, s"path node $i → ${got(i)}"))
     (20L to 23L).foreach(i => assert(got(i) == 20L, s"star node $i → ${got(i)}"))
@@ -585,7 +587,7 @@ class DedupSpec extends AnyFunSuite {
     for ((name, pairs) <- graphs) {
       val (driver, rounds) = Dedup.connectedComponentsWithIters(pairs, "id_a", "id_b")
       assert(rounds == 0, s"$name: the small graph did not take the driver path")
-      val (loop, loopRounds) = Dedup.labelPropagationWithIters(pairs, "id_a", "id_b", 50)
+      val (loop, loopRounds) = Dedup.connectedComponentsWithIters(pairs, "id_a", "id_b", 50, 0L)
       assert(loopRounds >= 1)
       val got = driver.as[(Long, Long)].collect().sorted.toSeq
       val want = loop.as[(Long, Long)].collect().sorted.toSeq
@@ -623,5 +625,66 @@ class DedupSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
     assert(jobs.get >= 1 && jobs.get <= 3,
       s"CC over the 12-node planted graph ran ${jobs.get} Spark jobs (want ≤ 3)")
+  }
+
+  /** The LSH-verify fixture: four docs, three near-dups of each other,
+    * and candidate pairs among them plus one distinct pair. */
+  private def verifyInputs = {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog today"),
+      (2L, "the quick brown fox jumps over the lazy dog tonight"),
+      (3L, "completely different content about large scale data systems"),
+      (4L, "the quick brown fox jumps over the lazy dog this morning")
+    ).toDF("doc_id", "text")
+    (Seq((1L, 2L), (1L, 4L), (2L, 4L), (1L, 3L)).toDF("id_a", "id_b"),
+      Dedup.shingleSets(docs, "doc_id", "text"))
+  }
+
+  test("jaccardForPairsAdaptive returns identical rows above and below its gate") {
+    val (cands, sets) = verifyInputs
+    def rows(maxPairs: Long) =
+      Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset", maxPairs)
+        .as[(Long, Long, Double)].collect().sorted.toSeq
+    val below = rows(1L << 18)
+    // a bound of 0 leaves no partition room for a single pair
+    val above = rows(0L)
+    assert(below.size == 4 && below == above, s"below $below != above $above")
+  }
+
+  test("below their gates, CC and the LSH verify run one job for gate plus collect") {
+    def jobs(build: => org.apache.spark.sql.DataFrame): Int =
+      graft.core.Harness.run(spark, TestSpark.SfDir, (_, _) => build)(_ => ())
+        .fold(e => throw e, _.jobs)
+    // CC: one map-stage job for the edge list's distinct shuffle, then
+    // the LocalTier job; the union-find and its result cost no job
+    assert(jobs(Dedup.connectedComponents(plantedPairs, "id_a", "id_b")) == 2)
+    // the verify's local pairs need no shuffle: the LocalTier job only
+    val (cands, sets) = verifyInputs
+    assert(jobs(Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")) == 1)
+  }
+
+  test("connectedComponents: a partition over its share routes to label propagation") {
+    val conf = spark.conf
+    val saved = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+      .map(k => k -> conf.getOption(k))
+    conf.set("spark.sql.shuffle.partitions", "8")
+    conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      // 9 undirected edges are 18 endpoints, so the total fits a bound
+      // of 18; over 8 partitions the share is 2 endpoints, and some
+      // partition holds at least 2 edges (4 endpoints)
+      val pairs = plantedPairs
+      val (skewed, rounds) =
+        Dedup.connectedComponentsWithIters(pairs, "id_a", "id_b", 50, 18L)
+      assert(rounds >= 1, "a partition over its share stayed on the driver")
+      val (driver, driverRounds) =
+        Dedup.connectedComponentsWithIters(pairs, "id_a", "id_b")
+      assert(driverRounds == 0)
+      assert(skewed.as[(Long, Long)].collect().sorted.toSeq ==
+        driver.as[(Long, Long)].collect().sorted.toSeq)
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None)    => conf.unset(k)
+    }
   }
 }

@@ -244,6 +244,24 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("a run dir stays readable until the per-query release and is gone after it") {
+    import java.nio.file.{Files, Path, Paths}
+    val root = Paths.get(graft.core.Scratch.pathFor("spec", TestSpark.SfDir)).getParent
+    graft.core.Caches.releaseAll()
+    val rollup = EventStreams.streamingRollup(spark, TestSpark.SfDir, parts = 2)
+    val runDirs = rollup.inputFiles.toSeq.map { f =>
+      var p: Path = Paths.get(new java.net.URI(f))
+      while (p.getParent != null && p.getParent != root) p = p.getParent
+      p
+    }.distinct
+    assert(runDirs.size == 1 && runDirs.head.getParent == root, s"$runDirs")
+    val rows = rollup.collect().toSeq
+    assert(rows.nonEmpty && rollup.collect().toSeq == rows)
+    assert(Files.isDirectory(runDirs.head))
+    graft.core.Caches.releaseAll()
+    assert(!Files.exists(runDirs.head), s"${runDirs.head} outlived the release")
+  }
+
   test("sessionize closes sessions on the 30-min gap") {
     val sessions = EventStreams.sessionize(spark, TestSpark.SfDir, 30)
     assert(sessions.count() > 0)
