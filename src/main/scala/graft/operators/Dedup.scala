@@ -199,34 +199,39 @@ object Dedup {
     * arrays to each pair (guide §8: decide with small rows, move the
     * heavy side as little as possible). While every partition holds at
     * most its share of 2^18 pairs, one [[graft.core.LocalTier]] job
-    * brings them to the driver as a `LocalRelation` (exact size for the
-    * planner), BROADCAST into both joins: the sets frame is then only ever
-    * scanned, never shuffled. The second join's build side carries one
-    * shingle array per pair, so the gate is sized for that payload
-    * (2^18 pairs × ~2 KB of array ≈ a few hundred MB hashed), an
-    * order under the id-only 4M gates elsewhere. Above the gate the
-    * pairs keep the shuffled shape over a checkpoint that reuses the
-    * gate job's shuffle output, which spills gracefully. Pairs must be
-    * exactly (id_a, id_b); output is (id_a, id_b, jaccard) — the same
-    * rows [[jaccardForPairs]] yields (join strategy cannot change the
-    * multiset; DedupSpec asserts equality on both branches). */
+    * brings them to the driver as packed longs, and they come back as a
+    * local relation (exact size for the planner), BROADCAST into both
+    * joins: the sets frame is then only ever scanned, never shuffled.
+    * The second join's build side carries one shingle array per pair,
+    * so the gate is sized for that payload (2^18 pairs × ~2 KB of
+    * array ≈ a few hundred MB hashed), an order under the id-only 4M
+    * gates elsewhere. Every graft caller's pairs end in a `distinct`, a
+    * hash shuffle on the pair, so each partition holds about its share
+    * of the total and the share acts as the total's bound. Above the
+    * gate the pairs keep the shuffled shape over a checkpoint that
+    * reuses the gate job's shuffle output, which spills gracefully.
+    * Pairs must be exactly (id_a, id_b) longs; output is (id_a, id_b,
+    * jaccard) — the same rows [[jaccardForPairs]] yields (join strategy
+    * cannot change the multiset; DedupSpec asserts equality on both
+    * branches). */
   def jaccardForPairsAdaptive(pairs: DataFrame, shingleSets: DataFrame,
                               idCol: String, setCol: String): DataFrame =
     jaccardForPairsAdaptive(pairs, shingleSets, idCol, setCol, 1L << 18)
 
   private[graft] def jaccardForPairsAdaptive(pairs: DataFrame, shingleSets: DataFrame,
                                              idCol: String, setCol: String,
-                                             maxPairs: Long): DataFrame =
-    graft.core.LocalTier.collectBounded(pairs.queryExecution.toRdd.map(_.copy()),
-        maxPairs)(_ => 1L) match {
+                                             maxPairs: Long): DataFrame = {
+    // id_a, id_b, id_a, id_b, … longs (a pair with a null id joins nothing)
+    val ends = pairs.queryExecution.toRdd.mapPartitions(_.flatMap(r =>
+      if (r.anyNull) Iterator.empty else Iterator(r.getLong(0), r.getLong(1))))
+    graft.core.LocalTier.collectBounded(ends, 2 * maxPairs)(_ => 1L) match {
       case None =>
         jaccardForPairs(pairs.localCheckpoint(), shingleSets, idCol, setCol)
           .select(col("id_a"), col("id_b"), col("jaccard"))
       case Some(parts) =>
-        val p = org.apache.spark.sql.graftbridge.CatalystBridge.ofRows(pairs,
-          org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-            org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(pairs.schema),
-            parts.flatten.toSeq))
+        import pairs.sparkSession.implicits._
+        val e = Array.concat(parts.toIndexedSeq: _*)
+        val p = Seq.tabulate(e.length / 2)(i => (e(2 * i), e(2 * i + 1))).toDF("id_a", "id_b")
         val withA = shingleSets
           .join(broadcast(p), col(idCol) === col("id_a"))
           .select(col("id_a"), col("id_b"), col(setCol).as("_sa"))
@@ -236,6 +241,7 @@ object Dedup {
             graft.plans.StringArrayJaccard(col("_sa"), col(setCol))
               .as("jaccard"))
     }
+  }
 
   /** End-to-end scalable MinHash+LSH near-dup pairs (md5-h15 shingle
     * ids — no vocabulary): shingle → sign → band → candidate → verify
@@ -330,8 +336,9 @@ object Dedup {
       else Iterator.empty
     })
     graft.core.LocalTier.collectBounded(ends, maxEnds)(_ => 1L) match {
-      case Some(parts) => (componentsOnDriver(edges.sparkSession, Array.concat(parts: _*)), 0)
-      case None        => propagateLabels(edges.localCheckpoint(), maxIter)
+      case Some(parts) =>
+        (componentsOnDriver(edges.sparkSession, Array.concat(parts.toIndexedSeq: _*)), 0)
+      case None => propagateLabels(edges.localCheckpoint(), maxIter)
     }
   }
 
