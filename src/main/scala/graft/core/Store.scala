@@ -23,12 +23,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * generation references an earlier one and [[vacuum]] is safe once
   * the successor is written. */
 abstract class Store(kind: String, tables: String*) {
-  /** Per-user scratch root (not a fixed world-writable path);
-    * override with GRAFT_FIXTURE_DIR. */
-  def root: String = sys.env.getOrElse("GRAFT_FIXTURE_DIR",
-    java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_fixtures_" + sys.props.getOrElse("user.name", "anon")).toString)
+  /** Where every generation of every store lives. */
+  def root: String = Store.FixtureRoot
 
   /** Generation `tag`'s directory. */
   def dir(tag: String): java.nio.file.Path =
@@ -77,6 +73,15 @@ abstract class Store(kind: String, tables: String*) {
 }
 
 object Store {
+  /** The per-user root of the persisted stores and generated fixtures:
+    * GRAFT_FIXTURE_DIR, else `graft_fixtures_<user>` under
+    * java.io.tmpdir (not a fixed world-writable path, which another
+    * local user could pre-own or plant symlinks in). */
+  val FixtureRoot: String = sys.env.getOrElse("GRAFT_FIXTURE_DIR",
+    java.nio.file.Paths.get(
+      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+      "graft_fixtures_" + sys.props.getOrElse("user.name", "anon")).toString)
+
   /** The store tag for one `role` (which store generation a query
     * uses, `[a-z0-9]+`) over fixture `dir`: the role, `_`, then
     * [[Scratch.escape]] of the dir. Injective in (role, dir), as the

@@ -101,16 +101,10 @@ object JsonIO {
 
   /** Location of the deterministic sharegpt JSONL fixture; stable for
     * the lifetime of a JVM so the DuckDB oracle SQL built in the same
-    * process references the same file. Per-user under java.io.tmpdir
-    * (NOT a fixed world-writable /tmp path — another local user could
-    * pre-own it or plant symlinks); override with GRAFT_FIXTURE_DIR. */
-  val SharegptFixturePath: String = {
-    val dir = sys.env.getOrElse("GRAFT_FIXTURE_DIR",
-      java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        "graft_fixtures_" + sys.props.getOrElse("user.name", "anon")).toString)
-    java.nio.file.Paths.get(dir, "sharegpt.jsonl").toString
-  }
+    * process references the same file. Under the per-user
+    * [[graft.core.Store.FixtureRoot]]. */
+  val SharegptFixturePath: String =
+    java.nio.file.Paths.get(graft.core.Store.FixtureRoot, "sharegpt.jsonl").toString
 
   /** Writes (idempotently) a small deterministic sharegpt-format JSONL
     * file — the multi-turn conversation shape the reference documents

@@ -142,19 +142,9 @@ object Dedup {
   def lshCandidatePairs(signatures: DataFrame, idCol: String,
                         bands: Int, rowsPerBand: Int,
                         maxBucketSize: Int = 0): DataFrame = {
-    val exploded = bandExplode(signatures, idCol, bands, rowsPerBand)
-    val capped =
-      if (maxBucketSize <= 0) exploded
-      else exploded
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy(col("band"), col("bsig")).orderBy(col(idCol))))
-        .where(col("_rn") <= maxBucketSize)
-        .drop("_rn")
-    val banded = graft.core.Caches.track(capped)
-    banded.alias("x").join(banded.alias("y"), Seq("band", "bsig"))
-      .where(col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-      .distinct()
+    val banded = graft.core.Caches.track(capBuckets(
+      bandExplode(signatures, idCol, bands, rowsPerBand), idCol, maxBucketSize))
+    bucketPairs(banded, idCol).distinct()
   }
 
   /** [[lshCandidatePairs]] through the custom UNARY plan node
@@ -166,18 +156,29 @@ object Dedup {
     * backstop semantics (the cap window runs before the pass). */
   def lshCandidatePairsNative(signatures: DataFrame, idCol: String,
                               bands: Int, rowsPerBand: Int,
-                              maxBucketSize: Int = 0): DataFrame = {
-    val exploded = bandExplode(signatures, idCol, bands, rowsPerBand)
-    val capped =
-      if (maxBucketSize <= 0) exploded
-      else exploded
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy(col("band"), col("bsig")).orderBy(col(idCol))))
-        .where(col("_rn") <= maxBucketSize)
-        .drop("_rn")
-    graft.plans.LshBandJoinNative.bandPairs(capped, "band", "bsig", idCol)
+                              maxBucketSize: Int = 0): DataFrame =
+    graft.plans.LshBandJoinNative.bandPairs(
+        capBuckets(bandExplode(signatures, idCol, bands, rowsPerBand),
+          idCol, maxBucketSize), "band", "bsig", idCol)
       .distinct()
-  }
+
+  /** The `maxBucketSize` backstop: each (band, bsig) bucket keeps its
+    * `maxBucketSize` smallest ids; 0 keeps every member. */
+  private def capBuckets(banded: DataFrame, idCol: String,
+                         maxBucketSize: Int): DataFrame =
+    if (maxBucketSize <= 0) banded
+    else banded
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy(col("band"), col("bsig")).orderBy(col(idCol))))
+      .where(col("_rn") <= maxBucketSize)
+      .drop("_rn")
+
+  /** The banded self-join: (id_a < id_b) pairs sharing a (band, bsig)
+    * bucket, repeated once per shared band. */
+  private def bucketPairs(banded: DataFrame, idCol: String): DataFrame =
+    banded.alias("x").join(banded.alias("y"), Seq("band", "bsig"))
+      .where(col(s"x.$idCol") < col(s"y.$idCol"))
+      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
 
   /** True n-gram Jaccard for given pairs: join the distinct-shingle
     * sets back and compare. */
@@ -243,6 +244,17 @@ object Dedup {
     }
   }
 
+  /** The verify step every MinHash near-dup path ends in: candidate
+    * (id_a, id_b) pairs whose true Jaccard over the `shset` sets
+    * ([[jaccardForPairsAdaptive]]) is at least `threshold`, as (id_a,
+    * id_b, jaccard) with the jaccard rounded to 6 places — the value
+    * the oracle replays. */
+  private[graft] def verifiedPairs(cands: DataFrame, sets: DataFrame,
+                                   idCol: String, threshold: Double): DataFrame =
+    jaccardForPairsAdaptive(cands, sets, idCol, "shset")
+      .where(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+
   /** End-to-end scalable MinHash+LSH near-dup pairs (md5-h15 shingle
     * ids — no vocabulary): shingle → sign → band → candidate → verify
     * ≥ threshold. Oracle-reproducible end to end (DuckDB replays
@@ -265,9 +277,7 @@ object Dedup {
     // two) — pair-set-identical to [[lshCandidatePairs]], spec- and
     // oracle-asserted
     val cands = lshCandidatePairsNative(sigs, idCol, bands, k / bands, maxBucketSize)
-    jaccardForPairsAdaptive(cands, sets, idCol, "shset")
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    verifiedPairs(cands, sets, idCol, threshold)
   }
 
   /** Near-dup detection composed the way a 100 TB dedup actually
@@ -540,23 +550,27 @@ object Dedup {
     * growth while the full run grows linearly). */
   def incrementalNearDupPairs(newBanded: DataFrame, corpusBanded: DataFrame,
                               allSets: DataFrame, idCol: String,
-                              threshold: Double = 0.5): DataFrame = {
+                              threshold: Double = 0.5): DataFrame =
+    deltaNearDupPairs(newBanded, allSets, idCol, threshold) { nb =>
+      broadcast(nb.alias("x"))
+        .join(corpusBanded.alias("y"), Seq("band", "bsig"))
+        .where(col(s"x.$idCol") =!= col(s"y.$idCol"))
+        .select(least(col(s"x.$idCol"), col(s"y.$idCol")).as("id_a"),
+          greatest(col(s"x.$idCol"), col(s"y.$idCol")).as("id_b"))
+    }
+
+  /** The body both incremental paths share: candidates = the corpus
+    * `probe` of the delta's banded frame ∪ the delta's own bucket
+    * pairs, distinct, then [[verifiedPairs]]. Candidates are
+    * delta-bounded (measured small), so the pair side broadcasts and
+    * the corpus-sized sets frame is scanned in place, never shuffled
+    * by id. */
+  private def deltaNearDupPairs(newBanded: DataFrame, allSets: DataFrame,
+                                idCol: String, threshold: Double)
+                               (probe: DataFrame => DataFrame): DataFrame = {
     val nb = graft.core.Caches.track(newBanded) // referenced twice
-    val cross = broadcast(nb.alias("x"))
-      .join(corpusBanded.alias("y"), Seq("band", "bsig"))
-      .where(col(s"x.$idCol") =!= col(s"y.$idCol"))
-      .select(least(col(s"x.$idCol"), col(s"y.$idCol")).as("id_a"),
-        greatest(col(s"x.$idCol"), col(s"y.$idCol")).as("id_b"))
-    val internal = nb.alias("x").join(nb.alias("y"), Seq("band", "bsig"))
-      .where(col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-    val cands = cross.union(internal).distinct()
-    // candidates are delta-bounded (probe ∪ delta-internal) — measured
-    // small, the pair side broadcasts and the corpus-sized sets frame
-    // is scanned, never shuffled (2 corpus shuffles removed per call)
-    jaccardForPairsAdaptive(cands, allSets, idCol, "shset")
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    verifiedPairs(probe(nb).union(bucketPairs(nb, idCol)).distinct(),
+      allSets, idCol, threshold)
   }
 
   /** The WRITE half of the resumable-dedup lifecycle: absorb a
@@ -737,20 +751,9 @@ object Dedup {
   def incrementalNearDupPairsFromStore(newBanded: DataFrame,
                                        storeBanded: DataFrame,
                                        allSets: DataFrame, idCol: String,
-                                       threshold: Double = 0.5): DataFrame = {
-    val nb = graft.core.Caches.track(newBanded) // referenced twice
-    val cross = probeSignatureStore(storeBanded, nb, idCol)
-    val internal = nb.alias("x").join(nb.alias("y"), Seq("band", "bsig"))
-      .where(col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-    val cands = cross.union(internal).distinct()
-    // delta-bounded candidates: same adaptive verification as
-    // [[incrementalNearDupPairs]] — the store's sets are scanned in
-    // place instead of being re-shuffled by id per probe
-    jaccardForPairsAdaptive(cands, allSets, idCol, "shset")
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
+                                       threshold: Double = 0.5): DataFrame =
+    deltaNearDupPairs(newBanded, allSets, idCol, threshold)(
+      probeSignatureStore(storeBanded, _, idCol))
 
   /** CCNet/RefinedWeb-style BOILERPLATE STRIP at sub-document
     * granularity: split each document into consecutive `win`-token

@@ -66,6 +66,11 @@ object NorthStarQueries extends QueryModule {
 
   private val shingleCtes = shingleCtesFrom("documents")
 
+  /** Exact-duplicate representatives (min id per distinct text): the
+    * source relation of every collapse-first oracle. */
+  private val RepsCte =
+    "reps AS (\n  SELECT MIN(doc_id) AS doc_id, text FROM documents GROUP BY text),\n"
+
   /** Spark twin of the `docw` CTE: exploded (doc_id, wid) rows. */
   private def docWids(sets: DataFrame): DataFrame =
     sets.select(col("doc_id"), explode(col("shset")).as("sh"))
@@ -73,12 +78,9 @@ object NorthStarQueries extends QueryModule {
 
   /** Salt cells per language for the lang-partitioned sink writes:
     * bounds the largest (Zipfian-majority) language to ~1/64 of its
-    * bytes per write task instead of one task per lang. Env-tunable
-    * so a cluster run can raise it; the local default keeps the
-    * driver's bench comparable (AQE coalesces the near-empty cells
-    * at fixture scale either way). */
-  private val SinkSaltBuckets: Int =
-    sys.env.getOrElse("SPARK_GRAFT_SINK_SALT", "64").toInt
+    * bytes per write task instead of one task per lang (AQE coalesces
+    * the near-empty cells at fixture scale). */
+  private val SinkSaltBuckets = 64
 
   // ------------------------------------------------- MinHash + LSH dedup
   private val MhK = 12
@@ -92,30 +94,19 @@ object NorthStarQueries extends QueryModule {
     val docw  = docWids(sets)
     val sigs  = Dedup.minhashSignatures(docw, "doc_id", "wid", MhK)
     val cands = Dedup.lshCandidatePairs(sigs, "doc_id", MhBands, MhK / MhBands)
-    // adaptive verification (bands only collide near-dups, so the
-    // candidate set is tiny next to the corpus): measured-small pairs
-    // broadcast and the shingle-set frame is scanned, never shuffled
-    Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")
-      .where(col("jaccard") >= 0.5)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    Dedup.verifiedPairs(cands, sets, "doc_id", 0.5)
       .orderBy(col("id_a"), col("id_b"))
   }
 
   /** [[qDedupMinhashLsh]] with candidate generation through the
     * native unary band-pairs node ([[graft.plans.LshBandJoinNative]])
     * instead of the banded self-join — same oracle SQL, same output,
-    * half the shuffled bytes on the dedup tier's biggest stage. */
-  private def qDedupMinhashLshNative(implicit s: SparkSession, dir: String): DataFrame = {
-    val sets  = shingleSets
-    val docw  = docWids(sets)
-    val sigs  = Dedup.minhashSignatures(docw, "doc_id", "wid", MhK)
-    val cands = Dedup.lshCandidatePairsNative(sigs, "doc_id", MhBands, MhK / MhBands)
-    // same adaptive verification as [[qDedupMinhashLsh]]
-    Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")
-      .where(col("jaccard") >= 0.5)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    * half the shuffled bytes on the dedup tier's biggest stage. This is
+    * the [[Dedup.nearDupPairs]] operator itself. */
+  private def qDedupMinhashLshNative(implicit s: SparkSession, dir: String): DataFrame =
+    Dedup.nearDupPairs(docs, "doc_id", "text", n = 3, k = MhK, bands = MhBands,
+        threshold = 0.5)
       .orderBy(col("id_a"), col("id_b"))
-  }
 
   /** The full MinHash(12)+LSH(4×3)+verify pipeline as a CTE chain
     * ending in `pairs(id_a, id_b, jaccard)` over a source relation:
@@ -212,9 +203,7 @@ object NorthStarQueries extends QueryModule {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  private val qDedupNgramScalableSql = ngramJaccardSqlOver(
-    "reps AS (\n  SELECT MIN(doc_id) AS doc_id, text FROM documents GROUP BY text),\n",
-    "reps")
+  private val qDedupNgramScalableSql = ngramJaccardSqlOver(RepsCte, "reps")
 
   // ----------------------------------------------------- SimHash dedup
   /** SimHash(16-bit) pairs within Hamming ≤ 3, 4-segment pigeonhole
@@ -272,9 +261,7 @@ object NorthStarQueries extends QueryModule {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  private val qDedupSimhashScalableSql = simhashSqlOver(
-    "reps AS (\n  SELECT MIN(doc_id) AS doc_id, text FROM documents GROUP BY text),\n",
-    "reps")
+  private val qDedupSimhashScalableSql = simhashSqlOver(RepsCte, "reps")
 
   // ------------------------------------------------- similarity search
   private def queryVecs(implicit s: SparkSession, dir: String): DataFrame =
@@ -1431,9 +1418,7 @@ object NorthStarQueries extends QueryModule {
         bands = 4, threshold = 0.5)
       .orderBy(col("id_a"), col("id_b"))
 
-  private val qDedupMinhashScalableSql = minhashSqlOver(
-    "reps AS (\n  SELECT MIN(doc_id) AS doc_id, text FROM documents GROUP BY text),\n",
-    "reps")
+  private val qDedupMinhashScalableSql = minhashSqlOver(RepsCte, "reps")
 
   // --------------------------------------------- near-dup CLUSTERS
   /** Pair→GROUP resolution: the scalable composed path's candidate
@@ -1449,10 +1434,13 @@ object NorthStarQueries extends QueryModule {
         bands = 4, threshold = 0.5)
       .orderBy(col("keeper"), col("doc_id"))
 
-  private val qDedupClustersSql =
-    s"""WITH RECURSIVE ${minhashPairCtes(
-          "reps AS (\n  SELECT MIN(doc_id) AS doc_id, text FROM documents GROUP BY text),\n",
-          "reps")},
+  /** [[minhashPairCtes]] over `reps`, then the DuckDB twin of
+    * [[Dedup.connectedComponents]] as a recursive reachability CTE:
+    * `lab(id, comp)`, comp = the smallest id reachable through `pairs`
+    * (min over reachable ids ≡ converged min-label). Needs `WITH
+    * RECURSIVE`. */
+  private val repsComponentCtes =
+    s"""${minhashPairCtes(RepsCte, "reps")},
        |edges AS (
        |  SELECT id_a AS src, id_b AS dst FROM pairs
        |  UNION ALL
@@ -1461,7 +1449,10 @@ object NorthStarQueries extends QueryModule {
        |  SELECT src, src FROM edges
        |  UNION
        |  SELECT e.src, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
-       |lab AS (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id),
+       |lab AS (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id)""".stripMargin
+
+  private val qDedupClustersSql =
+    s"""WITH RECURSIVE $repsComponentCtes,
        |sz AS (SELECT comp, COUNT(*) AS cluster_size FROM lab GROUP BY comp)
        |SELECT lab.id AS doc_id, lab.comp AS keeper, sz.cluster_size
        |FROM lab JOIN sz USING (comp)
@@ -1632,9 +1623,7 @@ object NorthStarQueries extends QueryModule {
     * near-dup pairs fanned out to every copy combination. Exactly the
     * engine's collapse-first production posture, replayed in SQL. */
   private val qStreamDedupStoreSql =
-    s"""WITH ${minhashPairCtes(
-          "reps AS (\n  SELECT MIN(doc_id) AS doc_id, text FROM documents GROUP BY text),\n",
-          "reps")},
+    s"""WITH ${minhashPairCtes(RepsCte, "reps")},
        |fams AS (SELECT d.doc_id, r.doc_id AS rep FROM documents d
        |  JOIN reps r ON r.text = d.text),
        |cross_fam AS (
@@ -1672,18 +1661,31 @@ object NorthStarQueries extends QueryModule {
   private def curatedBand(implicit s: SparkSession, dir: String): DataFrame = {
     val reps = Dedup.exactDedup(
       docs.select(col("doc_id"), col("text"), col("lang")), "doc_id", Seq("text"))
-    val pairs = Dedup.nearDupPairs(
-      reps.select(col("doc_id"), col("text")), "doc_id", "text",
-      n = 3, k = MhK, bands = MhBands, threshold = 0.5)
-    val comps = Dedup.connectedComponents(pairs, "id_a", "id_b")
-    val dropIds = comps.where(col("id") =!= col("comp"))
-      .select(col("id").as("doc_id"))
-    val curated = reps.join(dropIds, Seq("doc_id"), "left_anti")
-    val scored = curated.select(col("doc_id"), col("lang"),
-      TextFns.qualityScore(col("text")).as("quality"))
-    Selection.percentileBand(scored, "lang", "quality",
-      0.25, 0.75, minGroupSize = 20)
+    val curated = clusterKeepers(reps, nearDups(reps))
+    langBand(curated.select(col("doc_id"), col("lang"),
+      TextFns.qualityScore(col("text")).as("quality")))
   }
+
+  /** The near-dup step of every curate query: MinHash(12)+LSH(4×3)
+    * pairs verified at Jaccard ≥ 0.5 over `reps`' (doc_id, text). */
+  private def nearDups(reps: DataFrame): DataFrame =
+    Dedup.nearDupPairs(reps.select(col("doc_id"), col("text")), "doc_id", "text",
+      n = 3, k = MhK, bands = MhBands, threshold = 0.5)
+
+  /** The keeper step: `df` without the near-dup cluster members that
+    * are not their cluster's keeper (its smallest id), by connected
+    * components over `pairs`. */
+  private def clusterKeepers(df: DataFrame, pairs: DataFrame): DataFrame = {
+    val dropIds = Dedup.connectedComponents(pairs, "id_a", "id_b")
+      .where(col("id") =!= col("comp"))
+      .select(col("id").as("doc_id"))
+    df.join(dropIds, Seq("doc_id"), "left_anti")
+  }
+
+  /** The quality step: per language, the middle band (p25..p75) of
+    * `scored`'s quality; a language under 20 docs passes whole. */
+  private def langBand(scored: DataFrame): DataFrame =
+    Selection.percentileBand(scored, "lang", "quality", 0.25, 0.75, minGroupSize = 20)
 
   /** Production sink for the curated corpus: [[curatedBand]] written
     * as parquet `partitionBy(lang)` — the layout training reads want —
@@ -1723,18 +1725,7 @@ object NorthStarQueries extends QueryModule {
     * [[curatedBand]], shared by the pipeline and sink oracles. */
   private val curateBandCtes = {
     val (_, _, quality) = qualitySqlBits
-    s"""${minhashPairCtes(
-          "reps AS (\n  SELECT MIN(doc_id) AS doc_id, text FROM documents GROUP BY text),\n",
-          "reps")},
-       |edges AS (
-       |  SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT id_b AS src, id_a AS dst FROM pairs),
-       |reach(id, comp) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.src, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
-       |lab AS (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id),
+    s"""$repsComponentCtes,
        |curated AS (
        |  SELECT r.doc_id, d.lang, d.text
        |  FROM reps r JOIN documents d ON d.doc_id = r.doc_id
@@ -1788,22 +1779,14 @@ object NorthStarQueries extends QueryModule {
   private def qCurateFunnel(implicit s: SparkSession, dir: String): DataFrame = {
     val reps = graft.core.Caches.track(Dedup.exactDedup(
       docs.select(col("doc_id"), col("text"), col("lang")), "doc_id", Seq("text")))
-    val pairs = Dedup.nearDupPairs(
-      reps.select(col("doc_id"), col("text")), "doc_id", "text",
-      n = 3, k = MhK, bands = MhBands, threshold = 0.5)
-    val comps = Dedup.connectedComponents(pairs, "id_a", "id_b")
-    val dropIds = comps.where(col("id") =!= col("comp"))
-      .select(col("id").as("doc_id"))
+    val pairs = nearDups(reps)
     val oReps = org.apache.spark.sql.Observation()
     val oCur = org.apache.spark.sql.Observation()
     val curated = graft.core.Caches.track(
-      reps.toDF.observe(oReps, count(lit(1)).as("n"))
-        .join(dropIds, Seq("doc_id"), "left_anti")
+      clusterKeepers(reps.toDF.observe(oReps, count(lit(1)).as("n")), pairs)
         .observe(oCur, count(lit(1)).as("n")))
-    val scored = curated.select(col("doc_id"), col("lang"),
-      TextFns.qualityScore(col("text")).as("quality"))
-    val band = Selection.percentileBand(scored, "lang", "quality",
-      0.25, 0.75, minGroupSize = 20)
+    val band = langBand(curated.select(col("doc_id"), col("lang"),
+      TextFns.qualityScore(col("text")).as("quality")))
     // ONE pass: counting the band materializes the cached chain and
     // fires both in-flight metrics (every reps row crosses the
     // anti-join input; every keeper row crosses its output). The raw
@@ -1866,9 +1849,7 @@ object NorthStarQueries extends QueryModule {
       d.groupBy(col("text")).agg(min(col("doc_id")).as("rep"))
         .select(md5(col("text")).as("_dig"), col("rep"), col("text")))
     val reps = fam.select(col("rep").as("doc_id"), col("text"))
-    val pairs = Dedup.nearDupPairs(reps, "doc_id", "text",
-      n = 3, k = MhK, bands = MhBands, threshold = 0.5)
-    val comps = Dedup.connectedComponents(pairs, "id_a", "id_b")
+    val comps = Dedup.connectedComponents(nearDups(reps), "id_a", "id_b")
     val rooted = d.select(col("doc_id"), md5(col("text")).as("_dig"))
       .join(fam.select(col("_dig"), col("rep")), Seq("_dig"))
       .join(comps.withColumnRenamed("id", "rep"), Seq("rep"), "left")
@@ -1905,18 +1886,7 @@ object NorthStarQueries extends QueryModule {
   private val qSplitLeakageSafeSql = {
     val h15 = graft.operators.Scorers.ProxyBackend
       .h15Sql(7L, "'famsplit:' || CAST(family AS VARCHAR)")
-    s"""WITH RECURSIVE ${minhashPairCtes(
-          "reps AS (\n  SELECT MIN(doc_id) AS doc_id, text FROM documents GROUP BY text),\n",
-          "reps")},
-       |edges AS (
-       |  SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT id_b AS src, id_a AS dst FROM pairs),
-       |reach(id, comp) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.src, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
-       |lab AS (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id),
+    s"""WITH RECURSIVE $repsComponentCtes,
        |docfam AS (
        |  SELECT d.doc_id, coalesce(lab.comp, r.doc_id) AS family
        |  FROM documents d JOIN reps r ON r.text = d.text
@@ -1986,9 +1956,7 @@ object NorthStarQueries extends QueryModule {
         bands = MhBands).write.parquet(s"$p/banded")
       Dedup.shingleSets(reps, "doc_id", "text", n = 3)
         .write.parquet(s"$p/sets")
-      Dedup.nearDupPairs(reps.select(col("doc_id"), col("text")),
-          "doc_id", "text", n = 3, k = MhK, bands = MhBands, threshold = 0.5)
-        .select(col("id_a"), col("id_b")).write.parquet(s"$p/pairs")
+      nearDups(reps).select(col("id_a"), col("id_b")).write.parquet(s"$p/pairs")
       reps.select(col("doc_id"), col("lang"),
           TextFns.qualityScore(col("text")).as("quality"))
         .write.parquet(s"$p/scored")
@@ -2005,6 +1973,31 @@ object NorthStarQueries extends QueryModule {
         .agg(min(col("doc_id")).as("dmin"),
           min_by(col("lang"), col("doc_id")).as("dlang"),
           min_by(col("text"), col("doc_id")).as("dtext")))
+    mergeCurateDelta(state, dfam) { (newFams, relabel) =>
+      val newBanded = Dedup.bandedSignatures(newFams, "doc_id", "text",
+        n = 3, k = MhK, bands = MhBands)
+      val allSets = s.read.parquet(s"$state/sets")
+        .unionByName(Dedup.shingleSets(newFams, "doc_id", "text", n = 3))
+      orderedPairs(relabel(relabel(
+        Dedup.incrementalNearDupPairs(newBanded,
+            s.read.parquet(s"$state/banded"), allSets, "doc_id",
+            threshold = 0.5)
+          .select(col("id_a"), col("id_b")), "id_a"), "id_b"))
+    }
+  }
+
+  /** The delta merge behind [[qCurateIncremental]] and
+    * [[streamCurateResult]]: the persisted v0 state at `state` meets the
+    * delta's families `dfam` (digest, dmin, dlang, dtext) by digest. A
+    * delta family whose min id undercuts its v0 rep relabels that rep
+    * everywhere downstream; a digest v0 lacks is a new family.
+    * `deltaPairs(newFams, relabel)` gives the delta-touching pairs, as
+    * (id_a < id_b) under the final rep ids; with the relabelled v0
+    * pairs and scores they go through the same keeper and band steps as
+    * a from-scratch curate. */
+  private def mergeCurateDelta(state: String, dfam: DataFrame)
+                              (deltaPairs: (DataFrame, (DataFrame, String) => DataFrame) => DataFrame)
+                              (implicit s: SparkSession): DataFrame = {
     val j = s.read.parquet(s"$state/fam")
       .join(dfam, Seq("digest"), "full_outer")
     // rep id changes (smaller delta id joined an existing family) —
@@ -2022,25 +2015,11 @@ object NorthStarQueries extends QueryModule {
           Seq(c), "left")
         .withColumn(c, coalesce(col("_new"), col(c))).drop("_new")
 
-    val pairs0r = relabel(relabel(s.read.parquet(s"$state/pairs"),
-        "id_a"), "id_b")
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-    val newBanded = Dedup.bandedSignatures(newFams, "doc_id", "text",
-      n = 3, k = MhK, bands = MhBands)
-    val allSets = s.read.parquet(s"$state/sets")
-      .unionByName(Dedup.shingleSets(newFams, "doc_id", "text", n = 3))
-    val incPairs = relabel(relabel(
-        Dedup.incrementalNearDupPairs(newBanded,
-            s.read.parquet(s"$state/banded"), allSets, "doc_id",
-            threshold = 0.5)
-          .select(col("id_a"), col("id_b")), "id_a"), "id_b")
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-    // disjoint by construction: v0 pairs are old×old, probe pairs
+    // disjoint by construction: v0 pairs are old×old, delta pairs
     // touch ≥1 new family
-    val pairsAll = pairs0r.unionByName(incPairs)
-
+    val pairsAll = orderedPairs(relabel(relabel(s.read.parquet(s"$state/pairs"),
+        "id_a"), "id_b"))
+      .unionByName(deltaPairs(newFams, relabel))
     val scored0r = s.read.parquet(s"$state/scored")
       .join(broadcast(changed.select(col("_old").as("doc_id"),
         col("_new"), col("_nlang"))), Seq("doc_id"), "left")
@@ -2048,16 +2027,15 @@ object NorthStarQueries extends QueryModule {
         coalesce(col("_nlang"), col("lang")).as("lang"), col("quality"))
     val scoredNew = newFams.select(col("doc_id"), col("lang"),
       TextFns.qualityScore(col("text")).as("quality"))
-    val comps = Dedup.connectedComponents(pairsAll, "id_a", "id_b")
-    val dropIds = comps.where(col("id") =!= col("comp"))
-      .select(col("id").as("doc_id"))
-    val curated = scored0r.unionByName(scoredNew)
-      .join(dropIds, Seq("doc_id"), "left_anti")
-    Selection.percentileBand(curated, "lang", "quality",
-        0.25, 0.75, minGroupSize = 20)
+    langBand(clusterKeepers(scored0r.unionByName(scoredNew), pairsAll))
       .select(col("doc_id"), col("lang"), col("quality"))
       .orderBy(col("doc_id"))
   }
+
+  /** (id_a, id_b) pairs with the smaller id first. */
+  private def orderedPairs(pairs: DataFrame): DataFrame =
+    pairs.select(least(col("id_a"), col("id_b")).as("id_a"),
+      greatest(col("id_a"), col("id_b")).as("id_b"))
 
   private val qCurateIncrementalSql =
     s"""WITH RECURSIVE $curateBandCtes
@@ -2094,59 +2072,18 @@ object NorthStarQueries extends QueryModule {
       .agg(min(col("dmin")).as("dmin"),
         min_by(col("dlang"), col("dmin")).as("dlang"),
         min_by(col("dtext"), col("dmin")).as("dtext")))
-    val j = s.read.parquet(s"$state/fam")
-      .join(dfam, Seq("digest"), "full_outer")
-    val changed = graft.core.Caches.track(j
-      .where(col("rep").isNotNull && col("dmin") < col("rep"))
-      .select(col("rep").as("_old"), col("dmin").as("_new"),
-        col("dlang").as("_nlang")))
-    val newFams = graft.core.Caches.track(j.where(col("rep").isNull)
-      .select(col("dmin").as("doc_id"), col("dtext").as("text"),
-        col("dlang").as("lang")))
-
-    def relabel(df: DataFrame, c: String): DataFrame =
-      df.join(broadcast(changed.select(col("_old").as(c), col("_new"))),
-          Seq(c), "left")
-        .withColumn(c, coalesce(col("_new"), col(c))).drop("_new")
-
-    val pairs0r = relabel(relabel(s.read.parquet(s"$state/pairs"),
-        "id_a"), "id_b")
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-    // stream-emitted new×store pairs: digest → final new-family rep,
-    // store side relabeled (a smaller delta id may have taken over
-    // the store family's rep)
-    val streamMapped = relabel(streamPairs.distinct()
-        .join(dfam.select(col("digest"), col("dmin")), Seq("digest"))
-        .select(col("dmin").as("id_a"), col("store_id").as("id_b")),
-        "id_b")
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-    // delta-internal pairs, computed ONCE post-stream
-    val newnew = Dedup.nearDupPairs(
-        newFams.select(col("doc_id"), col("text")), "doc_id", "text",
-        n = 3, k = MhK, bands = MhBands, threshold = 0.5)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-    // disjoint by construction: old×old, new×store, new×new
-    val pairsAll = pairs0r.unionByName(streamMapped).unionByName(newnew)
-
-    val scored0r = s.read.parquet(s"$state/scored")
-      .join(broadcast(changed.select(col("_old").as("doc_id"),
-        col("_new"), col("_nlang"))), Seq("doc_id"), "left")
-      .select(coalesce(col("_new"), col("doc_id")).as("doc_id"),
-        coalesce(col("_nlang"), col("lang")).as("lang"), col("quality"))
-    val scoredNew = newFams.select(col("doc_id"), col("lang"),
-      TextFns.qualityScore(col("text")).as("quality"))
-    val comps = Dedup.connectedComponents(pairsAll, "id_a", "id_b")
-    val dropIds = comps.where(col("id") =!= col("comp"))
-      .select(col("id").as("doc_id"))
-    val curated = scored0r.unionByName(scoredNew)
-      .join(dropIds, Seq("doc_id"), "left_anti")
-    Selection.percentileBand(curated, "lang", "quality",
-        0.25, 0.75, minGroupSize = 20)
-      .select(col("doc_id"), col("lang"), col("quality"))
-      .orderBy(col("doc_id"))
+    mergeCurateDelta(state, dfam) { (newFams, relabel) =>
+      // stream-emitted new×store pairs: digest → final new-family rep,
+      // store side relabeled (a smaller delta id may have taken over
+      // the store family's rep)
+      val streamMapped = orderedPairs(relabel(streamPairs.distinct()
+          .join(dfam.select(col("digest"), col("dmin")), Seq("digest"))
+          .select(col("dmin").as("id_a"), col("store_id").as("id_b")),
+          "id_b"))
+      // delta-internal pairs, computed ONCE post-stream; disjoint from
+      // the new×store pairs by construction
+      streamMapped.unionByName(orderedPairs(nearDups(newFams)))
+    }
   }
 
   private def qStreamCurate(implicit s: SparkSession, dir: String): DataFrame =

@@ -645,10 +645,7 @@ object EventStreams {
         // batch-bounded candidates: broadcast the measured-small
         // pair side so the STORE-sized sets frame is scanned, not
         // re-shuffled by id twice per micro-batch
-        Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")
-          .where(col("jaccard") >= threshold)
-          .select(col("id_a"), col("id_b"),
-            round(col("jaccard"), 6).as("jaccard"))
+        Dedup.verifiedPairs(cands, sets, "doc_id", threshold)
           .write.mode("overwrite").parquet(s"$out/b=$id")
       })
     spark.read.parquet(out).select("id_a", "id_b", "jaccard")
@@ -717,8 +714,7 @@ object EventStreams {
             // resolves). Adaptive verification: the candidate set is
             // batch-bounded, so the v0-store-sized sets frame is
             // scanned in place instead of shuffled twice per batch.
-            Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")
-              .where(col("jaccard") >= threshold)
+            Dedup.verifiedPairs(cands, sets, "doc_id", threshold)
               .join(broadcast(newCand.select(col("dmin").as("id_a"),
                 col("digest").as("dg_a"))), Seq("id_a"), "left")
               .join(broadcast(newCand.select(col("dmin").as("id_b"),

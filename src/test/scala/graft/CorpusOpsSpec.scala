@@ -117,6 +117,12 @@ class CorpusOpsSpec extends AnyFunSuite {
       (20L, (1 to 10).map("a" + _).mkString(" ")),
       (30L, (1 to 7).map("g" + _).mkString(" ")))
     val all = (v0 ++ delta).toDF("doc_id", "text")
+    // reclaim generations of this test that an earlier run left behind
+    // (one killed before its `finally`): the store root is shared
+    val leaked = Option(new java.io.File(Dedup.SpanStore.root).list()).toSeq.flatten
+      .filter(_.startsWith("span_store_spanday2_spec_"))
+    leaked.foreach(d => Dedup.SpanStore.vacuum(spark, d.stripPrefix("span_store_")))
+    assert(leaked.forall(d => !new java.io.File(Dedup.SpanStore.root, d).exists()))
     val tag = "spanday2_spec_" + System.nanoTime()
     try {
       Dedup.SpanStore.write(spark, v0.toDF("doc_id", "text"),
