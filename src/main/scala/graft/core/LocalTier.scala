@@ -3,6 +3,8 @@ package graft.core
 import scala.reflect.ClassTag
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftShims}
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** The small-input tier behind the driver-side gates (KMeans' Lloyd
   * rounds, connected components' union-find, the LSH verify's
@@ -29,4 +31,17 @@ object LocalTier {
     }.collect()
     if (parts.forall(_.isDefined)) Some(parts.map(_.get)) else None
   }
+
+  /** [[collectBounded]] over the longs `longs` draws from each row of
+    * `df`, one value each. Planning `df` runs its stages' jobs at once,
+    * outside any action, so the gate runs in `df`'s session's artifact
+    * scope ([[GraftShims.withSessionArtifacts]]): the stages of a cached
+    * frame inside `df` then reuse their generated classes on the next
+    * call. */
+  def collectLongs(df: DataFrame, maxValues: Long)
+                  (longs: InternalRow => Iterator[Long]): Option[Array[Array[Long]]] =
+    GraftShims.withSessionArtifacts(df.sparkSession) {
+      collectBounded(df.queryExecution.toRdd.mapPartitions(_.flatMap(longs)),
+        maxValues)(_ => 1L)
+    }
 }

@@ -223,9 +223,8 @@ object Dedup {
                                              idCol: String, setCol: String,
                                              maxPairs: Long): DataFrame = {
     // id_a, id_b, id_a, id_b, … longs (a pair with a null id joins nothing)
-    val ends = pairs.queryExecution.toRdd.mapPartitions(_.flatMap(r =>
-      if (r.anyNull) Iterator.empty else Iterator(r.getLong(0), r.getLong(1))))
-    graft.core.LocalTier.collectBounded(ends, 2 * maxPairs)(_ => 1L) match {
+    graft.core.LocalTier.collectLongs(pairs, 2 * maxPairs)(r =>
+      if (r.anyNull) Iterator.empty else Iterator(r.getLong(0), r.getLong(1))) match {
       case None =>
         jaccardForPairs(pairs.localCheckpoint(), shingleSets, idCol, setCol)
           .select(col("id_a"), col("id_b"), col("jaccard"))
@@ -341,11 +340,10 @@ object Dedup {
                                                   maxEnds: Long): (DataFrame, Int) = {
     val edges = edgeList(pairs, idA, idB)
     // each undirected edge once: src, dst, src, dst, … longs
-    val ends = edges.queryExecution.toRdd.mapPartitions(_.flatMap { r =>
+    graft.core.LocalTier.collectLongs(edges, maxEnds) { r =>
       if (r.getLong(0) <= r.getLong(1)) Iterator(r.getLong(0), r.getLong(1))
       else Iterator.empty
-    })
-    graft.core.LocalTier.collectBounded(ends, maxEnds)(_ => 1L) match {
+    } match {
       case Some(parts) =>
         (componentsOnDriver(edges.sparkSession, Array.concat(parts.toIndexedSeq: _*)), 0)
       case None => propagateLabels(edges.localCheckpoint(), maxIter)

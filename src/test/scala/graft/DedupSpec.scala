@@ -663,6 +663,26 @@ class DedupSpec extends AnyFunSuite {
     assert(jobs(Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")) == 1)
   }
 
+  test("a second below-gate LSH verify over cached candidates compiles no classes") {
+    // candidates come from a cached frame with a shuffle inside, as
+    // every graft caller's do; each persist clones the session, and
+    // unless the gate job runs in the caller's session's artifact scope
+    // the cached stages get a new executor class loader, which Spark's
+    // codegen cache is keyed on, so they recompile on every call
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val (_, sets) = verifyInputs
+    def verify(pairs: Seq[(Long, Long)]): Unit = {
+      val cands = pairs.toDF("id_a", "id_b").distinct().persist()
+      try Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset").collect()
+      finally cands.unpersist()
+    }
+    verify(Seq((1L, 2L), (1L, 4L), (2L, 4L), (1L, 3L)))
+    val before = compiles.getCount
+    // same shape: 4 pairs, and neither join key is unique on either call
+    verify(Seq((1L, 3L), (2L, 3L), (3L, 4L), (2L, 4L)))
+    assert(compiles.getCount - before == 0L)
+  }
+
   test("connectedComponents: a partition over its share routes to label propagation") {
     val conf = spark.conf
     val saved = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
