@@ -6,7 +6,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.catalyst.InternalRow
 
-/** The small-input tier behind the driver-side gates (KMeans' Lloyd
+/** The small-input tier behind the collecting [[Gate]]s (KMeans' Lloyd
   * rounds, connected components' union-find, the LSH verify's
   * broadcast joins): one job that is both the gate and the collect. */
 object LocalTier {
@@ -33,15 +33,16 @@ object LocalTier {
   }
 
   /** [[collectBounded]] over the longs `longs` draws from each row of
-    * `df`, one value each. Planning `df` runs its stages' jobs at once,
+    * `df`, one value each, concatenated in partition order. Planning
+    * `df` runs its stages' jobs at once,
     * outside any action, so the gate runs in `df`'s session's artifact
     * scope ([[GraftShims.withSessionArtifacts]]): the stages of a cached
     * frame inside `df` then reuse their generated classes on the next
     * call. */
   def collectLongs(df: DataFrame, maxValues: Long)
-                  (longs: InternalRow => Iterator[Long]): Option[Array[Array[Long]]] =
+                  (longs: InternalRow => Iterator[Long]): Option[Array[Long]] =
     GraftShims.withSessionArtifacts(df.sparkSession) {
       collectBounded(df.queryExecution.toRdd.mapPartitions(_.flatMap(longs)),
         maxValues)(_ => 1L)
-    }
+    }.map(parts => Array.concat(parts.toIndexedSeq: _*))
 }

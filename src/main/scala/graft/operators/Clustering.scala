@@ -41,14 +41,14 @@ object Clustering {
     *
     * Two paths, chosen by a measured-size gate that costs no extra job:
     *  - *Driver path.* [[driverKMeans]] persists the vectors MLlib would
-    *    build and collects them in one [[graft.core.LocalTier]] job
-    *    while each partition holds at most its share of 2^22 values
-    *    ([[DriverValues]]: 32 MB as doubles, plus a small header per
-    *    point). If it did and rows ≥ dim, MLlib's own k-means|| init
-    *    runs (still distributed, ~7 jobs) and then Lloyd's rounds run
-    *    on the driver with MLlib's own code, so no round costs a Spark
-    *    job. Labels come from the resulting mllib model's `predict`,
-    *    the call ml's `transform` makes.
+    *    build and collects them in the one job of the
+    *    [[graft.core.Gate.KMeansValues]] gate while each partition
+    *    holds at most its share of the gate's values (plus a small
+    *    header per point). If it did and rows ≥ dim, MLlib's own
+    *    k-means|| init runs (still distributed, ~7 jobs) and then
+    *    Lloyd's rounds run on the driver with MLlib's own code, so no
+    *    round costs a Spark job. Labels come from the resulting mllib
+    *    model's `predict`, the call ml's `transform` makes.
     *  - *MLlib path.* Otherwise `ml.clustering.KMeans` fits and
     *    transforms as before: one shuffled job per Lloyd round, centers
     *    broadcast. This is the path for inputs too large for the
@@ -94,7 +94,7 @@ object Clustering {
                    seed: Long = 0L): DataFrame = {
     val rows = if (shuffleFree(df)) graft.core.Caches.track(df) else df
     val withVec = rows.withColumn("_features", features(embCol))
-    val labeled = driverKMeans(withVec, "_features", k, seed, DriverValues) match {
+    val labeled = driverKMeans(withVec, "_features", k, seed) match {
       case Some(model) =>
         val predict = udf((v: Vector) => model.predict(OldVectors.fromML(v)))
         // ml's transform tags the prediction as nominal with one value
@@ -117,21 +117,17 @@ object Clustering {
     when(col(embCol).isNull, raise_error(lit("Vectors MUST NOT be Null")))
       .otherwise(array_to_vector(col(embCol)))
 
-  /** Most vector values [[driverKMeans]] collects to the driver. */
-  private[graft] val DriverValues: Long = 1L << 22
-
   /** The KMeans estimator whose defaults both paths follow. */
   private def estimator(k: Int, seed: Long): KMeans =
     new KMeans().setK(k).setSeed(seed)
 
   /** The driver path of [[kmeansLabels]]: the mllib model
     * `ml.clustering.KMeans` with its defaults would fit on `featuresCol`
-    * (bitwise-equal centers), or `None` when some partition holds more
-    * than `maxValues` / numPartitions values or the input has fewer
-    * rows than dimensions (ml's block solver). */
+    * (bitwise-equal centers), or `None` when the input is over the
+    * [[graft.core.Gate.KMeansValues]] gate or has fewer rows than
+    * dimensions (ml's block solver). */
   private[graft] def driverKMeans(withVec: DataFrame, featuresCol: String,
-                                  k: Int, seed: Long, maxValues: Long)
-      : Option[MllibKMeansModel] = {
+                                  k: Int, seed: Long): Option[MllibKMeansModel] = {
     // ml.KMeans.trainWithRow's instances: the same projection (so the
     // same partitions and row order), weight 1.0
     val instances = withVec.select(checkedVector(col(featuresCol)), lit(1.0)).rdd
@@ -145,7 +141,7 @@ object Clustering {
       .setSeed(est.getSeed)
       .setEpsilon(est.getTol)
       .setDistanceMeasure(est.getDistanceMeasure)
-    GraftKMeans.fitOnDriver(instances, algo, maxValues)
+    GraftKMeans.fitOnDriver(instances, algo)
   }
 
   /** ml's input contract for KMeans (its `private[ml]`

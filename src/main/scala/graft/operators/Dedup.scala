@@ -199,14 +199,11 @@ object Dedup {
     * — re-shuffling the heavy array payload TWICE just to attach two
     * arrays to each pair (guide §8: decide with small rows, move the
     * heavy side as little as possible). While every partition holds at
-    * most its share of 2^18 pairs, one [[graft.core.LocalTier]] job
-    * brings them to the driver as packed longs, and they come back as a
-    * local relation (exact size for the planner), BROADCAST into both
-    * joins: the sets frame is then only ever scanned, never shuffled.
-    * The second join's build side carries one shingle array per pair,
-    * so the gate is sized for that payload (2^18 pairs × ~2 KB of
-    * array ≈ a few hundred MB hashed), an order under the id-only 4M
-    * gates elsewhere. Every graft caller's pairs end in a `distinct`, a
+    * most its share of [[graft.core.Gate.LshVerifyPairs]], that gate's
+    * one job brings them to the driver as packed longs, and they come
+    * back as a local relation (exact size for the planner), BROADCAST
+    * into both joins: the sets frame is then only ever scanned, never
+    * shuffled. Every graft caller's pairs end in a `distinct`, a
     * hash shuffle on the pair, so each partition holds about its share
     * of the total and the share acts as the total's bound. Above the
     * gate the pairs keep the shuffled shape over a checkpoint that
@@ -216,21 +213,15 @@ object Dedup {
     * cannot change the multiset; DedupSpec asserts equality on both
     * branches). */
   def jaccardForPairsAdaptive(pairs: DataFrame, shingleSets: DataFrame,
-                              idCol: String, setCol: String): DataFrame =
-    jaccardForPairsAdaptive(pairs, shingleSets, idCol, setCol, 1L << 18)
-
-  private[graft] def jaccardForPairsAdaptive(pairs: DataFrame, shingleSets: DataFrame,
-                                             idCol: String, setCol: String,
-                                             maxPairs: Long): DataFrame = {
+                              idCol: String, setCol: String): DataFrame = {
     // id_a, id_b, id_a, id_b, … longs (a pair with a null id joins nothing)
-    graft.core.LocalTier.collectLongs(pairs, 2 * maxPairs)(r =>
+    graft.core.Gate.LshVerifyPairs.collectLongs(pairs, 2)(r =>
       if (r.anyNull) Iterator.empty else Iterator(r.getLong(0), r.getLong(1))) match {
       case None =>
         jaccardForPairs(pairs.localCheckpoint(), shingleSets, idCol, setCol)
           .select(col("id_a"), col("id_b"), col("jaccard"))
-      case Some(parts) =>
+      case Some(e) =>
         import pairs.sparkSession.implicits._
-        val e = Array.concat(parts.toIndexedSeq: _*)
         val p = Seq.tabulate(e.length / 2)(i => (e(2 * i), e(2 * i + 1))).toDF("id_a", "id_b")
         val withA = shingleSets
           .join(broadcast(p), col(idCol) === col("id_a"))
@@ -303,17 +294,12 @@ object Dedup {
     * (pair A–B plus B–C → one keeper for {A,B,C}), which is what a
     * corpus-dedup run actually keys its keep/drop decision on.
     *
-    * The pairs become a distinct two-direction edge list, and one
-    * [[graft.core.LocalTier.collectBounded]] job over it picks a path:
-    *  - while every partition holds at most its share of 4M edge ends
-    *    (each undirected edge once, as two longs — the common case, as
-    *    only near-dup members appear): that job has collected them, and
-    *    one union-find pass over the sorted node ids resolves them on
-    *    the driver. Driver memory at the gate, all primitive arrays:
-    *    ≤ 32 MB collected, ≤ 32 MB sorted into ≤ 4M distinct ids, 16 MB
-    *    of int parents and ≤ 64 MB of (id, comp) slices shipped back —
-    *    below the 200–400 MB HashedRelation the broadcast label join it
-    *    replaces built every round. Rounds = 0.
+    * The pairs become a distinct two-direction edge list, and the one
+    * job of the [[graft.core.Gate.CcEdgeEnds]] gate over it picks a path:
+    *  - while every partition holds at most its share of the gate's
+    *    edge ends (the common case, as only near-dup members appear):
+    *    that job has collected them, and one union-find pass over the
+    *    sorted node ids resolves them on the driver. Rounds = 0.
     *  - above the gate: shuffled smallest-id label propagation
     *    ([[propagateLabels]]) over a checkpoint of the same edge list
     *    (reusing the gate job's shuffle), never holding the graph on
@@ -330,22 +316,14 @@ object Dedup {
   /** [[connectedComponents]] plus the label-propagation round count it
     * took to converge (0 when the driver path resolved it). */
   def connectedComponentsWithIters(pairs: DataFrame, idA: String, idB: String,
-                                   maxIter: Int = 50): (DataFrame, Int) =
-    connectedComponentsWithIters(pairs, idA, idB, maxIter, 4000000L)
-
-  /** The gate at `maxEnds` edge ends; 0 runs label propagation on any
-    * graph with an edge, so specs and ScaleSmoke can measure rounds. */
-  private[graft] def connectedComponentsWithIters(pairs: DataFrame, idA: String,
-                                                  idB: String, maxIter: Int,
-                                                  maxEnds: Long): (DataFrame, Int) = {
+                                   maxIter: Int = 50): (DataFrame, Int) = {
     val edges = edgeList(pairs, idA, idB)
     // each undirected edge once: src, dst, src, dst, … longs
-    graft.core.LocalTier.collectLongs(edges, maxEnds) { r =>
+    graft.core.Gate.CcEdgeEnds.collectLongs(edges, 1) { r =>
       if (r.getLong(0) <= r.getLong(1)) Iterator(r.getLong(0), r.getLong(1))
       else Iterator.empty
     } match {
-      case Some(parts) =>
-        (componentsOnDriver(edges.sparkSession, Array.concat(parts.toIndexedSeq: _*)), 0)
+      case Some(ends) => (componentsOnDriver(edges.sparkSession, ends), 0)
       case None => propagateLabels(edges.localCheckpoint(), maxIter)
     }
   }
@@ -376,7 +354,7 @@ object Dedup {
   }
 
   /** Union-find over packed (src, dst) edge longs that fit the driver
-    * (the gate in [[connectedComponentsWithIters]] sizes them). Node ids
+    * ([[graft.core.Gate.CcEdgeEnds]] sizes them). Node ids
     * are sorted, so a node's index orders like its id; unions keep the
     * smaller root, so every root is its component's smallest id. */
   private def componentsOnDriver(spark: org.apache.spark.sql.SparkSession,
@@ -421,8 +399,7 @@ object Dedup {
     * that contracts geometrically, the pointer-jumping trick of
     * hash-min connected components); converged when a round changes
     * nothing. Pure joins + grouped min — no graph library, nothing
-    * driver-side (the per-round change count rides the round's own
-    * materialization as an observed metric).
+    * driver-side but each round's change count.
     *
     * Scale posture: with path halving rounds are bounded by
     * O(log diameter) — near-dup graphs are overwhelmingly tiny
@@ -465,23 +442,14 @@ object Dedup {
       val hopMsg = labels.join(lk, col("comp") === col("_lid"))
         .select(col("id"), col("_lcomp").as("m"),
           lit(null).cast("long").as("_old"))
-      // the change count rides the checkpoint materialization as an
-      // observed metric — no second per-round action (max(_old) is the
-      // round's incoming label: exactly one self message per id). The
-      // read is non-blocking with a scan-count fallback over the
-      // checkpointed frame (which keeps _oldc for exactly this), so a
-      // listener regression degrades to the old one-count-job cost
-      // instead of hanging the loop.
-      val obs = org.apache.spark.sql.Observation()
+      // max(_old) is the round's incoming label (exactly one self
+      // message per id), kept in the checkpoint for the change count
       val next = selfMsg.unionByName(nbrMsg).unionByName(hopMsg)
         .groupBy(col("id"))
         .agg(min(col("m")).as("comp"), max(col("_old")).as("_oldc"))
-        .observe(obs, sum(when(col("comp") =!= col("_oldc"), 1L)
-          .otherwise(0L)).as("changed"))
       if (iter == 0) graft.core.LoopPlans.dump("cc_round", next)
       val nextCk = next.localCheckpoint()
-      changed = graft.core.Observed.longOr(obs, "changed",
-        nextCk.where(col("comp") =!= col("_oldc")))
+      changed = nextCk.where(col("comp") =!= col("_oldc")).count()
       labels = nextCk.select(col("id"), col("comp"))
       iter += 1
     }
@@ -1050,9 +1018,8 @@ object Dedup {
       // broadcast-build OOM where the unhinted plan merely degraded
       // to sort-merge. Both frames are cached, so the counts are the
       // cache materialization the probe pays anyway.
-      val deltaSmall = dFams.count() + dWins.count() <= 4000000L
-      def maybeBcast(df: DataFrame): DataFrame =
-        if (deltaSmall) broadcast(df) else df
+      val maybeBcast =
+        graft.core.Gate.SpanDeltaRows.maybeBroadcast(dFams.count() + dWins.count())
       val dOcc = newWins.join(newFams.select(col("dg"), col("sz")), Seq("dg"))
         .select(col("wid"), col("sz").as("_c"))
         .unionByName(storeWins.join(maybeBcast(reSz), Seq("dg"))

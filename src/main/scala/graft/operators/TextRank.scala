@@ -65,13 +65,9 @@ object TextRank {
     // the cached partitioning; ranks and sums are vocab-sized
     // (≪ edges) and broadcast onto the cached sides instead of
     // shuffling edges every round — GATED on the MEASURED vocab count
-    // (the same scale-adaptive maybeBcast as the connected-components
-    // loop): a (word, double) HashedRelation costs ~40–60 B/row plus
-    // the usual 3–6× build overhead, so 8M words is a few hundred MB
-    // and a 10^8-word vocabulary would be a multi-GB build per round
-    // × iters, brushing the 8 GB / 512M-row relation caps — above the
-    // gate the rounds keep shuffled joins over the dst-partitioned
-    // cached edges instead of failing hard
+    // (Gate.TextRankVocab): above the gate the rounds keep shuffled
+    // joins over the dst-partitioned cached edges instead of failing
+    // hard on a broadcast build
     val edges = raw.join(outw, "src")
       .select(col("src"), col("dst"), col("w"), col("wout"))
       .repartition(col("dst")).cache()
@@ -79,9 +75,7 @@ object TextRank {
     try {
       val n = nodes.count()
       require(n > 0, "textRank: empty co-occurrence graph")
-      val bcastOk = n <= 8000000L
-      def maybeBcast(df: DataFrame): DataFrame =
-        if (bcastOk) broadcast(df) else df
+      val maybeBcast = graft.core.Gate.TextRankVocab.maybeBroadcast(n)
       val base = (1.0 - damping) / n
       var ranks = nodes.withColumn("r", lit(round9(1.0 / n)))
         .localCheckpoint()

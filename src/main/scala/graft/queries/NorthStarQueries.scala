@@ -1769,33 +1769,23 @@ object NorthStarQueries extends QueryModule {
     * replays the same stage CTEs and counts the same frames.
     *
     * Scale posture: each count is a metadata-sized aggregate over a
-    * stage that is already scale-shaped (the DAG's own operators),
-    * and the intermediate counts ride the band evaluation itself as
-    * OBSERVED metrics (r15): the reps and keeper counts are collected
-    * on the rows already flowing through the anti-join during the one
-    * band pass, so the funnel pays exactly one traversal of the chain
-    * plus a parquet-footer count of the raw table — no per-stage
-    * re-scan aggregates, no new shuffles beyond the DAG's own. */
+    * stage that is already scale-shaped (the DAG's own operators):
+    * the band pass builds the cached reps and keepers once, the reps
+    * and keeper counts then scan those caches, and the raw count is a
+    * parquet-footer aggregate — no stage is re-run. */
   private def qCurateFunnel(implicit s: SparkSession, dir: String): DataFrame = {
     val reps = graft.core.Caches.track(Dedup.exactDedup(
       docs.select(col("doc_id"), col("text"), col("lang")), "doc_id", Seq("text")))
     val pairs = nearDups(reps)
-    val oReps = org.apache.spark.sql.Observation()
-    val oCur = org.apache.spark.sql.Observation()
-    val curated = graft.core.Caches.track(
-      clusterKeepers(reps.toDF.observe(oReps, count(lit(1)).as("n")), pairs)
-        .observe(oCur, count(lit(1)).as("n")))
+    val curated = graft.core.Caches.track(clusterKeepers(reps, pairs))
     val band = langBand(curated.select(col("doc_id"), col("lang"),
       TextFns.qualityScore(col("text")).as("quality")))
-    // ONE pass: counting the band materializes the cached chain and
-    // fires both in-flight metrics (every reps row crosses the
-    // anti-join input; every keeper row crosses its output). The raw
-    // count is a parquet metadata aggregate. Fallbacks recount from
-    // the by-then-materialized caches — the pre-r15 cost.
+    // the band count materializes both cached frames, so the two
+    // counts after it read the caches
     val nBand = band.count()
     val nDocs = docs.count()
-    val nReps = graft.core.Observed.longOr(oReps, "n", reps.toDF)
-    val nCur = graft.core.Observed.longOr(oCur, "n", curated)
+    val nReps = reps.count()
+    val nCur = curated.count()
     import s.implicits._
     Seq("0_raw" -> nDocs, "1_exact_reps" -> nReps,
         "2_cluster_keepers" -> nCur, "3_quality_band" -> nBand)

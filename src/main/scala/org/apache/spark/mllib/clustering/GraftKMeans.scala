@@ -21,9 +21,9 @@ object GraftKMeans {
     *    (`VectorWithNorm(v, Vectors.norm(v, 2.0), w)`) and persisted, so
     *    MLlib's distributed k-means|| init reads the same partitions in
     *    the same order;
-    *  - one [[graft.core.LocalTier.collectBounded]] job brings them to
-    *    the driver, at most `maxValues` vector values (else, or with
-    *    fewer rows than dimensions, the fit is `None`);
+    *  - the one job of the [[graft.core.Gate.KMeansValues]] gate brings
+    *    them to the driver (above the gate, or with fewer rows than
+    *    dimensions, the fit is `None`);
     *  - each round accumulates one partition's sums in row order with
     *    `findClosest` and `updateClusterSum`, exactly as an MLlib task
     *    does, and merges the partitions in index order with
@@ -36,15 +36,14 @@ object GraftKMeans {
     * order, so the last bits of that one number may differ. Only the
     * `k-means||` init mode is supported (`initRandom` is private to
     * MLlib's KMeans class). */
-  def fitOnDriver(instances: RDD[(Vector, Double)], algo: KMeans,
-                  maxValues: Long): Option[KMeansModel] = {
+  def fitOnDriver(instances: RDD[(Vector, Double)], algo: KMeans): Option[KMeansModel] = {
     require(algo.getInitializationMode == KMeans.K_MEANS_PARALLEL,
       s"driver-side Lloyd's supports only k-means|| init, not ${algo.getInitializationMode}")
     val data = instances
       .map { case (v, w) => new VectorWithNorm(v, Vectors.norm(v, 2.0), w) }
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      graft.core.LocalTier.collectBounded(data, maxValues)(_.vector.size.toLong)
+      graft.core.Gate.KMeansValues.collect(data)(_.vector.size.toLong)
         .filter(parts => parts.iterator.map(_.length.toLong).sum >=
           parts.iterator.flatten.map(_.vector.size).maxOption.getOrElse(0))
         .map { parts =>

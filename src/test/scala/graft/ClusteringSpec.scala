@@ -128,8 +128,7 @@ class ClusteringSpec extends AnyFunSuite {
   private def assertExact(pts: DataFrame, k: Int, seed: Long, what: String): Unit = {
     val plain = plainKMeans(pts, k, seed)
     val plainOut = plain.transform(withFeatures(pts)).drop("_features")
-    val driver = Clustering.driverKMeans(withFeatures(pts), "_features", k, seed,
-      Clustering.DriverValues)
+    val driver = Clustering.driverKMeans(withFeatures(pts), "_features", k, seed)
     assert(driver.isDefined, s"$what: routed to ml, not the driver")
     def bits(vs: Seq[Array[Double]]) =
       vs.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq)
@@ -187,8 +186,7 @@ class ClusteringSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(3L)
     val pts = spark.sparkContext.parallelize((0L until 63L).map(i =>
       (i, Array.fill(64)(rnd.nextGaussian().toFloat))), 2).toDF("vec_id", "embedding")
-    assert(Clustering.driverKMeans(withFeatures(pts), "_features", 4, 0L,
-      Clustering.DriverValues).isEmpty)
+    assert(Clustering.driverKMeans(withFeatures(pts), "_features", 4, 0L).isEmpty)
     val want = labelsOf(plainKMeans(pts, 4, 0L).transform(withFeatures(pts)))
     val got =
       try labelsOf(Clustering.kmeansLabels(pts, "embedding", 4, 0L))
@@ -196,12 +194,16 @@ class ClusteringSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("driverKMeans: a partition above its share of the value bound routes to ml") {
+  test("kmeansLabels forced past its gate routes to ml.KMeans with the driver path's labels") {
+    import graft.core.Gate
     val pts = blobs(400, 8, 4, parts = 4)
-    // 4 partitions of 100 rows × 8 values; a bound of 1 600 values
-    // allows 400 per partition, one of 12 800 allows 3 200
-    assert(Clustering.driverKMeans(withFeatures(pts), "_features", 4, 0L, 1600L).isEmpty)
-    assert(Clustering.driverKMeans(withFeatures(pts), "_features", 4, 0L, 3200L * 4).isDefined)
+    def labels = try labelsOf(Clustering.kmeansLabels(pts, "embedding", 4, 0L))
+      finally graft.core.Caches.releaseAll()
+    val (driver, below) = Gate.logged(force = false)(labels)
+    val (ml, above) = Gate.logged(force = true)(labels)
+    assert(below == Seq(Gate.Decision(Gate.KMeansValues, local = true)))
+    assert(above == Seq(Gate.Decision(Gate.KMeansValues, local = false)))
+    assert(ml == driver)
   }
 
   private def assertFailsWith(what: String, message: String)(body: => Any): Unit = {

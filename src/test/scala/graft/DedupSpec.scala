@@ -3,11 +3,20 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Gate
 import graft.operators.Dedup
 
 class DedupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** `body` with every measured-size gate forced to its distributed
+    * branch, checking that `gate` alone decided inside it. */
+  private def forced[A](gate: Gate)(body: => A): A = {
+    val (a, log) = Gate.logged(force = true)(body)
+    assert(log.nonEmpty && log.forall(_ == Gate.Decision(gate, local = false)), log)
+    a
+  }
 
   test("exactDedup keeps the smallest id per content") {
     val df = Seq((3L, "x"), (1L, "x"), (2L, "y")).toDF("id", "text")
@@ -196,7 +205,7 @@ class DedupSpec extends AnyFunSuite {
     // travel from one end; path halving contracts it in O(log 9) rounds
     val chain = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val (labels, itersChain) =
-      Dedup.connectedComponentsWithIters(chain, "id_a", "id_b", 50, 0L)
+      forced(Gate.CcEdgeEnds)(Dedup.connectedComponentsWithIters(chain, "id_a", "id_b"))
     assert(labels.as[(Long, Long)].collect().forall(_._2 == 0L))
     assert(itersChain <= 7, s"9-edge path took $itersChain rounds (want ~log)")
     // 200 extra 2-cliques (400 nodes): same chain, same round count —
@@ -204,30 +213,13 @@ class DedupSpec extends AnyFunSuite {
     val wide = chain.union(
       (100L until 300L).map(i => (2 * i, 2 * i + 1)).toDF("id_a", "id_b"))
     val (_, itersWide) =
-      Dedup.connectedComponentsWithIters(wide, "id_a", "id_b", 50, 0L)
+      forced(Gate.CcEdgeEnds)(Dedup.connectedComponentsWithIters(wide, "id_a", "id_b"))
     assert(itersWide == itersChain, s"$itersWide != $itersChain")
     // and a pure clique corpus converges in ~2 rounds regardless of size
     val cliques = (0L until 200L).map(i => (2 * i, 2 * i + 1)).toDF("id_a", "id_b")
     val (_, itersCliques) =
-      Dedup.connectedComponentsWithIters(cliques, "id_a", "id_b", 50, 0L)
+      forced(Gate.CcEdgeEnds)(Dedup.connectedComponentsWithIters(cliques, "id_a", "id_b"))
     assert(itersCliques <= 2, s"cliques took $itersCliques rounds")
-  }
-
-  test("an Observation on an eager localCheckpoint reaches Observed.longOr without its recount") {
-    // CC's above-gate propagation loop rides each round's change count
-    // on its checkpoint's observed metric, and q_curate_funnel its stage
-    // counts on its count pass; the recount is only the fallback for a
-    // metric that never arrives. The measured-size gates read no count:
-    // they run through LocalTier.collectBounded
-    def observedRows(df: org.apache.spark.sql.DataFrame): Long = {
-      val obs = org.apache.spark.sql.Observation()
-      df.observe(obs, sum(lit(1L)).as("n")).localCheckpoint()
-      graft.core.Observed.longOr(obs, "n",
-        fail("the observed metric never arrived; the recount ran"))
-    }
-    assert(observedRows(spark.range(1000).toDF()) == 1000L)
-    // sum over zero rows is null, read as 0
-    assert(observedRows(spark.range(10).where("id < 0").toDF()) == 0L)
   }
 
   test("incremental dedup == full run restricted to delta-touching pairs; corpus never shuffles") {
@@ -551,20 +543,20 @@ class DedupSpec extends AnyFunSuite {
 
   test("connectedComponents: message-union rounds resolve a planted path + star exactly") {
     // a 6-node path (worst shape for round count — exercises several
-    // observed-change rounds) plus a star and an isolated pair
+    // changing rounds) plus a star and an isolated pair
     val pathEdges = (10L until 15L).map(i => (i, i + 1))
     val starEdges = Seq((20L, 21L), (20L, 22L), (20L, 23L))
     val pairEdge  = Seq((30L, 31L))
     val pairs = (pathEdges ++ starEdges ++ pairEdge).toDF("id_a", "id_b")
     val (labels, iters) =
-      Dedup.connectedComponentsWithIters(pairs, "id_a", "id_b", 50, 0L)
+      forced(Gate.CcEdgeEnds)(Dedup.connectedComponentsWithIters(pairs, "id_a", "id_b"))
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (10L to 15L).foreach(i => assert(got(i) == 10L, s"path node $i → ${got(i)}"))
     (20L to 23L).foreach(i => assert(got(i) == 20L, s"star node $i → ${got(i)}"))
     Seq(30L, 31L).foreach(i => assert(got(i) == 30L, s"pair node $i → ${got(i)}"))
     assert(got.size == 12)
     // path halving: the 6-path converges in O(log n) rounds, and the
-    // final round is the observed-zero-change fixpoint confirmation
+    // final round is the zero-change fixpoint confirmation
     assert(iters >= 2 && iters <= 6, s"iters=$iters")
   }
 
@@ -587,7 +579,8 @@ class DedupSpec extends AnyFunSuite {
     for ((name, pairs) <- graphs) {
       val (driver, rounds) = Dedup.connectedComponentsWithIters(pairs, "id_a", "id_b")
       assert(rounds == 0, s"$name: the small graph did not take the driver path")
-      val (loop, loopRounds) = Dedup.connectedComponentsWithIters(pairs, "id_a", "id_b", 50, 0L)
+      val (loop, loopRounds) =
+        forced(Gate.CcEdgeEnds)(Dedup.connectedComponentsWithIters(pairs, "id_a", "id_b"))
       assert(loopRounds >= 1)
       val got = driver.as[(Long, Long)].collect().sorted.toSeq
       val want = loop.as[(Long, Long)].collect().sorted.toSeq
@@ -642,12 +635,10 @@ class DedupSpec extends AnyFunSuite {
 
   test("jaccardForPairsAdaptive returns identical rows above and below its gate") {
     val (cands, sets) = verifyInputs
-    def rows(maxPairs: Long) =
-      Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset", maxPairs)
-        .as[(Long, Long, Double)].collect().sorted.toSeq
-    val below = rows(1L << 18)
-    // a bound of 0 leaves no partition room for a single pair
-    val above = rows(0L)
+    def rows = Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")
+      .as[(Long, Long, Double)].collect().sorted.toSeq
+    val below = rows
+    val above = forced(Gate.LshVerifyPairs)(rows)
     assert(below.size == 4 && below == above, s"below $below != above $above")
   }
 
@@ -681,30 +672,5 @@ class DedupSpec extends AnyFunSuite {
     // same shape: 4 pairs, and neither join key is unique on either call
     verify(Seq((1L, 3L), (2L, 3L), (3L, 4L), (2L, 4L)))
     assert(compiles.getCount - before == 0L)
-  }
-
-  test("connectedComponents: a partition over its share routes to label propagation") {
-    val conf = spark.conf
-    val saved = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
-      .map(k => k -> conf.getOption(k))
-    conf.set("spark.sql.shuffle.partitions", "8")
-    conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try {
-      // 9 undirected edges are 18 endpoints, so the total fits a bound
-      // of 18; over 8 partitions the share is 2 endpoints, and some
-      // partition holds at least 2 edges (4 endpoints)
-      val pairs = plantedPairs
-      val (skewed, rounds) =
-        Dedup.connectedComponentsWithIters(pairs, "id_a", "id_b", 50, 18L)
-      assert(rounds >= 1, "a partition over its share stayed on the driver")
-      val (driver, driverRounds) =
-        Dedup.connectedComponentsWithIters(pairs, "id_a", "id_b")
-      assert(driverRounds == 0)
-      assert(skewed.as[(Long, Long)].collect().sorted.toSeq ==
-        driver.as[(Long, Long)].collect().sorted.toSeq)
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
-    }
   }
 }

@@ -16,6 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * build.sbt pins it), so `Verify.dump`'s per-query
   * `Caches.releaseAll` can never unpersist another in-flight suite's
   * tracked cache.
+  *
+  * A second pass checks both branches of every measured-size gate
+  * ([[graft.core.Gate]]): the whole registry runs once at default
+  * settings, and the queries whose run reached a gate run again with
+  * every gate forced to its distributed branch.
   */
 class OracleParitySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -64,6 +69,16 @@ class OracleParitySpec extends AnyFunSuite {
     }
   }
 
+  private def assertOracle(out: String): Unit = {
+    import scala.sys.process._
+    val log = new StringBuilder
+    val code = Process(Seq("python3", "tools/check.py", out, sfDir))
+      .!(ProcessLogger(l => log.append(l).append('\n'),
+         l => log.append(l).append('\n')))
+    assert(code == 0, s"oracle parity gate failed:\n$log")
+    assert(log.toString.contains("ALL OK"), log.toString)
+  }
+
   test("DuckDB oracle parity holds for the highest-churn queries") {
     assume(oracleEnabled,
       "python3+duckdb or test data unavailable (or SPARK_GRAFT_ORACLE=0): " +
@@ -71,13 +86,51 @@ class OracleParitySpec extends AnyFunSuite {
     TestSpark.withTempDir("graft_oracle_gate") { d =>
       val out = d.toString
       Verify.dump(spark, sfDir, out, Some(churn))
-      import scala.sys.process._
-      val log = new StringBuilder
-      val code = Process(Seq("python3", "tools/check.py", out, sfDir))
-        .!(ProcessLogger(l => log.append(l).append('\n'),
-           l => log.append(l).append('\n')))
-      assert(code == 0, s"oracle parity gate failed:\n$log")
-      assert(log.toString.contains("ALL OK"), log.toString)
+      assertOracle(out)
+    }
+  }
+
+  test("both branches of every measured-size gate hold the oracle") {
+    assume(oracleEnabled,
+      "python3+duckdb or test data unavailable (or SPARK_GRAFT_ORACLE=0): " +
+        "skipping parity gate")
+    import graft.core.Gate
+    val gates = Set(Gate.KMeansValues, Gate.CcEdgeEnds, Gate.LshVerifyPairs,
+      Gate.TextRankVocab, Gate.SpanDeltaRows)
+    TestSpark.withTempDir("graft_gate_branches") { d =>
+      val (local, forced) = (s"$d/local", s"$d/forced")
+      /** Dumps each of `names` on its own under `out`, with its gate
+        * decisions; keeps the dumps of `keep` and their oracle SQL. */
+      def pass(out: String, force: Boolean, names: Seq[String])
+              (keep: Seq[Gate.Decision] => Boolean): Map[String, Seq[Gate.Decision]] = {
+        val logs = names.map { n =>
+          val (_, log) = Gate.logged(force)(Verify.dump(spark, sfDir, out, Some(Set(n))))
+          if (!keep(log)) graft.core.Scratch.deleteTree(java.nio.file.Paths.get(out, n))
+          n -> log
+        }.toMap.filter { case (_, log) => keep(log) }
+        Verify.writeOracleSql(out,
+          SparkEntry.oracleSql.filter { case (k, _) => logs.contains(k) })
+        logs
+      }
+      // the default pass runs the whole registry: its gate log names
+      // the queries that reach a gate
+      val below = pass(local, force = false,
+        graft.core.Harness.select(None).map(_._1))(_.nonEmpty)
+      val above = pass(forced, force = true, below.keys.toSeq.sorted)(_ => true)
+      for (n <- below.keys.toSeq.sorted)
+        println(s"[gates] $n default ${below(n).mkString(" ")} forced ${above(n).mkString(" ")}")
+      assert(below.contains("q_stream_curate"), below.keys)
+      assert(below.values.flatten.forall(_.local), below)
+      assert(below.values.flatten.map(_.gate).toSet == gates, below)
+      assert(above.values.forall(log => log.nonEmpty && log.forall(!_.local)), above)
+      assert(above.values.flatten.map(_.gate).toSet == gates, above)
+      assertOracle(local)
+      assertOracle(forced)
+      // a rows-only query gives its default-run rows on either branch
+      for (n <- below.keys if !SparkEntry.oracleSql.contains(n)) {
+        def rows(out: String) = spark.read.parquet(s"$out/$n").collect().map(_.toString).sorted.toSeq
+        assert(rows(forced) == rows(local), s"$n: forced rows differ from the default run's")
+      }
     }
   }
 }
