@@ -19,10 +19,11 @@ import org.apache.spark.sql.functions._
   * Reference provenance: `KMeans(n_clusters, random_state=0)` fit on
   * the full embedding matrix (`main.py:316–322,353`) — a driver-side
   * sklearn call that materializes every vector in memory. Here that
-  * happens only below a measured-size gate (at most 2^22 vector values
-  * on the driver, and rows ≥ dim): there MLlib's k-means|| init runs
-  * distributed and Lloyd's rounds run on the driver with MLlib's own
-  * code, bit-identical to MLlib and with no Spark job per round. Above
+  * happens only below a measured-size gate
+  * ([[graft.core.Gate.KMeansValues]], and rows ≥ dim): there MLlib's
+  * k-means|| init runs distributed and Lloyd's rounds run on the
+  * driver with MLlib's own code, bit-identical to MLlib and with no
+  * Spark job per round. Above
   * the gate the vectors stay distributed: MLlib's KMeans is the
   * driver-orchestrated iterative-job pattern (one pass per iteration,
   * centers broadcast), which is exactly what survives 100 TB. See

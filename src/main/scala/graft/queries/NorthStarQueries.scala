@@ -1771,8 +1771,8 @@ object NorthStarQueries extends QueryModule {
     * Scale posture: each count is a metadata-sized aggregate over a
     * stage that is already scale-shaped (the DAG's own operators):
     * the band pass builds the cached reps and keepers once, the reps
-    * and keeper counts then scan those caches, and the raw count is a
-    * parquet-footer aggregate — no stage is re-run. */
+    * and keeper counts then scan those caches, and the raw count scans
+    * the documents table — no stage of the chain is re-run. */
   private def qCurateFunnel(implicit s: SparkSession, dir: String): DataFrame = {
     val reps = graft.core.Caches.track(Dedup.exactDedup(
       docs.select(col("doc_id"), col("text"), col("lang")), "doc_id", Seq("text")))

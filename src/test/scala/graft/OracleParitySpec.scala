@@ -117,8 +117,10 @@ class OracleParitySpec extends AnyFunSuite {
       val below = pass(local, force = false,
         graft.core.Harness.select(None).map(_._1))(_.nonEmpty)
       val above = pass(forced, force = true, below.keys.toSeq.sorted)(_ => true)
+      def show(log: Seq[Gate.Decision]) =
+        log.map(d => s"${d.gate.name}:${if (d.local) "local" else "distributed"}").mkString(" ")
       for (n <- below.keys.toSeq.sorted)
-        println(s"[gates] $n default ${below(n).mkString(" ")} forced ${above(n).mkString(" ")}")
+        println(s"[gates] $n default ${show(below(n))} forced ${show(above(n))}")
       assert(below.contains("q_stream_curate"), below.keys)
       assert(below.values.flatten.forall(_.local), below)
       assert(below.values.flatten.map(_.gate).toSet == gates, below)
