@@ -267,7 +267,7 @@ object ScaleSmoke {
         val chain = spark.range(0, 4L * n)
           .selectExpr("id AS id_a", "id + 1 AS id_b")
         // forced past CC's driver gate, so the rounds are measured
-        val ((labels, iters), _) = graft.core.Gate.logged(force = true)(
+        val ((labels, iters), _) = graft.core.Gate.logged()(
           graft.operators.Dedup.connectedComponentsWithIters(chain, "id_a", "id_b"))
         println(f"""{"scale_smoke":"cc_chain_iters","mult":$n,"iters":$iters}""")
         labels.count()

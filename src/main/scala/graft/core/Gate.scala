@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions.broadcast
 /** A measured-size decision between a driver-side (local) branch and a
   * distributed one. A gate either takes a size its caller has already
   * measured ([[maybeBroadcast]]) or measures and collects in one
-  * [[LocalTier]] job ([[collect]], [[collectLongs]]); both branches of
-  * every gate return the same rows. */
+  * [[LocalTier]] job, or none for a local relation ([[collect]],
+  * [[collectLongs]], [[collectRows]]); both branches of every gate
+  * return the same rows. */
 final case class Gate private (name: String, bound: Long) {
 
   /** `broadcast` (the local branch) when a measured `size` is within
@@ -27,11 +28,16 @@ final case class Gate private (name: String, bound: Long) {
   def collect[T: ClassTag](rdd: RDD[T])(values: T => Long): Option[Array[Array[T]]] =
     Gate.decide(this, LocalTier.collectBounded(rdd, bound)(values))
 
-  /** [[LocalTier.collectLongs]] at this gate's bound, where each unit
-    * the bound counts is `width` longs. */
+  /** [[LocalTier.collectRows]] of longs at this gate's bound, where
+    * each unit the bound counts is `width` longs. */
   def collectLongs(df: DataFrame, width: Int)
                   (longs: InternalRow => Iterator[Long]): Option[Array[Long]] =
-    Gate.decide(this, LocalTier.collectLongs(df, width * bound)(longs))
+    Gate.decide(this, LocalTier.collectRows(df, width * bound)(longs)(_ => 1L))
+
+  /** [[LocalTier.collectRows]] at this gate's bound. */
+  def collectRows[T: ClassTag](df: DataFrame)(draw: InternalRow => Iterator[T])
+                              (values: T => Long): Option[Array[T]] =
+    Gate.decide(this, LocalTier.collectRows(df, bound)(draw)(values))
 }
 
 /** The engine's measured-size gates, each bound written once. */
@@ -40,19 +46,23 @@ object Gate {
     * (32 MB as doubles). */
   val KMeansValues = new Gate("kmeans_values", 1L << 22)
 
-  /** Connected components' edge ends (each undirected edge once, two
-    * longs) for the driver union-find. Driver memory at the bound, all
-    * primitive arrays: ≤ 32 MB collected, ≤ 32 MB sorted into distinct
-    * ids, 16 MB of int parents and ≤ 64 MB of (id, comp) slices
-    * shipped back — below the 200–400 MB HashedRelation a broadcast
-    * label join builds every round. */
+  /** Connected components' pair ends (two longs a pair, as the pairs
+    * come: duplicates and both directions included) for the driver
+    * union-find. Driver memory at the bound, all primitive arrays:
+    * ≤ 32 MB collected, ≤ 32 MB sorted into distinct ids, 16 MB of int
+    * parents and ≤ 64 MB of (id, comp) slices shipped back — below the
+    * 200–400 MB HashedRelation a broadcast label join builds every
+    * round. */
   val CcEdgeEnds = new Gate("cc_edge_ends", 4000000L)
 
-  /** LSH-verify candidate pairs held on the driver and broadcast into
-    * both shingle-set joins. The second join's build side carries one
-    * shingle array (~2 KB) per pair, so the bound is a few hundred MB
-    * hashed. */
+  /** LSH-verify candidate pairs held on the driver (two longs each),
+    * whose ids select the shingle sets [[LshVerifySets]] collects. */
   val LshVerifyPairs = new Gate("lsh_verify_pairs", 1L << 18)
+
+  /** Shingle-set elements of the LSH-verify pairs' ids, collected for
+    * the driver Jaccard: at ~20–60 B per shingle string, 100–250 MB at
+    * the bound. Reached only below [[LshVerifyPairs]]. */
+  val LshVerifySets = new Gate("lsh_verify_sets", 1L << 22)
 
   /** TextRank vocabulary whose ranks are broadcast into every round. A
     * (word, double) HashedRelation costs ~40–60 B/row plus the usual
@@ -65,26 +75,32 @@ object Gate {
     * frames are broadcast against the store. */
   val SpanDeltaRows = new Gate("span_delta_rows", 4000000L)
 
+  /** Every gate above. */
+  val All: Set[Gate] =
+    Set(KMeansValues, CcEdgeEnds, LshVerifyPairs, LshVerifySets, TextRankVocab, SpanDeltaRows)
+
   /** One decision: `local` is true when the gate took its driver-side
     * branch. */
   final case class Decision(gate: Gate, local: Boolean)
 
-  // the innermost open scope's (force, log); global, not thread-local,
-  // because a streaming query decides its gates on its micro-batch thread
-  @volatile private var scope: Option[(Boolean, ConcurrentLinkedQueue[Decision])] = None
+  // the innermost open scope's (forced gates, log); global, not
+  // thread-local, because a streaming query decides its gates on its
+  // micro-batch thread
+  @volatile private var scope: Option[(Set[Gate], ConcurrentLinkedQueue[Decision])] = None
 
   /** `local` (the local branch when `Some`), or `None` without running
-    * it when forced, recorded in the open scope. */
+    * it when `gate` is forced, recorded in the open scope. */
   private def decide[A](gate: Gate, local: => Option[A]): Option[A] = {
-    val got = if (scope.exists(_._1)) None else local
+    val got = if (scope.exists(_._1(gate))) None else local
     scope.foreach(_._2.add(Decision(gate, got.isDefined)))
     got
   }
 
-  /** Runs `body`, with every gate forced to its distributed branch when
-    * `force`, and returns the decisions the gates took inside it. Like
-    * [[Caches]], this assumes one query runs at a time. */
-  private[graft] def logged[A](force: Boolean)(body: => A): (A, Seq[Decision]) = {
+  /** Runs `body` with the gates in `force` forced to their distributed
+    * branch (none: only log), and returns the decisions the gates took
+    * inside it. Like [[Caches]], this assumes one query runs at a
+    * time. */
+  private[graft] def logged[A](force: Set[Gate] = All)(body: => A): (A, Seq[Decision]) = {
     val outer = scope
     val log = new ConcurrentLinkedQueue[Decision]()
     scope = Some((force, log))

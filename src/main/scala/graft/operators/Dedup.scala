@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims}
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,15 +16,17 @@ import graft.functions.TextFns
   *  - exact dedup is a grouped min keyed on (hash, content) — one
   *    shuffle, hash-led so the partitioner and sort touch 8 bytes
   *    first and content only breaks hash ties;
-  *  - MinHash signatures come from one explode + one grouped
-  *    aggregation; LSH banding turns all-pairs O(n²) into a bucket
-  *    join where only same-bucket candidates pair up;
+  *  - MinHash signatures come from one codegen'd per-row kernel over
+  *    each shingle set ([[setSignatures]]); LSH banding turns
+  *    all-pairs O(n²) into a bucket join where only same-bucket
+  *    candidates pair up;
   *  - shingle ids are seeded md5-h15 hashes ([[md5Wid]]) — a narrow
   *    per-row expression with NO vocabulary and NO global sort, and
   *    DuckDB replays it digit-for-digit ([[widSql]]), so the same ids
   *    serve the oracle gate and the 100 TB path;
-  *  - candidate verification (true Jaccard) joins shingle SETS back
-  *    only for candidate pairs — a vanishing fraction of n².
+  *  - candidate verification (true Jaccard) reads shingle SETS back
+  *    only for candidate pairs — a vanishing fraction of n² — on the
+  *    driver while they fit its gates.
   */
 object Dedup {
 
@@ -88,10 +92,12 @@ object Dedup {
 
   /** MinHash signature per document from shingle ids: k universal-hash
     * permutations h_i(x) = (a_i·x + b_i) mod P, one grouped min each.
-    * One explode + one aggregation — no per-permutation pass. */
-  val P: Long = 1000000007L
+    * One explode + one aggregation — no per-permutation pass. The
+    * reference composition of [[setSignatures]], which the engine's
+    * own near-dup paths use. */
+  val P: Long = graft.plans.MinHash.P
   def hashCoeffs(k: Int): Seq[(Long, Long)] =
-    (0 until k).map(i => (2L * i + 3L, 5L * i + 7L))
+    (0 until k).map(i => (graft.plans.MinHash.coeffA(i), graft.plans.MinHash.coeffB(i)))
 
   def minhashSignatures(docShingleIds: DataFrame, idCol: String,
                         widCol: String, k: Int): DataFrame = {
@@ -100,6 +106,20 @@ object Dedup {
     }
     docShingleIds.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
   }
+
+  /** (idCol, mh_0 … mh_{k-1}) straight from (idCol, `setCol`) shingle
+    * sets, one codegen'd call per row ([[graft.plans.MinHashSignature]]):
+    * the same rows as [[minhashSignatures]] over `explode(setCol)` →
+    * [[md5Wid]], with no explode and no per-id aggregate. `idCol` must
+    * be a key of `sets`: the grouped min merged the sets of a repeated
+    * id, this gives one signature per row. Rows whose set is null or
+    * empty are dropped, as explode drops them. */
+  def setSignatures(sets: DataFrame, idCol: String, setCol: String, k: Int): DataFrame =
+    // two projections: the k element reads must not inline the kernel
+    // k times (CollapseProject keeps a non-cheap alias read twice)
+    sets.where(size(col(setCol)) > 0)
+      .select(col(idCol), graft.plans.MinHashSignature(col(setCol), k, WidSeed).as("_sig"))
+      .select(col(idCol) +: (0 until k).map(i => col("_sig")(i).as(s"mh_$i")): _*)
 
   /** LSH banding: split the k-wide signature into bands of r rows;
     * docs sharing any (band, band-signature) bucket become candidate
@@ -191,48 +211,74 @@ object Dedup {
         graft.plans.StringArrayJaccard(col("_sa"), col("_sb")))
       .drop("_sa", "_sb")
 
-  /** [[jaccardForPairs]] with a SCALE-ADAPTIVE join strategy for the
-    * full-run LSH path: candidate pairs out of banded LSH are tiny
-    * relative to the corpus (bands only collide near-dups), but behind
-    * the native band-pairs node the planner has no size estimate and
-    * sort-merge-joins them against the corpus-sized shingle-set frame
-    * — re-shuffling the heavy array payload TWICE just to attach two
-    * arrays to each pair (guide §8: decide with small rows, move the
-    * heavy side as little as possible). While every partition holds at
-    * most its share of [[graft.core.Gate.LshVerifyPairs]], that gate's
-    * one job brings them to the driver as packed longs, and they come
-    * back as a local relation (exact size for the planner), BROADCAST
-    * into both joins: the sets frame is then only ever scanned, never
-    * shuffled. Every graft caller's pairs end in a `distinct`, a
-    * hash shuffle on the pair, so each partition holds about its share
-    * of the total and the share acts as the total's bound. Above the
-    * gate the pairs keep the shuffled shape over a checkpoint that
-    * reuses the gate job's shuffle output, which spills gracefully.
-    * Pairs must be exactly (id_a, id_b) longs; output is (id_a, id_b,
-    * jaccard) — the same rows [[jaccardForPairs]] yields (join strategy
-    * cannot change the multiset; DedupSpec asserts equality on both
-    * branches). */
+  /** [[jaccardForPairs]] with the verify on the driver while it fits:
+    * candidate pairs out of banded LSH are tiny relative to the corpus
+    * (bands only collide near-dups), and at that size each Spark job
+    * costs more than the Jaccards it would compute.
+    *  - While every partition holds at most its share of
+    *    [[graft.core.Gate.LshVerifyPairs]], that gate's one job brings
+    *    the pairs to the driver as packed longs. Every graft caller's
+    *    pairs end in a `distinct`, a hash shuffle on the pair, so each
+    *    partition holds about its share of the total and the share acts
+    *    as the total's bound.
+    *  - A second bounded job ([[graft.core.Gate.LshVerifySets]])
+    *    collects the shingle sets of only the pairs' ids, through an
+    *    id-set filter on `shingleSets` that reaches a parquet store's
+    *    scan (row-group and bucket pruning).
+    *  - The driver computes each Jaccard with
+    *    [[graft.plans.ArrayExprUtil.jaccard]], the function the
+    *    codegen'd [[graft.plans.StringArrayJaccard]] calls, so the
+    *    values are bitwise equal. The rows come back as a local
+    *    relation, which the optimizer folds any further filter or
+    *    projection into.
+    * Above either gate, the pairs take the shuffled joins of
+    * [[jaccardForPairs]] (over a checkpoint that reuses the pair gate
+    * job's shuffle output, or over the collected pairs), which spill
+    * gracefully. Pairs must be exactly (id_a, id_b) longs; output is
+    * (id_a, id_b, jaccard) — the same rows [[jaccardForPairs]] yields,
+    * one per pair and matching set row (so `idCol` should be a key of
+    * `shingleSets`; DedupSpec asserts equality on every branch). */
   def jaccardForPairsAdaptive(pairs: DataFrame, shingleSets: DataFrame,
                               idCol: String, setCol: String): DataFrame = {
+    import pairs.sparkSession.implicits._
+    def shuffled(p: DataFrame) =
+      jaccardForPairs(p, shingleSets, idCol, setCol)
+        .select(col("id_a"), col("id_b"), col("jaccard"))
     // id_a, id_b, id_a, id_b, … longs (a pair with a null id joins nothing)
     graft.core.Gate.LshVerifyPairs.collectLongs(pairs, 2)(r =>
       if (r.anyNull) Iterator.empty else Iterator(r.getLong(0), r.getLong(1))) match {
-      case None =>
-        jaccardForPairs(pairs.localCheckpoint(), shingleSets, idCol, setCol)
-          .select(col("id_a"), col("id_b"), col("jaccard"))
+      case None => shuffled(pairs.localCheckpoint())
       case Some(e) =>
-        import pairs.sparkSession.implicits._
-        val p = Seq.tabulate(e.length / 2)(i => (e(2 * i), e(2 * i + 1))).toDF("id_a", "id_b")
-        val withA = shingleSets
-          .join(broadcast(p), col(idCol) === col("id_a"))
-          .select(col("id_a"), col("id_b"), col(setCol).as("_sa"))
-        shingleSets
-          .join(broadcast(withA), col(idCol) === col("id_b"))
-          .select(col("id_a"), col("id_b"),
-            graft.plans.StringArrayJaccard(col("_sa"), col(setCol))
-              .as("jaccard"))
+        val local = Seq.tabulate(e.length / 2)(i => (e(2 * i), e(2 * i + 1)))
+        setsOfIds(shingleSets, idCol, setCol, e) match {
+          case None => shuffled(local.toDF("id_a", "id_b"))
+          case Some(setsOf) =>
+            local.flatMap { case (a, b) =>
+              for (sa <- setsOf.getOrElse(a, Nil); sb <- setsOf.getOrElse(b, Nil))
+                yield (a, b, Option.when(sa != null && sb != null)(
+                  graft.plans.ArrayExprUtil.jaccard(sa, sb)))
+            }.toDF("id_a", "id_b", "jaccard")
+        }
     }
   }
+
+  /** The `setCol` rows of `ids` in `shingleSets` by id (a null set
+    * stays null), collected by the [[graft.core.Gate.LshVerifySets]]
+    * gate's one job, or `None` above it. */
+  private def setsOfIds(shingleSets: DataFrame, idCol: String, setCol: String,
+                        ids: Array[Long]): Option[Map[Long, Seq[ArrayData]]] =
+    if (ids.isEmpty) Some(Map.empty)
+    else {
+      // InSet, not `isin`: under 11 values `isin` stays an In of
+      // literals, whose generated code changes with every id set
+      val ofIds = GraftShims.column(InSet(
+        GraftShims.expression(col(idCol).cast("long")), ids.iterator.map(Long.box).toSet))
+      graft.core.Gate.LshVerifySets.collectRows(
+          shingleSets.where(ofIds).select(col(idCol).cast("long"), col(setCol))) { r =>
+        Iterator.single(r.getLong(0) -> (if (r.isNullAt(1)) null else r.getArray(1).copy()))
+      }(s => math.max(1L, Option(s._2).fold(0)(_.numElements()).toLong))
+        .map(_.toSeq.groupMap(_._1)(_._2))
+    }
 
   /** The verify step every MinHash near-dup path ends in: candidate
     * (id_a, id_b) pairs whose true Jaccard over the `shset` sets
@@ -248,7 +294,8 @@ object Dedup {
   /** End-to-end scalable MinHash+LSH near-dup pairs (md5-h15 shingle
     * ids — no vocabulary): shingle → sign → band → candidate → verify
     * ≥ threshold. Oracle-reproducible end to end (DuckDB replays
-    * [[md5Wid]] via [[widSql]]). */
+    * [[md5Wid]] via [[widSql]]). `idCol` must be a key of `df`
+    * ([[setSignatures]]). */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
                    n: Int = 3, k: Int = 12, bands: Int = 4,
                    threshold: Double = 0.5, maxBucketSize: Int = 0): DataFrame = {
@@ -256,12 +303,10 @@ object Dedup {
     // signature — a different recall curve than the caller asked for
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
     // sets feeds both candidate generation and pair verification;
-    // cached so the shingling runs once (ids + 2 verification joins)
+    // cached so the shingling runs once (signatures + the verify)
     val sets = graft.core.Caches.track(df.select(col(idCol),
       TextFns.shinglesDistinct(col(textCol), n).as("shset")))
-    val ids = sets.select(col(idCol), explode(col("shset")).as("sh"))
-      .withColumn("wid", md5Wid(col("sh")))
-    val sigs = minhashSignatures(ids, idCol, "wid", k)
+    val sigs = setSignatures(sets, idCol, "shset", k)
     // candidate generation through the native unary band-pairs node
     // (one exchange of the banded table instead of the self-join's
     // two) — pair-set-identical to [[lshCandidatePairs]], spec- and
@@ -294,16 +339,18 @@ object Dedup {
     * (pair A–B plus B–C → one keeper for {A,B,C}), which is what a
     * corpus-dedup run actually keys its keep/drop decision on.
     *
-    * The pairs become a distinct two-direction edge list, and the one
-    * job of the [[graft.core.Gate.CcEdgeEnds]] gate over it picks a path:
+    * The one job of the [[graft.core.Gate.CcEdgeEnds]] gate over the
+    * pairs' ends picks a path (no job at all when `pairs` is a local
+    * relation, as the driver-side LSH verify returns):
     *  - while every partition holds at most its share of the gate's
-    *    edge ends (the common case, as only near-dup members appear):
+    *    pair ends (the common case, as only near-dup members appear):
     *    that job has collected them, and one union-find pass over the
-    *    sorted node ids resolves them on the driver. Rounds = 0.
+    *    sorted node ids resolves them on the driver. Union-find needs
+    *    neither one direction per edge nor distinct edges. Rounds = 0.
     *  - above the gate: shuffled smallest-id label propagation
-    *    ([[propagateLabels]]) over a checkpoint of the same edge list
-    *    (reusing the gate job's shuffle), never holding the graph on
-    *    one machine.
+    *    ([[propagateLabels]]) over a distinct two-direction edge list
+    *    built from a checkpoint of the same ends (reusing the gate
+    *    job's shuffles), never holding the graph on one machine.
     *
     * Returns (id, comp): one row per node that appears in `pairs`,
     * comp = smallest id reachable (the group keeper). A pair with a
@@ -317,20 +364,18 @@ object Dedup {
     * took to converge (0 when the driver path resolved it). */
   def connectedComponentsWithIters(pairs: DataFrame, idA: String, idB: String,
                                    maxIter: Int = 50): (DataFrame, Int) = {
-    val edges = edgeList(pairs, idA, idB)
-    // each undirected edge once: src, dst, src, dst, … longs
-    graft.core.Gate.CcEdgeEnds.collectLongs(edges, 1) { r =>
-      if (r.getLong(0) <= r.getLong(1)) Iterator(r.getLong(0), r.getLong(1))
-      else Iterator.empty
+    val ends = pairEnds(pairs, idA, idB)
+    // a, b, a, b, … longs (a pair with a null end is not an edge)
+    graft.core.Gate.CcEdgeEnds.collectLongs(ends, 1) { r =>
+      if (r.anyNull) Iterator.empty else Iterator(r.getLong(0), r.getLong(1))
     } match {
-      case Some(ends) => (componentsOnDriver(edges.sparkSession, ends), 0)
-      case None => propagateLabels(edges.localCheckpoint(), maxIter)
+      case Some(e) => (componentsOnDriver(pairs.sparkSession, e), 0)
+      case None => propagateLabels(edgeList(ends.localCheckpoint()).localCheckpoint(), maxIter)
     }
   }
 
-  /** (src, dst) longs, both directions of every pair, distinct
-    * (robustness to duplicate and reversed input pairs; one shuffle). */
-  private def edgeList(pairs: DataFrame, idA: String, idB: String): DataFrame = {
+  /** (src, dst) longs of the pairs, as they come. */
+  private def pairEnds(pairs: DataFrame, idA: String, idB: String): DataFrame = {
     // The smallest-id label algebra needs numeric ids; a string doc key
     // under cast("long") would become NULL silently and corrupt the
     // edge list. Fail at plan time instead (hash a string key to a
@@ -346,14 +391,18 @@ object Dedup {
           s"got ${pairs.schema(c).dataType.simpleString} — non-numeric ids would " +
           "silently become NULL under cast(long) and corrupt the edge list")
     }
-    val oneWay = pairs.where(col(idA).isNotNull && col(idB).isNotNull)
-    oneWay.select(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst"))
-      .union(oneWay
-        .select(col(idB).cast("long").as("src"), col(idA).cast("long").as("dst")))
-      .distinct()
+    pairs.select(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst"))
   }
 
-  /** Union-find over packed (src, dst) edge longs that fit the driver
+  /** Both directions of every (src, dst) end pair without a null,
+    * distinct (robustness to duplicate and reversed input pairs; one
+    * shuffle). */
+  private def edgeList(ends: DataFrame): DataFrame = {
+    val oneWay = ends.where(col("src").isNotNull && col("dst").isNotNull)
+    oneWay.union(oneWay.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+  }
+
+  /** Union-find over packed (a, b) pair longs that fit the driver
     * ([[graft.core.Gate.CcEdgeEnds]] sizes them). Node ids
     * are sorted, so a node's index orders like its id; unions keep the
     * smaller root, so every root is its component's smallest id. */
@@ -449,7 +498,7 @@ object Dedup {
         .agg(min(col("m")).as("comp"), max(col("_old")).as("_oldc"))
       if (iter == 0) graft.core.LoopPlans.dump("cc_round", next)
       val nextCk = next.localCheckpoint()
-      changed = nextCk.where(col("comp") =!= col("_oldc")).count()
+      changed = graft.core.LocalTier.rowCount(nextCk.where(col("comp") =!= col("_oldc")))
       labels = nextCk.select(col("id"), col("comp"))
       iter += 1
     }
@@ -485,14 +534,13 @@ object Dedup {
   /** End-to-end banded LSH signatures from raw text: the frame a
     * resumable dedup PERSISTS per corpus (one row per doc per band).
     * Store it bucketed by (band, bsig) — the daily delta probe then
-    * joins the corpus side shuffle-free. */
+    * joins the corpus side shuffle-free. `idCol` must be a key of `df`
+    * ([[setSignatures]]). */
   def bandedSignatures(df: DataFrame, idCol: String, textCol: String,
                        n: Int = 3, k: Int = 12, bands: Int = 4): DataFrame = {
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
-    val ids = shingleSets(df, idCol, textCol, n)
-      .select(col(idCol), explode(col("shset")).as("sh"))
-      .withColumn("wid", md5Wid(col("sh")))
-    bandExplode(minhashSignatures(ids, idCol, "wid", k), idCol, bands, k / bands)
+    bandExplode(setSignatures(shingleSets(df, idCol, textCol, n), idCol, "shset", k),
+      idCol, bands, k / bands)
   }
 
   /** INCREMENTAL near-dup — the daily-ingest shape at 100 TB: dedup a
@@ -517,20 +565,27 @@ object Dedup {
   def incrementalNearDupPairs(newBanded: DataFrame, corpusBanded: DataFrame,
                               allSets: DataFrame, idCol: String,
                               threshold: Double = 0.5): DataFrame =
-    deltaNearDupPairs(newBanded, allSets, idCol, threshold) { nb =>
-      broadcast(nb.alias("x"))
-        .join(corpusBanded.alias("y"), Seq("band", "bsig"))
-        .where(col(s"x.$idCol") =!= col(s"y.$idCol"))
-        .select(least(col(s"x.$idCol"), col(s"y.$idCol")).as("id_a"),
-          greatest(col(s"x.$idCol"), col(s"y.$idCol")).as("id_b"))
-    }
+    deltaNearDupPairs(newBanded, allSets, idCol, threshold)(
+      probeBanded(corpusBanded, _, idCol))
+
+  /** In-memory corpus bucket probe: candidate (id_a, id_b) pairs
+    * between a delta's banded signatures and the corpus', with the
+    * delta side broadcast, so the corpus is scanned, never shuffled
+    * (plan-asserted in DedupSpec). */
+  def probeBanded(corpusBanded: DataFrame, newBanded: DataFrame,
+                  idCol: String): DataFrame =
+    broadcast(newBanded.alias("x"))
+      .join(corpusBanded.alias("y"), Seq("band", "bsig"))
+      .where(col(s"x.$idCol") =!= col(s"y.$idCol"))
+      .select(least(col(s"x.$idCol"), col(s"y.$idCol")).as("id_a"),
+        greatest(col(s"x.$idCol"), col(s"y.$idCol")).as("id_b"))
 
   /** The body both incremental paths share: candidates = the corpus
     * `probe` of the delta's banded frame ∪ the delta's own bucket
     * pairs, distinct, then [[verifiedPairs]]. Candidates are
-    * delta-bounded (measured small), so the pair side broadcasts and
-    * the corpus-sized sets frame is scanned in place, never shuffled
-    * by id. */
+    * delta-bounded (measured small), so the verify runs on the driver
+    * and the corpus-sized sets frame is only filtered to the
+    * candidates' ids, never shuffled by id. */
   private def deltaNearDupPairs(newBanded: DataFrame, allSets: DataFrame,
                                 idCol: String, threshold: Double)
                                (probe: DataFrame => DataFrame): DataFrame = {

@@ -82,19 +82,11 @@ object Scorers {
     @transient private lazy val md =
       java.security.MessageDigest.getInstance("MD5")
     /** First 15 hex digits of the seeded md5 -> non-negative 60-bit
-      * long. Computed directly from the first 8 digest bytes (the
-      * big-endian 64-bit value >>> 4) — identical to parsing the hex
-      * prefix, without the string round trip (this is the per-token
-      * hot path of the IFD pipeline). */
-    private def h15(s: String): Long = {
-      val d = md.digest((seed.toString + ":" + s).getBytes("UTF-8"))
-      val be =
-        ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-        ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-        ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-        ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
-      be >>> 4
-    }
+      * long, from the digest bytes ([[graft.plans.MinHash.md5Prefix60]];
+      * this is the per-token hot path of the IFD pipeline). */
+    private def h15(s: String): Long =
+      graft.plans.MinHash.md5Prefix60(
+        md.digest((seed.toString + ":" + s).getBytes("UTF-8")))
     private def unit(x: Long): Double = x.toDouble / (1L << 60).toDouble
 
     override def ppl(text: String): Double =

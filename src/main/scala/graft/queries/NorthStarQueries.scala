@@ -91,8 +91,7 @@ object NorthStarQueries extends QueryModule {
     * cross-language ones (no blocking key). */
   private def qDedupMinhashLsh(implicit s: SparkSession, dir: String): DataFrame = {
     val sets  = shingleSets
-    val docw  = docWids(sets)
-    val sigs  = Dedup.minhashSignatures(docw, "doc_id", "wid", MhK)
+    val sigs  = Dedup.setSignatures(sets, "doc_id", "shset", MhK)
     val cands = Dedup.lshCandidatePairs(sigs, "doc_id", MhBands, MhK / MhBands)
     Dedup.verifiedPairs(cands, sets, "doc_id", 0.5)
       .orderBy(col("id_a"), col("id_b"))
@@ -1772,7 +1771,9 @@ object NorthStarQueries extends QueryModule {
     * stage that is already scale-shaped (the DAG's own operators):
     * the band pass builds the cached reps and keepers once, the reps
     * and keeper counts then scan those caches, and the raw count scans
-    * the documents table — no stage of the chain is re-run. */
+    * the documents table as stored (not [[Tables.documents]]' row
+    * repartition) — no stage of the chain is re-run, and each count is
+    * one job ([[graft.core.LocalTier.rowCount]]). */
   private def qCurateFunnel(implicit s: SparkSession, dir: String): DataFrame = {
     val reps = graft.core.Caches.track(Dedup.exactDedup(
       docs.select(col("doc_id"), col("text"), col("lang")), "doc_id", Seq("text")))
@@ -1782,10 +1783,11 @@ object NorthStarQueries extends QueryModule {
       TextFns.qualityScore(col("text")).as("quality")))
     // the band count materializes both cached frames, so the two
     // counts after it read the caches
-    val nBand = band.count()
-    val nDocs = docs.count()
-    val nReps = reps.count()
-    val nCur = curated.count()
+    import graft.core.LocalTier.rowCount
+    val nBand = rowCount(band)
+    val nDocs = rowCount(Tables.table(s, dir, "documents").select())
+    val nReps = rowCount(reps)
+    val nCur = rowCount(curated)
     import s.implicits._
     Seq("0_raw" -> nDocs, "1_exact_reps" -> nReps,
         "2_cluster_keepers" -> nCur, "3_quality_band" -> nBand)

@@ -199,8 +199,8 @@ class ClusteringSpec extends AnyFunSuite {
     val pts = blobs(400, 8, 4, parts = 4)
     def labels = try labelsOf(Clustering.kmeansLabels(pts, "embedding", 4, 0L))
       finally graft.core.Caches.releaseAll()
-    val (driver, below) = Gate.logged(force = false)(labels)
-    val (ml, above) = Gate.logged(force = true)(labels)
+    val (driver, below) = Gate.logged(force = Set.empty)(labels)
+    val (ml, above) = Gate.logged()(labels)
     assert(below == Seq(Gate.Decision(Gate.KMeansValues, local = true)))
     assert(above == Seq(Gate.Decision(Gate.KMeansValues, local = false)))
     assert(ml == driver)

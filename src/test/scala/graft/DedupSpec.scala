@@ -1,20 +1,24 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Gate
+import graft.core.{Gate, Tables}
 import graft.operators.Dedup
 
 class DedupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** `body` with every measured-size gate forced to its distributed
-    * branch, checking that `gate` alone decided inside it. */
+  /** `body` with `gate` forced to its distributed branch, checking
+    * that `gate` decided inside it and every other gate that decided
+    * took its local branch. */
   private def forced[A](gate: Gate)(body: => A): A = {
-    val (a, log) = Gate.logged(force = true)(body)
-    assert(log.nonEmpty && log.forall(_ == Gate.Decision(gate, local = false)), log)
+    val (a, log) = Gate.logged(Set(gate))(body)
+    assert(log.contains(Gate.Decision(gate, local = false)) &&
+      log.forall(d => d.local != (d.gate == gate)), log)
     a
   }
 
@@ -47,6 +51,73 @@ class DedupSpec extends AnyFunSuite {
     // only the representative (smallest id, 1) pairs with the near-dup;
     // the exact copies 5/9 never reach the LSH join
     assert(pairs == Set((1L, 2L)))
+  }
+
+  /** The reference signature composition the kernel replaced: explode
+    * each set, md5Wid per shingle, a k-way grouped min by id. */
+  private def explodedSignatures(sets: DataFrame, k: Int = 12) =
+    Dedup.minhashSignatures(sets.select(col("doc_id"), explode(col("shset")).as("sh"))
+      .withColumn("wid", Dedup.md5Wid(col("sh"))), "doc_id", "wid", k)
+
+  /** sf0.01's documents plus texts at the shingler's edges: null,
+    * empty, shorter than n words, unicode, repeated shingles. */
+  private def signatureCorpus =
+    Seq[(Long, String)]((-1L, null), (-2L, ""), (-3L, "two words"),
+        (-4L, "naïve café — 日本語 テキスト の 例 です ✓ ∑"),
+        (-5L, "a b c a b c a b c a b c"), (-6L, "   "))
+      .toDF("doc_id", "text")
+      .unionByName(Tables.documents(spark, TestSpark.CorrectnessSfDir).select("doc_id", "text"))
+
+  test("the MinHash kernel equals minhashSignatures over exploded md5Wid ids, bit for bit") {
+    val sets = Dedup.shingleSets(signatureCorpus, "doc_id", "text").persist()
+    try {
+      def rows(df: DataFrame) = df.collect()
+        .map(r => r.getLong(0) -> (1 to 12).map(r.getLong)).sortBy(_._1).toSeq
+      val kernel = rows(Dedup.setSignatures(sets, "doc_id", "shset", 12))
+      assert(kernel == rows(explodedSignatures(sets)))
+      // the null text has no signature, as explode gives it no row
+      assert(kernel.size == sets.count() - 1 && !kernel.exists(_._1 == -1L))
+      // interpreted eval runs the same loop as the generated code
+      import org.apache.spark.sql.catalyst.expressions.Literal
+      import org.apache.spark.sql.catalyst.util.ArrayData
+      import org.apache.spark.sql.types.{ArrayType, StringType}
+      val bySet = sets.where(col("shset").isNotNull).collect()
+        .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+      for ((id, sig) <- kernel) {
+        val set = ArrayData.toArrayData(bySet(id).map(
+          org.apache.spark.unsafe.types.UTF8String.fromString).toArray)
+        val eval = graft.plans.MinHashSignature(
+          Literal.create(set, ArrayType(StringType)), 12, Dedup.WidSeed).eval()
+        assert(eval.asInstanceOf[ArrayData].toLongArray().toSeq == sig, s"doc $id")
+      }
+      // the kernel runs once per row: one projection, not one per mh_i
+      val plan = Dedup.setSignatures(sets, "doc_id", "shset", 12)
+        .queryExecution.optimizedPlan.toString
+      assert("minhashsignature".r.findAllIn(plan.toLowerCase).length == 1, plan)
+    } finally sets.unpersist()
+  }
+
+  test("nearDupPairs and bandedSignatures give the rows of the exploded composition") {
+    val docs = signatureCorpus.where(col("doc_id").isNotNull)
+    val sets = Dedup.shingleSets(docs, "doc_id", "text").persist()
+    try {
+      val old = Dedup.jaccardForPairs(
+          Dedup.lshCandidatePairsNative(explodedSignatures(sets), "doc_id", 4, 3),
+          sets, "doc_id", "shset")
+        .where(col("jaccard") >= 0.5)
+        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+        .as[(Long, Long, Double)].collect().sorted.toSeq
+      val got = Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.5)
+        .as[(Long, Long, Double)].collect().sorted.toSeq
+      assert(old.nonEmpty && got == old)
+      val oldBanded = Dedup.bandExplode(explodedSignatures(sets), "doc_id", 4, 3)
+        .as[(Long, Int, String)].collect().sorted.toSeq
+      assert(Dedup.bandedSignatures(docs, "doc_id", "text")
+        .as[(Long, Int, String)].collect().sorted.toSeq == oldBanded)
+    } finally {
+      sets.unpersist()
+      graft.core.Caches.releaseAll()
+    }
   }
 
   test("lsh bucket cap bounds an adversarial mega-bucket, is a no-op otherwise") {
@@ -245,10 +316,19 @@ class DedupSpec extends AnyFunSuite {
     assert(a == b, s"incremental $a != restricted-full $b")
     assert(a.exists { case (x, y, _) => x < 10L && y >= 10L }, "no cross pair found")
     assert(a.contains((20L, 30L, a.find(p => p._1 == 20L).get._3)), "no internal pair")
-    // the store probe must broadcast the DELTA side — the corpus store
-    // is scanned, never shuffled (no Exchange feeding its join side)
-    val plan = incr.queryExecution.executedPlan.toString
+    // the candidates are verified on the driver: the result is a
+    // local relation
+    assert(incr.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      incr.queryExecution.optimizedPlan)
+    // the probe must broadcast the DELTA side — the corpus is
+    // scanned, never shuffled (no Exchange feeding its join side)
+    val probe = Dedup.probeBanded(Dedup.bandedSignatures(corpus, "doc_id", "text"),
+      Dedup.bandedSignatures(delta, "doc_id", "text"), "doc_id")
+    probe.collect()
+    val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(800))
+    // and per-row signatures put no hash shuffle on either side
+    assert(!plan.contains("Exchange hashpartitioning"), plan.take(1500))
     graft.core.Caches.releaseAll()
   }
 
@@ -524,21 +604,37 @@ class DedupSpec extends AnyFunSuite {
       (3L, "completely different content about large scale data systems"),
       (4L, "the quick brown fox jumps over the lazy dog this morning")
     ).toDF("doc_id", "text")
-    val sets = Dedup.shingleSets(docs, "doc_id", "text")
+    // the sets behind an RDD, so the set gate runs a job over them
+    val sets = distributed(Dedup.shingleSets(docs, "doc_id", "text"))
     val cands = Seq((1L, 2L), (1L, 4L), (2L, 4L), (1L, 3L)).toDF("id_a", "id_b")
-    val adaptive = Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    val sc = spark.sparkContext
+    val (stages, shuffled) = (new java.util.concurrent.atomic.AtomicInteger,
+      new java.util.concurrent.atomic.AtomicLong)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        shuffled.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
+    }
+    sc.addSparkListener(listener)
+    val adaptive = try {
+      val built = Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")
+      org.apache.spark.sql.GraftShims.drainListenerBus(sc)
+      built
+    } finally sc.removeSparkListener(listener)
     val got = adaptive.orderBy("id_a", "id_b").collect().toSeq
     val want = Dedup.jaccardForPairs(cands, sets, "doc_id", "shset")
       .select(col("id_a"), col("id_b"), col("jaccard"))
       .orderBy("id_a", "id_b").collect().toSeq
     assert(got == want)
-    // the measured-small branch broadcasts the PAIR side twice and the
-    // corpus-sized sets frame is only scanned, never hash-shuffled
-    val plan = adaptive.queryExecution.executedPlan.toString
-    assert("BroadcastHashJoin".r.findAllIn(plan).length >= 2,
-      s"adaptive verification did not broadcast the pair side:\n${plan.take(1500)}")
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"the sets frame was hash-shuffled for verification:\n${plan.take(1500)}")
+    // the measured-small branch computes the Jaccards on the driver:
+    // its rows are a local relation, and the corpus-sized sets frame is
+    // only scanned by the set gate's job, never shuffled
+    assert(adaptive.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      adaptive.queryExecution.optimizedPlan)
+    assert(stages.get >= 1 && shuffled.get == 0,
+      s"the set gate ran ${stages.get} stages writing ${shuffled.get} shuffle bytes")
   }
 
   test("connectedComponents: message-union rounds resolve a planted path + star exactly") {
@@ -592,32 +688,26 @@ class DedupSpec extends AnyFunSuite {
     assert(self == Map(7L -> 7L, 8L -> 8L, 9L -> 8L))
   }
 
-  test("connectedComponents: a small graph resolves in at most 3 Spark jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val pairs = plantedPairs
-    val marker = "cc-job-count-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val counting = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val sawMarker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker)) {
-          counting.set(false)
-          sawMarker.countDown()
-        } else if (counting.get) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      Dedup.connectedComponents(pairs, "id_a", "id_b")
-      // the listener bus is asynchronous but ordered: once the marker
-      // job's start arrives, every job CC started has been counted
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(sawMarker.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get >= 1 && jobs.get <= 3,
-      s"CC over the 12-node planted graph ran ${jobs.get} Spark jobs (want ≤ 3)")
+  /** Spark jobs `build` and then `act` on its frame start. */
+  private def jobs(build: => DataFrame)
+                  (act: DataFrame => Unit = _ => ()): Int =
+    graft.core.Harness.run(spark, TestSpark.SfDir, (_, _) => build)(act)
+      .fold(e => throw e, _.jobs)
+
+  /** `df`'s rows behind an RDD: not a local relation, so a gate over
+    * it runs a job. */
+  private def distributed(df: DataFrame) =
+    spark.createDataFrame(df.rdd, df.schema)
+
+  test("connectedComponents: 0 Spark jobs on a local frame, at most 1 otherwise") {
+    val local = plantedPairs
+    assert(jobs(Dedup.connectedComponents(local, "id_a", "id_b"))() == 0)
+    assert(jobs(Dedup.connectedComponents(distributed(local), "id_a", "id_b"))() <= 1)
+    // and the 0-job driver path gives the forced loop's rows
+    val got = Dedup.connectedComponents(local, "id_a", "id_b").as[(Long, Long)].collect().sorted
+    val want = forced(Gate.CcEdgeEnds)(Dedup.connectedComponents(local, "id_a", "id_b"))
+      .as[(Long, Long)].collect().sorted
+    assert(got.toSeq == want.toSeq)
   }
 
   /** The LSH-verify fixture: four docs, three near-dups of each other,
@@ -635,23 +725,37 @@ class DedupSpec extends AnyFunSuite {
 
   test("jaccardForPairsAdaptive returns identical rows above and below its gate") {
     val (cands, sets) = verifyInputs
-    def rows = Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")
-      .as[(Long, Long, Double)].collect().sorted.toSeq
-    val below = rows
-    val above = forced(Gate.LshVerifyPairs)(rows)
-    assert(below.size == 4 && below == above, s"below $below != above $above")
+    // besides the fixture: a repeated pair, an id with no set row, a
+    // null set (null text) and a null pair end
+    val extra = Seq((1L, 2L), (1L, 99L), (2L, 5L)).toDF("id_a", "id_b")
+      .union(Seq[(Option[Long], Option[Long])]((Some(1L), None)).toDF("id_a", "id_b"))
+    val setsPlus = sets.union(Seq((5L, null: Seq[String])).toDF("doc_id", "shset"))
+    for ((name, p, s) <- Seq(("fixture", cands, sets),
+                             ("edge cases", cands.union(extra), setsPlus))) {
+      def rows = Dedup.jaccardForPairsAdaptive(p, s, "doc_id", "shset")
+        .as[(Long, Long, Option[Double])].collect().sorted.toSeq
+      val driver = rows
+      val shuffledPairs = forced(Gate.LshVerifyPairs)(rows)
+      val shuffledSets = forced(Gate.LshVerifySets)(rows)
+      val want = Dedup.jaccardForPairs(p, s, "doc_id", "shset")
+        .select("id_a", "id_b", "jaccard")
+        .as[(Long, Long, Option[Double])].collect().sorted.toSeq
+      assert(driver == want && shuffledPairs == want && shuffledSets == want,
+        s"$name: driver $driver, pairs forced $shuffledPairs, sets forced " +
+          s"$shuffledSets, jaccardForPairs $want")
+    }
   }
 
-  test("below their gates, CC and the LSH verify run one job for gate plus collect") {
-    def jobs(build: => org.apache.spark.sql.DataFrame): Int =
-      graft.core.Harness.run(spark, TestSpark.SfDir, (_, _) => build)(_ => ())
-        .fold(e => throw e, _.jobs)
-    // CC: one map-stage job for the edge list's distinct shuffle, then
-    // the LocalTier job; the union-find and its result cost no job
-    assert(jobs(Dedup.connectedComponents(plantedPairs, "id_a", "id_b")) == 2)
-    // the verify's local pairs need no shuffle: the LocalTier job only
+  test("below their gates, CC runs one job and the LSH verify two, its action included") {
+    // CC: the LocalTier job over the pair ends, with no edge-list
+    // shuffle; the union-find and its result cost no job
+    assert(jobs(Dedup.connectedComponents(distributed(plantedPairs), "id_a", "id_b"))() == 1)
+    // the verify: the pair gate's job and the set gate's job; the
+    // Jaccards are a local relation, so collecting them is no job
     val (cands, sets) = verifyInputs
-    assert(jobs(Dedup.jaccardForPairsAdaptive(cands, sets, "doc_id", "shset")) == 1)
+    val verify = jobs(Dedup.verifiedPairs(distributed(cands), distributed(sets),
+      "doc_id", 0.5))(_.collect())
+    assert(verify <= 2, s"the verify ran $verify jobs")
   }
 
   test("a second below-gate LSH verify over cached candidates compiles no classes") {

@@ -20,7 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * A second pass checks both branches of every measured-size gate
   * ([[graft.core.Gate]]): the whole registry runs once at default
   * settings, and the queries whose run reached a gate run again with
-  * every gate forced to its distributed branch.
+  * every gate forced to its distributed branch. The LSH verify's set
+  * gate sits behind its pair gate's local branch, so the queries that
+  * reached it run a third time with only it forced.
   */
 class OracleParitySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -96,12 +98,12 @@ class OracleParitySpec extends AnyFunSuite {
         "skipping parity gate")
     import graft.core.Gate
     val gates = Set(Gate.KMeansValues, Gate.CcEdgeEnds, Gate.LshVerifyPairs,
-      Gate.TextRankVocab, Gate.SpanDeltaRows)
+      Gate.LshVerifySets, Gate.TextRankVocab, Gate.SpanDeltaRows)
     TestSpark.withTempDir("graft_gate_branches") { d =>
-      val (local, forced) = (s"$d/local", s"$d/forced")
+      val (local, forced, setsForced) = (s"$d/local", s"$d/forced", s"$d/sets_forced")
       /** Dumps each of `names` on its own under `out`, with its gate
         * decisions; keeps the dumps of `keep` and their oracle SQL. */
-      def pass(out: String, force: Boolean, names: Seq[String])
+      def pass(out: String, force: Set[Gate], names: Seq[String])
               (keep: Seq[Gate.Decision] => Boolean): Map[String, Seq[Gate.Decision]] = {
         val logs = names.map { n =>
           val (_, log) = Gate.logged(force)(Verify.dump(spark, sfDir, out, Some(Set(n))))
@@ -114,24 +116,35 @@ class OracleParitySpec extends AnyFunSuite {
       }
       // the default pass runs the whole registry: its gate log names
       // the queries that reach a gate
-      val below = pass(local, force = false,
+      val below = pass(local, force = Set.empty,
         graft.core.Harness.select(None).map(_._1))(_.nonEmpty)
-      val above = pass(forced, force = true, below.keys.toSeq.sorted)(_ => true)
+      val above = pass(forced, force = gates, below.keys.toSeq.sorted)(_ => true)
+      val setsAbove = pass(setsForced, force = Set(Gate.LshVerifySets),
+        below.filter(_._2.exists(_.gate == Gate.LshVerifySets)).keys.toSeq.sorted)(_ => true)
       def show(log: Seq[Gate.Decision]) =
         log.map(d => s"${d.gate.name}:${if (d.local) "local" else "distributed"}").mkString(" ")
       for (n <- below.keys.toSeq.sorted)
-        println(s"[gates] $n default ${show(below(n))} forced ${show(above(n))}")
+        println(s"[gates] $n default ${show(below(n))} forced ${show(above(n))}" +
+          setsAbove.get(n).fold("")(log => s" sets-forced ${show(log)}"))
       assert(below.contains("q_stream_curate"), below.keys)
       assert(below.values.flatten.forall(_.local), below)
       assert(below.values.flatten.map(_.gate).toSet == gates, below)
       assert(above.values.forall(log => log.nonEmpty && log.forall(!_.local)), above)
-      assert(above.values.flatten.map(_.gate).toSet == gates, above)
+      // forcing every gate takes the pair gate's distributed branch, so
+      // the set gate is reached only when forced alone
+      assert(above.values.flatten.map(_.gate).toSet == gates - Gate.LshVerifySets, above)
+      assert(setsAbove.nonEmpty && setsAbove.values.forall(log =>
+        log.exists(_.gate == Gate.LshVerifySets) &&
+          log.forall(d => d.local != (d.gate == Gate.LshVerifySets))), setsAbove)
       assertOracle(local)
       assertOracle(forced)
+      assertOracle(setsForced)
       // a rows-only query gives its default-run rows on either branch
       for (n <- below.keys if !SparkEntry.oracleSql.contains(n)) {
         def rows(out: String) = spark.read.parquet(s"$out/$n").collect().map(_.toString).sorted.toSeq
         assert(rows(forced) == rows(local), s"$n: forced rows differ from the default run's")
+        if (setsAbove.contains(n))
+          assert(rows(setsForced) == rows(local), s"$n: sets-forced rows differ from the default run's")
       }
     }
   }

@@ -9,6 +9,9 @@ object TestSpark {
   lazy val spark: SparkSession = graft.core.Tables.localSession(4,
     "spark.sql.warehouse.dir" -> "/tmp/graft_warehouse")
   val SfDir = "/root/testdata/sf0.001"
+  /** The correctness fixture, beside [[SfDir]]. */
+  val CorrectnessSfDir: String =
+    java.nio.file.Paths.get(SfDir).resolveSibling("sf0.01").toString
 
   /** Run `f` on a fresh temp directory named `prefix…`, deleted after. */
   def withTempDir[A](prefix: String)(f: Path => A): A = {
